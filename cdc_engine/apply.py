@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdc_engine.config import CdcConfig
 from cdc_engine.dedup import lww_dedup
-from cdc_engine.lake import SnapLake
+from cdc_engine.lake import VALID_SQL, SnapLake, input_stats_from, observe_input
 from cdc_engine.normalize import apply_mapping
 from cdc_engine.salt import bucket_expr, salted_repartition
 from cdc_engine.timing import phase
@@ -126,9 +126,6 @@ def apply_epoch(
         expected_seq_range is not None
         and pid_bounds is not None
         and man.get("mode", "cow") == "mor"
-        # obs_in sits BELOW the write-path dedup; keybroadcast references
-        # its input twice and would double-count the input stats
-        and not (cfg.mor_write_dedup and cfg.dedup_strategy == "keybroadcast")
     ):
         return _apply_mor_fast(
             spark, lake, df, epoch_id, cfg, quarantine_dir,
@@ -151,23 +148,26 @@ class PreparedEpoch:
     the state-dependent merge/commit). The split exists so a COW replay
     can overlap epoch k+1's preparation with epoch k's merge (round-4
     verdict task 4): COW merges must stay strictly ordered (the target
-    read depends on the previous commit), but nothing in here does."""
+    read depends on the previous commit), but nothing in here does.
+    ``df`` is the persisted LWW winners; ``commit_prepared`` unpersists
+    it."""
 
-    __slots__ = (
-        "epoch_id", "df", "persisted", "input_stats", "touched",
-        "mor_lineage_stats", "cow_broadcast", "cow_merge",
-    )
+    __slots__ = ("epoch_id", "df", "input_stats", "touched")
 
-    def __init__(self, epoch_id, df, persisted, input_stats, touched,
-                 mor_lineage_stats, cow_broadcast=False, cow_merge="window"):
+    def __init__(self, epoch_id, df, input_stats, touched):
         self.epoch_id = epoch_id
         self.df = df
-        self.persisted = persisted
         self.input_stats = input_stats
         self.touched = touched
-        self.mor_lineage_stats = mor_lineage_stats
-        self.cow_broadcast = cow_broadcast
-        self.cow_merge = cow_merge
+
+
+def _footer_pids(df: DataFrame, pid_bounds: tuple[int, int]) -> list[int | None]:
+    """The pid list an input Observation unrolls: every source_partition
+    inside the WAL-footer bound (a conservative superset — absent pids
+    yield all-zero structs that are dropped)."""
+    if "source_partition" not in df.columns:
+        return [None]
+    return list(range(pid_bounds[0], pid_bounds[1] + 1))
 
 
 def prepare_epoch(
@@ -195,10 +195,10 @@ def prepare_epoch(
     (round 7, same lever _apply_mor_fast gave MoR a round earlier): the
     per-pid input stats, quarantine counts and touched-bucket set ride an
     Observation on the raw batch BELOW the valid-filter + LWW dedup, and
-    the cache-materializing winners aggregate is the only action — the
-    separate pre-dedup stats job (a full extra job barrier AND a second
-    WAL scan per epoch) disappears. Quarantined rows are persisted in one
-    extra job on that rare path only, still before the commit."""
+    the cache-materializing count is the only action — the separate
+    pre-dedup stats job (a full extra job barrier AND a second WAL scan
+    per epoch) disappears. Quarantined rows are persisted in one extra job
+    on that rare path only, still before the commit."""
     if man is None:
         man = lake.manifest()
     if entry is ...:
@@ -210,40 +210,24 @@ def prepare_epoch(
         and entry is None
         and cfg.quarantine_invalid
         and man.get("mode", "cow") == "cow"
-        # keybroadcast dedup references its input TWICE (narrow agg +
-        # semi-join) — an Observation below it would double-count; the
-        # one-job path requires a single-reference dedup strategy
-        and cfg.dedup_strategy != "keybroadcast"
     ):
         return _prepare_cow_one_job(
             spark, lake, df, epoch_id, cfg, quarantine_dir, man, pid_bounds
         )
 
     # P4: null-safe key guard — LWW is undefined for null url/warc_ts/seq
-    valid = F.col("url").isNotNull() & F.col("warc_ts").isNotNull() & F.col("seq").isNotNull()
+    valid = F.expr(VALID_SQL)
 
     # ONE pre-dedup aggregate job computes everything the commit needs from
     # the raw batch: per-source-partition input stats (ledger/lineage must
     # record the FULL consumed offset range — including quarantined rows —
     # S6/S7), emptiness, quarantine counts, and the set of touched lake
-    # buckets (saves merge a separate distinct-buckets job). In COW/eager
-    # mode it is deliberately NARROW (seq, source_partition, validity, url
-    # hash — lineage bytes come later off the cached deduped winners). In
-    # deferred-MoR mode the batch IS the delta, so the merge-side lineage
-    # aggregate collapses into THIS job (upsert/delete split + byte sum),
-    # removing one Spark job barrier per epoch; the batch is persisted
-    # FIRST so this aggregate doubles as the cache materialization the
-    # write job then reads.
+    # buckets (saves merge a separate distinct-buckets job). It is
+    # deliberately NARROW (seq, source_partition, validity, url hash —
+    # lineage comes later from the merge's write-job Observation).
     n_buckets = man["n_buckets"]
-    mode = man.get("mode", "cow")
-    mor_deferred = mode == "mor" and not cfg.mor_write_dedup
-    is_cow = mode == "cow"
-    persisted = None
-    if mor_deferred:
-        df = df.persist()
-        persisted = df
     sp = F.col("source_partition").cast("int") if "source_partition" in df.columns else F.lit(None).cast("int")
-    aggs = [
+    stats_query = df.groupBy(sp.alias("pid")).agg(
         F.count("*").alias("rows_seen"),
         F.sum(F.when(valid, 0).otherwise(1)).alias("rows_quarantined"),
         F.min("seq").alias("first_seq"),
@@ -251,22 +235,10 @@ def prepare_epoch(
         # bucket only for valid rows: xxhash64(NULL) is the seed (42),
         # so a null url would otherwise smuggle in a phantom bucket
         F.collect_set(F.when(valid, bucket_expr("url", n_buckets))).alias("buckets"),
-    ]
-    if mor_deferred:
-        blen = (
-            F.octet_length("html") if "html" in df.columns else F.lit(None).cast("int")
-        )
-        aggs += [
-            F.sum(F.when(valid & (F.col("op") != "delete"), 1).otherwise(0)).alias("rows_upserted"),
-            F.sum(F.when(valid & (F.col("op") == "delete"), 1).otherwise(0)).alias("rows_deleted"),
-            F.coalesce(F.sum(F.when(valid, blen)), F.lit(0)).cast("long").alias("bytes"),
-        ]
-    stats_query = df.groupBy(sp.alias("pid")).agg(*aggs)
+    )
     with phase("stats_agg"):
         stats_rows = stats_query.collect()
     if not stats_rows:
-        if persisted is not None:
-            persisted.unpersist()
         return None
     seqs_lo = [int(r["first_seq"]) for r in stats_rows if r["first_seq"] is not None]
     seqs_hi = [int(r["last_seq"]) for r in stats_rows if r["last_seq"] is not None]
@@ -274,8 +246,6 @@ def prepare_epoch(
         # streaming re-delivery: verify contents before honoring the skip
         if seqs_lo and seqs_hi:
             _verify_ledger_hit(entry, epoch_id, (min(seqs_lo), max(seqs_hi)), None)
-        if persisted is not None:
-            persisted.unpersist()
         return None
     input_stats = [
         {
@@ -284,7 +254,6 @@ def prepare_epoch(
             "rows_quarantined": int(r["rows_quarantined"]),
             "first_seq": None if r["first_seq"] is None else int(r["first_seq"]),
             "last_seq": None if r["last_seq"] is None else int(r["last_seq"]),
-            "bytes": None,  # filled by merge from the cached winners
         }
         for r in stats_rows
     ]
@@ -299,98 +268,33 @@ def prepare_epoch(
             )
         df = df.where(valid)
     if not touched:
-        if persisted is not None:
-            persisted.unpersist()
         return None  # every row was quarantined; nothing to commit
 
-    # W1: one row per url — MUST precede a COW merge (multiple source
-    # matches per target row would make the full-outer merge
-    # nondeterministic; SURVEY.md §4 inv. 1). A MoR delta tolerates
-    # multiplicity (scan-collapse is the LWW judge), so cfg.mor_write_dedup
-    # = False skips the dedup shuffle entirely on the write path.
-    mor_lineage_stats = None
-    if mor_deferred:
-        # lineage already aggregated in the combined stats job above
-        mor_lineage_stats = [
-            {
-                "pid": None if r["pid"] is None else int(r["pid"]),
-                "rows_upserted": int(r["rows_upserted"]),
-                "rows_deleted": int(r["rows_deleted"]),
-                "rows_late_ignored": None,  # deferred to scan-time collapse
-                "bytes": int(r["bytes"]),
-            }
-            for r in stats_rows
-        ]
-    else:
-        df = lww_dedup(
-            df,
-            key="url",
-            ts="warc_ts",
-            seq="seq",
-            strategy=cfg.dedup_strategy,
-            salt_buckets=cfg.salt_buckets,
-        )
+    # W1: one row per url — MUST precede a COW merge (several source rows
+    # per url would make the LWW pick depend on more than the batch;
+    # SURVEY.md §4 inv. 1). A MoR delta would tolerate multiplicity, but
+    # deduping first collapses an update-heavy epoch ~100x BEFORE the wide
+    # parquet write (measured 14.0 s eager vs 66.2 s writing the raw batch,
+    # 12M events / 8 pinned cores).
+    df = lww_dedup(df)
 
     # J6: optional explicit pre-merge shuffle on hash(url); the dedup above
     # already leaves the batch hash-partitioned on url, so default is off
     if cfg.repartition_urls:
         df = salted_repartition(df, "url", cfg.repartition_urls)
 
-    # cache the batch: in eager/COW mode the merge's write job and its
-    # lineage stats job both consume the deduped winners (otherwise the
-    # dedup shuffle re-runs per job); in deferred-MoR mode the raw batch
-    # was persisted before the combined stats job materialized it
-    if persisted is None:
-        df = df.persist()
-        persisted = df
-    cow_broadcast = False
+    # cache the winners: the merge's write job consumes them (otherwise the
+    # dedup shuffle re-runs per job)
+    df = df.persist()
     if materialize:
         # prefetch mode: pull the dedup shuffle (WAL read + LWW window +
-        # cache write) into the caller's overlap window with one
-        # aggregate action; the later merge's write job then reads
-        # straight from the cache. The aggregate (same single job a bare
-        # count() would be — a cache scan materializes whole partitions
-        # regardless of column pruning) doubles as the EXACT broadcast
-        # gate for COW: winner rows + winner payload bytes, measured, not
-        # estimated. Non-materializing callers (streaming apply_epoch,
-        # cow_prefetch=0) keep the join path — gating there would cost
-        # the extra job barrier this path gets for free.
-        blen = _payload_bytes_agg(df)
+        # cache write) into the caller's overlap window with one count —
+        # a cache scan materializes whole partitions regardless of column
+        # pruning; the later merge's write job then reads straight from
+        # the cache
         with phase("prefetch_materialize"):
-            mrow = df.agg(
-                F.count("*").alias("n"), blen.alias("b")
-            ).collect()[0]
-        if (
-            is_cow
-            and cfg.cow_merge == "join"  # broadcast is a join-path variant;
-            # the default window strategy already has its one-target-
-            # exchange property without the broadcast build
-            and cfg.cow_broadcast_rows > 0
-            and cfg.cow_broadcast_bytes > 0
-        ):
-            cow_broadcast = (
-                0 < int(mrow["n"]) <= cfg.cow_broadcast_rows
-                and int(mrow["b"]) <= cfg.cow_broadcast_bytes
-            )
-            if cow_broadcast and cfg.cow_broadcast_min_ratio > 0:
-                # broadcast only pays when the CARRIED target volume
-                # dwarfs the batch (measured: at target ~ batch the
-                # broadcast build is pure overhead — config.py note).
-                # Target bytes for the touched buckets come from manifest
-                # file stats — pure metadata, no job. Parquet bytes are
-                # zstd-compressed vs the batch's in-memory octet_length,
-                # so the ratio default is conservative.
-                carried_bytes = sum(
-                    int(f.get("bytes") or 0)
-                    for f in lake._files(man, set(touched))
-                )
-                cow_broadcast = (
-                    carried_bytes >= cfg.cow_broadcast_min_ratio * int(mrow["b"])
-                )
-    return PreparedEpoch(
-        epoch_id, df, persisted, input_stats, touched, mor_lineage_stats,
-        cow_broadcast, cfg.cow_merge,
-    )
+            df.count()
+    return PreparedEpoch(epoch_id, df, input_stats, touched)
 
 
 def _prepare_cow_one_job(
@@ -405,115 +309,33 @@ def _prepare_cow_one_job(
 ) -> PreparedEpoch | None:
     """ONE-JOB COW prepare (see prepare_epoch docstring): input stats /
     quarantine counts / touched buckets ride an Observation on the raw
-    batch; the winners-cache materialization aggregate is the only job.
-    The pid list unrolls from footer-stat bounds (conservative superset:
-    absent pids yield all-zero structs that are dropped), exactly the
-    _apply_mor_fast pattern."""
-    from pyspark.sql import Observation
-
-    n_buckets = man["n_buckets"]
-    has_sp = "source_partition" in df.columns
-    sp = "cast(source_partition as int)" if has_sp else "cast(null as int)"
-    pids: list[int | None] = (
-        list(range(pid_bounds[0], pid_bounds[1] + 1)) if has_sp else [None]
+    batch; the winners-cache materialization count is the only job."""
+    pids = _footer_pids(df, pid_bounds)
+    observed, obs = observe_input(
+        df, f"prep_e{epoch_id}", pids, n_buckets=man["n_buckets"]
     )
-    in_exprs = []
-    for p in pids:
-        m = f"({sp}) is null" if p is None else f"({sp}) = {int(p)}"
-        tag = "null" if p is None else str(p)
-        in_exprs.append(
-            F.expr(
-                "named_struct("
-                f"'seen', sum(case when ({m}) then 1 else 0 end), "
-                f"'q', sum(case when ({m}) and not ({_VALID_SQL}) then 1 else 0 end), "
-                f"'lo', min(case when ({m}) then seq end), "
-                f"'hi', max(case when ({m}) then seq end)"
-                f") as pid_{tag}"
-            )
-        )
-    in_exprs.append(
-        F.expr(
-            f"collect_set(case when ({_VALID_SQL}) "
-            f"then pmod(xxhash64(url), {n_buckets}) end) as _buckets"
-        )
-    )
-    in_exprs.append(F.expr("count(*) as _total"))
-    obs = Observation(f"prep_e{epoch_id}")
-    observed = df.observe(obs, *in_exprs)
-
-    winners = lww_dedup(
-        observed.where(F.expr(_VALID_SQL)),
-        key="url",
-        ts="warc_ts",
-        seq="seq",
-        strategy=cfg.dedup_strategy,
-        salt_buckets=cfg.salt_buckets,
-    )
+    winners = lww_dedup(observed.where(F.expr(VALID_SQL)))
     if cfg.repartition_urls:
         winners = salted_repartition(winners, "url", cfg.repartition_urls)
     winners = winners.persist()
-    blen = _payload_bytes_agg(winners)
     with phase("prepare_one_job"):
-        mrow = winners.agg(F.count("*").alias("n"), blen.alias("b")).collect()[0]
+        winners.count()
     vals = obs.get
-    if int(vals["_total"]) == 0:
+    input_stats = input_stats_from(vals, pids, epoch_id)
+    if input_stats is None:
         winners.unpersist()
         return None
-    per_pid = []
-    for p in pids:
-        tag = "null" if p is None else str(p)
-        st = vals[f"pid_{tag}"]
-        if int(st["seen"]) == 0:
-            continue  # footer-bound superset: pid absent this epoch
-        per_pid.append((p, st))
-    if sum(int(st["seen"]) for _p, st in per_pid) != int(vals["_total"]):
-        raise RuntimeError(
-            f"epoch {epoch_id}: source_partition values outside the "
-            f"footer-stat bound {pid_bounds} — WAL statistics are "
-            f"untrustworthy; rerun without the fast path"
-        )
-    input_stats = [
-        {
-            "partition_id": None if p is None else int(p),
-            "rows_in": int(st["seen"]) - int(st["q"]),
-            "rows_quarantined": int(st["q"]),
-            "first_seq": None if st["lo"] is None else int(st["lo"]),
-            "last_seq": None if st["hi"] is None else int(st["hi"]),
-            "bytes": None,  # filled by merge from the cached winners
-        }
-        for p, st in per_pid
-    ]
     touched = sorted(int(b) for b in (vals["_buckets"] or []))
-    if quarantine_dir is not None and any(int(st["q"]) for _p, st in per_pid):
+    if quarantine_dir is not None and any(s["rows_quarantined"] for s in input_stats):
         # rare path: persist quarantined rows in one extra job, before
         # the commit (same ordering as the stats-job path)
-        df.where(~F.expr(_VALID_SQL)).write.mode("append").parquet(
+        df.where(~F.expr(VALID_SQL)).write.mode("append").parquet(
             os.path.join(quarantine_dir, f"epoch={epoch_id}")
         )
     if not touched:
         winners.unpersist()
         return None  # every row was quarantined; nothing to commit
-    cow_broadcast = False
-    if (
-        cfg.cow_merge == "join"
-        and cfg.cow_broadcast_rows > 0
-        and cfg.cow_broadcast_bytes > 0
-    ):
-        cow_broadcast = (
-            0 < int(mrow["n"]) <= cfg.cow_broadcast_rows
-            and int(mrow["b"]) <= cfg.cow_broadcast_bytes
-        )
-        if cow_broadcast and cfg.cow_broadcast_min_ratio > 0:
-            carried_bytes = sum(
-                int(f.get("bytes") or 0) for f in lake._files(man, set(touched))
-            )
-            cow_broadcast = (
-                carried_bytes >= cfg.cow_broadcast_min_ratio * int(mrow["b"])
-            )
-    return PreparedEpoch(
-        epoch_id, winners, winners, input_stats, touched, None,
-        cow_broadcast, cfg.cow_merge,
-    )
+    return PreparedEpoch(epoch_id, winners, input_stats, touched)
 
 
 def commit_prepared(
@@ -527,40 +349,9 @@ def commit_prepared(
             return lake.merge(
                 spark, prep.df, prep.epoch_id, input_stats=prep.input_stats,
                 touched_buckets=prep.touched,
-                mor_lineage_stats=prep.mor_lineage_stats,
-                cow_broadcast=prep.cow_broadcast,
-                cow_merge=prep.cow_merge,
             )
     finally:
-        if prep.persisted is not None:
-            prep.persisted.unpersist()
-
-
-_VALID_SQL = "url is not null and warc_ts is not null and seq is not null"
-
-
-def _payload_bytes_agg(df: DataFrame):
-    """Broadcast-gate byte measurement: summed octet_length over EVERY
-    string/binary column (round-7 advice: the previous html-only sum fell
-    back to 0 for non-pages schemas, making the byte bound pass trivially
-    and resting the broadcast decision on row count alone). Used only for
-    the gate — lineage 'bytes' keeps its recorded html-payload meaning."""
-    from pyspark.sql import types as T
-
-    cols = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (T.StringType, T.BinaryType))
-    ]
-    if not cols:
-        # no measurable payload: report a conservatively LARGE size so the
-        # byte bound never passes on an unmeasurable schema
-        return F.lit(1 << 62).cast("long")
-    total = None
-    for c in cols:
-        term = F.coalesce(F.octet_length(F.col(c)), F.lit(0)).cast("long")
-        total = term if total is None else total + term
-    return F.coalesce(F.sum(total), F.lit(0)).cast("long")
+        prep.df.unpersist()
 
 
 def _apply_mor_fast(
@@ -574,90 +365,32 @@ def _apply_mor_fast(
     pid_bounds: tuple[int, int],
     man: dict,
 ) -> dict[str, Any] | None:
-    """MoR replay epoch as exactly ONE Spark job: the delta write carries
-    an Observation computing — per source partition, map-side — the input
-    stats (rows/quarantined/seq range), the lineage split (upserts/
-    deletes/bytes), and the touched-bucket set, so the pre-commit stats
-    job (one full job barrier + one extra WAL scan per epoch) disappears.
+    """MoR replay epoch as exactly ONE Spark job: an input Observation on
+    the raw batch computes — per source partition, map-side — the input
+    stats (rows/quarantined/seq range), and the merge's own lineage
+    Observation on the written winners adds the lineage split and the
+    touched-bucket set, so the pre-commit stats job (one full job barrier
+    + one extra WAL scan per epoch) disappears.
 
-    The pid list is unrolled from footer-stat bounds (a conservative
-    superset: absent pids yield all-zero structs the lineage builder
-    drops). Quarantined rows are filtered before the write; if the
-    Observation reports any, they are persisted in one extra job on that
-    rare path only, still BEFORE the commit."""
-    from pyspark.sql import Observation
-
-    n_buckets = man["n_buckets"]
-    has_sp = "source_partition" in df.columns
-    sp = "cast(source_partition as int)" if has_sp else "cast(null as int)"
-    blen = "octet_length(html)" if "html" in df.columns else "cast(null as int)"
-    pids: list[int | None] = (
-        list(range(pid_bounds[0], pid_bounds[1] + 1)) if has_sp else [None]
-    )
-
-    def _per_pid(body_fmt: str) -> list:
-        out = []
-        for p in pids:
-            m = f"({sp}) is null" if p is None else f"({sp}) = {int(p)}"
-            tag = "null" if p is None else str(p)
-            out.append(F.expr(body_fmt.format(m=m, tag=tag)))
-        return out
-
-    # obs_in sits on the RAW batch (pre-filter, pre-dedup): the consumed
-    # input range — rows seen, quarantine counts, full seq span per pid
-    in_exprs = _per_pid(
-        "named_struct("
-        "'seen', sum(case when ({m}) then 1 else 0 end), "
-        f"'q', sum(case when ({{m}}) and not ({_VALID_SQL}) then 1 else 0 end), "
-        "'lo', min(case when ({m}) then seq end), "
-        "'hi', max(case when ({m}) then seq end)"
-        ") as pid_{tag}"
-    )
-    in_exprs.append(F.expr("count(*) as _total"))
-    obs_in = Observation(f"fast_in_e{epoch_id}")
-    observed = df.observe(obs_in, *in_exprs)
-
-    filtered = observed.where(F.expr(_VALID_SQL))
-    if cfg.mor_write_dedup:
-        filtered = lww_dedup(
-            filtered,
-            key="url",
-            ts="warc_ts",
-            seq="seq",
-            strategy=cfg.dedup_strategy,
-            salt_buckets=cfg.salt_buckets,
-        )
-    # obs_out sits on the rows the delta WRITE consumes (post-filter,
-    # post-dedup in eager mode): the applied-lineage split + touched set —
-    # byte-identical semantics to the stats-job path, which also measures
-    # lineage off the written winners
-    out_exprs = _per_pid(
-        "named_struct("
-        "'up', sum(case when ({m}) and op != 'delete' then 1 else 0 end), "
-        "'del', sum(case when ({m}) and op = 'delete' then 1 else 0 end), "
-        f"'b', cast(coalesce(sum(case when ({{m}}) then {blen} end), 0) as bigint)"
-        ") as pid_{tag}"
-    )
-    out_exprs.append(
-        F.expr(
-            f"collect_set(pmod(xxhash64(url), {n_buckets})) as _touched"
-        )
-    )
-    obs_out = Observation(f"fast_out_e{epoch_id}")
-    filtered = filtered.observe(obs_out, *out_exprs)
+    Quarantined rows are filtered before the write; if the Observation
+    reports any, they are persisted in one extra job on that rare path
+    only, still BEFORE the commit."""
+    pids = _footer_pids(df, pid_bounds)
+    observed, obs_in = observe_input(df, f"fast_in_e{epoch_id}", pids)
+    winners = lww_dedup(observed.where(F.expr(VALID_SQL)))
 
     def quarantine_writer() -> None:
         if cfg.quarantine_invalid and quarantine_dir is not None:
-            df.where(~F.expr(_VALID_SQL)).write.mode("append").parquet(
+            df.where(~F.expr(VALID_SQL)).write.mode("append").parquet(
                 os.path.join(quarantine_dir, f"epoch={epoch_id}")
             )
 
     with phase("merge_total"):
         return lake.merge(
             spark,
-            filtered,
+            winners,
             epoch_id,
-            fast_obs=(obs_in, obs_out),
+            fast_obs=obs_in,
             fast_pids=pids,
             est_rows=expected_seq_range[1] - expected_seq_range[0],
             quarantine_writer=quarantine_writer,

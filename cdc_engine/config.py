@@ -3,16 +3,23 @@
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 
 @dataclass(frozen=True)
 class CdcConfig:
     """Tuning + semantics knobs for one ingest/replay pipeline.
 
-    All defaults are sized for the sandbox (local[32], sf<=0.1 fixtures);
-    on a real cluster scale ``n_buckets`` / ``shuffle_partitions`` /
-    ``salt_buckets`` with executor count (see BENCH/BASELINE.md).
+    Each storage mode has one apply path: every epoch is LWW-deduplicated
+    per url with a row_number window over (warc_ts, seq); a MoR epoch then
+    appends the winners as a delta, and a COW epoch rewrites its touched
+    buckets with a one-exchange union+window merge. All defaults are sized
+    for the sandbox (local[32], sf<=0.1 fixtures); on a real cluster scale
+    ``n_buckets`` with executor count (see BENCH/BASELINE.md).
     """
+
+    # the only LWW dedup strategy (dedup.lww_dedup); a constant, not a field
+    dedup_strategy: ClassVar[str] = "window"
 
     # deterministic epoch cutting for the bounded replay path: epoch k owns
     # seqs [k*events_per_epoch, (k+1)*events_per_epoch)  (SURVEY.md §3.2)
@@ -22,30 +29,6 @@ class CdcConfig:
     # so MERGE only rewrites touched buckets (Iceberg bucket-partition analog)
     n_buckets: int = 16
 
-    # LWW dedup strategy: "window" (sort-based; default — streams the wide
-    # payload through the sorter instead of holding it in per-group agg
-    # buffers, measured 5x faster at 32 cores) or "maxby" (hash-agg with
-    # map-side partial combine; wins only when the duplicate ratio is high
-    # enough that partial aggregation shrinks the shuffle)
-    dedup_strategy: str = "window"
-
-    # two-level salted aggregation for hot-key skew (0 disables the salt stage)
-    salt_buckets: int = 0
-
-    # merge-on-read write path: True (default) LWW-dedups the batch before
-    # writing the delta (one winner per url per epoch). False defers dedup
-    # entirely to scan-collapse/compaction and writes the epoch as-is with
-    # one shuffle. Final state is byte-identical either way
-    # (tests/test_mor_deferred.py); COW ignores this knob (its full-outer
-    # merge requires one source row per url).
-    #
-    # MEASURED (12M events / 6M epochs / 8 pinned cores): eager 14.0s,
-    # deferred 66.2s — on an update-heavy stream dedup collapses each epoch
-    # ~100x BEFORE the parquet write, so skipping it trades a cheap narrow
-    # shuffle for massive write amplification of the wide html payload.
-    # Defer only for near-unique-key (insert-heavy) streams where the
-    # collapse ratio is ~1; keep the default for CDC update streams.
-    mor_write_dedup: bool = True
     # MoR replay epoch pipelining width: deltas never read table state and
     # the optimistic commit retry already serializes manifest publication,
     # so adjacent epochs can overlap — one epoch's serial tail (commit,
@@ -62,19 +45,6 @@ class CdcConfig:
     # overlap, gated on that state-read barrier. 0 disables.
     cow_prefetch: int = 1
 
-    # COW apply strategy (round 7): "window" (default) = ONE-EXCHANGE
-    # union+window merge — target+batch rows shuffle exactly once, on the
-    # output bucket, and the LWW winner is picked by a row_number window
-    # whose clustering the bucket partitioning already satisfies. "join" =
-    # the round-6 full-outer sort-merge (the wide target crossed TWO
-    # exchanges per epoch: url-hash into the join, bucket-hash before the
-    # write), kept for A/B; the broadcast variant below applies only under
-    # "join" (union+window already has the broadcast plan's one-target-
-    # exchange property, without the broadcast build). State, ledger and
-    # lineage are byte-identical across all three
-    # (tests/test_cow_broadcast.py three-way identity).
-    cow_merge: str = "window"
-
     # explicit pre-merge repartition on pmod(xxhash64(url), P); 0 = let AQE decide
     repartition_urls: int = 0
 
@@ -90,28 +60,3 @@ class CdcConfig:
 
     # rewrite a bucket when it accumulates more than this many data files
     compact_after_files: int = 8
-
-    # COW broadcast apply: when the epoch's estimated LWW winners fit a
-    # broadcast (BOTH bounds below, estimated map-side in the combined
-    # stats job: approx distinct urls x mean row bytes), merge swaps the
-    # full-outer shuffle join for target LEFT JOIN broadcast(batch) +
-    # batch ANTI JOIN target(url-only). The wide target then never enters
-    # a join exchange — the only full-width shuffle left is the bucket
-    # repartition before the write — which is the common CDC shape at any
-    # scale (epoch << table: a 100 TB table absorbs a few-GB epoch with
-    # bucket-pruned map-side work instead of shuffling carried terabytes).
-    # Result rows are byte-identical to the join path
-    # (tests/test_cow_broadcast.py). 0 on either knob disables.
-    #
-    # MEASURED (12M events / 6M epochs / pinned 2 vs 8 cores, interleaved
-    # A/B): when target ~ batch (this bench: ~same distinct urls on both
-    # sides) broadcast LOSES — min-wall join 40.5/11.9 s vs broadcast
-    # 41.3/13.1 s — because there is no carried volume to keep out of the
-    # shuffle and the driver-side broadcast build is pure overhead. Hence
-    # the ratio gate below: broadcast only when the carried target bytes
-    # (manifest file stats, free) dwarf the measured batch bytes — the
-    # epoch << table regime the plan exists for. 0 disables the ratio
-    # condition (always broadcast when the size bounds pass).
-    cow_broadcast_rows: int = 4_000_000
-    cow_broadcast_bytes: int = 128 * 1024 * 1024
-    cow_broadcast_min_ratio: float = 4.0

@@ -1547,8 +1547,8 @@ def q_changes_feed(spark, sf):
     lake = SnapLake.create(
         tempfile.mkdtemp(prefix="cdf_lake_") + "/lake", PAGES_SCHEMA_V1, n_buckets=8
     )
-    lake.merge(spark, e0, epoch_id=0, collect_lineage=False)
-    lake.merge(spark, e1, epoch_id=1, collect_lineage=False)
+    lake.merge(spark, e0, epoch_id=0)
+    lake.merge(spark, e1, epoch_id=1)
     return lake.changes(spark, 1, 2).select(
         "url",
         "change_type",

@@ -4,44 +4,19 @@ Total order per key: (warc_ts, seq) — seq is a unique WAL offset, so ties
 are impossible and the survivor is deterministic under any input permutation
 (the byte-identical-replay cornerstone, BASELINE.json:6).
 
-Three strategies, identical results (tested):
-  - "keybroadcast": find the winning seq per key with a NARROW aggregate
-    (key, ts, seq only — 16-byte structs, map-side combine), broadcast the
-    winner-seq set, and left-semi filter the original rows on seq. The
-    WIDE payload never enters a shuffle at all: it streams through one
-    broadcast hash join — at the cost of reading the source twice (once
-    narrow, once wide). Measured even with "window" on the 12M-event
-    tmpfs bench (10.7s vs 11.1s @ 8 cores, identical state hash); the
-    intended regime is a real cluster where shuffle IO (disk write+read
-    both sides) costs more than a second columnar scan of pruned source
-    files. Valid whenever the per-batch distinct-key count fits a
-    broadcast (micro-batches almost always do); seq uniqueness makes the
-    semi-join provably one-row-per-key.
-  - "window" (default): row_number() over Window.partitionBy(key)
-    .orderBy(desc...). Shuffle on key + per-partition sort; the wide
-    html/text payload STREAMS through the UnsafeExternalSorter instead of
-    being copied into per-group aggregation buffers. Measured: scales
-    cleanly with cores (3.5s @8 -> 2.2s @32 on a 6M-row epoch) where the
-    hash-agg path anti-scales under memory pressure (4.8s -> 11.8s).
-  - "maxby": groupBy(key).agg(max_by(payload_struct, order_struct)).
-    Hash aggregate with map-side partial combine — worth it only when the
-    duplicate ratio is high enough that partial aggregation meaningfully
-    shrinks the shuffle (re-delivery storms, replay of overlapping
-    windows); for typical duplicate-light CDC batches the combine buys
-    nothing and the struct copies cost memory bandwidth.
-
-Optional two-level salted variant for hot keys (J6): pre-aggregate on
-(key, salt) then re-aggregate on key — bounds any single reducer's input
-at batch_size/salt_buckets per hot key.
+One strategy: row_number() over Window.partitionBy(key).orderBy(desc ts,
+desc seq). It shuffles on the key and sorts each partition, so the wide
+html/text payload STREAMS through the UnsafeExternalSorter instead of being
+copied into per-group aggregation buffers. Measured: it scales cleanly with
+cores (3.5s @8 -> 2.2s @32 on a 6M-row epoch) where a hash-aggregate
+(max_by) dedup anti-scaled under memory pressure (4.8s -> 11.8s). The input
+is referenced once, so an Observation placed below the dedup counts every
+input row exactly once (the apply fast paths rely on this).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-
-
-def _order_struct(ts: str, seq: str):
-    return F.struct(F.col(ts), F.col(seq))
 
 
 def lww_dedup(
@@ -50,38 +25,15 @@ def lww_dedup(
     ts: str = "warc_ts",
     seq: str = "seq",
     strategy: str = "window",
-    salt_buckets: int = 0,
 ) -> DataFrame:
-    """One row per ``key``: the event with max (ts, seq). Schema preserved."""
-    if strategy == "keybroadcast":
-        winners = (
-            df.groupBy(key)
-            .agg(F.max(F.struct(F.col(ts), F.col(seq))).alias("_w"))
-            .select(F.col(f"_w.{seq}").alias(seq))
-        )
-        return df.join(F.broadcast(winners), seq, "left_semi").select(*df.columns)
-    if strategy == "window":
-        w = Window.partitionBy(key).orderBy(F.col(ts).desc(), F.col(seq).desc())
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    if strategy != "maxby":
+    """One row per ``key``: the event with max (ts, seq). Schema preserved.
+
+    ``strategy`` accepts only "window" (the one implementation)."""
+    if strategy != "window":
         raise ValueError(f"unknown dedup strategy: {strategy}")
-
-    payload = [c for c in df.columns if c != key]
-    winner = F.max_by(F.struct(*payload), _order_struct(ts, seq)).alias("_w")
-
-    if salt_buckets and salt_buckets > 1:
-        # level 1: per (key, salt) — salt derived from seq so it is
-        # deterministic and spreads a hot key over salt_buckets reducers
-        salt = F.pmod(F.xxhash64(F.col(seq)), F.lit(salt_buckets)).alias("_salt")
-        l1 = df.select(key, salt.alias("_salt"), *payload).groupBy(key, "_salt").agg(winner)
-        # level 2: collapse salts; order key lives inside the struct
-        l2 = l1.groupBy(key).agg(
-            F.max_by(F.col("_w"), F.struct(F.col(f"_w.{ts}"), F.col(f"_w.{seq}"))).alias("_w")
-        )
-        return l2.select(key, "_w.*").select(*df.columns)
-
-    return df.groupBy(key).agg(winner).select(key, "_w.*").select(*df.columns)
+    w = Window.partitionBy(key).orderBy(F.col(ts).desc(), F.col(seq).desc())
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )

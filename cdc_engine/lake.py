@@ -14,11 +14,12 @@ the engine needs, in pure PySpark + JSON manifests:
   transform analog). MERGE rewrites only the buckets the batch touches —
   at 100 TB with n_buckets=4096 an epoch touching 1% of url-space rewrites
   ~1% of the table, not all of it.
-* **Copy-on-write MERGE**: full-outer join of touched-bucket state with the
-  (already LWW-deduped) batch on ``url``; winner = max (warc_ts, seq);
-  deletes persist as tombstone rows (``_deleted``) so an out-of-order
-  insert arriving in a LATER epoch with an OLDER warc_ts still loses —
-  physical row drop would silently resurrect it (SURVEY.md §7.4.1).
+* **Copy-on-write MERGE**: the touched buckets' state is unioned with the
+  (already LWW-deduped) batch and shuffled once on the bucket; a
+  row_number window per url keeps the max (warc_ts, seq) row; deletes
+  persist as tombstone rows (``_deleted``) so an out-of-order insert
+  arriving in a LATER epoch with an OLDER warc_ts still loses — physical
+  row drop would silently resurrect it (SURVEY.md §7.4.1).
 * **Atomic snapshot commit**: write immutable manifest vN+1, then swap
   ``HEAD`` via ``os.rename`` (POSIX-atomic). The offset ledger entry and
   the epoch's per-partition lineage rows live INSIDE the manifest, so data,
@@ -67,9 +68,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 import uuid
+from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Any
 
@@ -77,6 +80,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from cdc_engine import timing as _timing
 from cdc_engine.normalize import conform, evolve_schema
 from cdc_engine.salt import bucket_expr
 from cdc_engine.schemas import INTERNAL_DELETED, INTERNAL_SEQ, WAL_META_COLS
@@ -176,42 +180,161 @@ _LINEAGE_SCHEMA = T.StructType(
 )
 
 
-def _cow_broadcast_plan(tgt, src):
-    """Broadcast CDC-apply join shape (COW merge, small-epoch common case):
-    one (t, s) struct-columned relation row-equivalent to
-    ``tgt FULL OUTER JOIN src ON url`` — but the wide target never enters
-    a join exchange. Updates/carries: target LEFT JOIN broadcast(batch),
-    map-side. Inserts: batch ANTI JOIN a column-pruned url-only target
-    scan (narrow). A NULL t struct stands in for the outer join's
-    null-extended target side, so every downstream expression (winner
-    predicate, per-column pick, lineage Observation) runs verbatim on
-    either shape via t.col / s.col struct-field access. Requires both
-    sides unique per url (target invariant + LWW dedup), which also holds
-    for the full-outer path."""
-    t_struct = F.struct(*[F.col(f"t.`{c}`") for c in tgt.columns]).alias("t")
-    s_struct = F.struct(*[F.col(f"s.`{c}`") for c in src.columns]).alias("s")
-    upd = (
-        tgt.alias("t")
-        .join(
-            F.broadcast(src).alias("s"),
-            F.col("t.url") == F.col("s.url"),
-            "left_outer",
-        )
-        .select(t_struct, s_struct)
+@dataclass
+class _MergePlan:
+    """What ``SnapLake._merge_plan`` hands the write, resolve and publish
+    steps of one merge."""
+
+    man: dict
+    mode: str
+    version: int
+    incoming: T.StructType
+    new_schema: T.StructType
+    out: DataFrame  # bucket-partitioned, url-sorted rows to write
+    obs: Any  # lineage Observation the write job fills
+    pids: list
+    touched: list[int] | None  # None: resolved from obs (MoR fast path)
+    ft: int  # fanout modulus (n_buckets unless class files)
+    commit_id: str
+    out_rel: str
+    out_abs: str
+
+
+# LWW is undefined for a null url/warc_ts/seq: such rows are quarantined
+VALID_SQL = "url is not null and warc_ts is not null and seq is not null"
+
+
+def observe_input(df: DataFrame, name: str, pids: list, n_buckets: int | None = None):
+    """Observation on the RAW batch (below the valid-row filter and the
+    LWW dedup): per source partition the rows seen, quarantined, and the
+    seq span, plus the total row count; with ``n_buckets`` also the set of
+    buckets the valid rows touch. ``pids`` may be a superset (footer-stat
+    bounds); ``input_stats_from`` drops the absent ones. One F.expr per
+    pid: a named_struct SQL string is one py4j round trip, where the same
+    aggregate as a column-object tree cost ~30 per pid of driver time.
+    Returns (observed df, Observation)."""
+    from pyspark.sql import Observation
+
+    sp = (
+        "cast(source_partition as int)"
+        if "source_partition" in df.columns
+        else "cast(null as int)"
     )
-    ins = (
-        src.alias("s")
-        .join(
-            tgt.select(F.col("url").alias("__t_url")),
-            F.col("s.url") == F.col("__t_url"),
-            "left_anti",
+    exprs = []
+    for p in pids:
+        m = f"({sp}) is null" if p is None else f"({sp}) = {int(p)}"
+        exprs.append(
+            F.expr(
+                "named_struct("
+                f"'seen', sum(case when ({m}) then 1 else 0 end), "
+                f"'q', sum(case when ({m}) and not ({VALID_SQL}) then 1 else 0 end), "
+                f"'lo', min(case when ({m}) then seq end), "
+                f"'hi', max(case when ({m}) then seq end)"
+                f") as pid_{'null' if p is None else p}"
+            )
         )
-        .select(
-            F.lit(None).cast(upd.schema["t"].dataType).alias("t"),
-            s_struct,
+    exprs.append(F.expr("count(*) as _total"))
+    if n_buckets is not None:
+        # bucket only for valid rows: xxhash64(NULL) is the seed (42), so
+        # a null url would otherwise smuggle in a phantom bucket
+        exprs.append(
+            F.expr(
+                f"collect_set(case when ({VALID_SQL}) "
+                f"then pmod(xxhash64(url), {n_buckets}) end) as _buckets"
+            )
         )
+    obs = Observation(name)
+    return df.observe(obs, *exprs), obs
+
+
+def input_stats_from(vals, pids: list, epoch_id: int) -> list[dict] | None:
+    """``observe_input``'s values as per-partition input stats, or None
+    for an empty batch. Raises when the rows seen under ``pids`` do not
+    add up to the total: the footer-stat pid bound missed a partition."""
+    if int(vals["_total"]) == 0:
+        return None
+    per_pid = []
+    for p in pids:
+        st = vals["pid_null" if p is None else f"pid_{p}"]
+        if int(st["seen"]) == 0:
+            continue  # footer-bound superset: pid absent this epoch
+        per_pid.append((p, st))
+    if sum(int(st["seen"]) for _p, st in per_pid) != int(vals["_total"]):
+        raise RuntimeError(
+            f"epoch {epoch_id}: source_partition values outside the "
+            f"footer-stat bound {pids[:1]}..{pids[-1:]} — WAL statistics "
+            f"are untrustworthy; rerun without the fast path"
+        )
+    return [
+        {
+            "partition_id": None if p is None else int(p),
+            "rows_in": int(st["seen"]) - int(st["q"]),
+            "rows_quarantined": int(st["q"]),
+            "first_seq": None if st["lo"] is None else int(st["lo"]),
+            "last_seq": None if st["hi"] is None else int(st["hi"]),
+        }
+        for p, st in per_pid
+    ]
+
+
+def _batch_input_stats(batch_df: DataFrame, n_buckets: int) -> tuple[list[dict], list[int]]:
+    """Input stats and touched buckets of a direct ``merge`` call's batch:
+    ONE narrow per-pid aggregate (Catalyst prunes the payload out of the
+    scan), the merge's only collect."""
+    sp = (
+        F.col("source_partition").cast("int")
+        if "source_partition" in batch_df.columns
+        else F.lit(None).cast("int")
     )
-    return upd.unionByName(ins)
+    rows = (
+        batch_df.groupBy(sp.alias("pid"))
+        .agg(
+            F.count("*").alias("n"),
+            F.min("seq").alias("lo"),
+            F.max("seq").alias("hi"),
+            F.collect_set(bucket_expr("url", n_buckets)).alias("buckets"),
+        )
+        .collect()
+    )
+    input_stats = [
+        {
+            "partition_id": None if r["pid"] is None else int(r["pid"]),
+            "rows_in": int(r["n"]),
+            "rows_quarantined": 0,
+            "first_seq": int(r["lo"]),
+            "last_seq": int(r["hi"]),
+        }
+        for r in rows
+    ]
+    return input_stats, sorted({int(b) for r in rows for b in r["buckets"]})
+
+
+def _lineage_exprs(pids, src_sql, pid_sql, op_sql, won_sql, late_sql, blen_sql) -> list:
+    """The lineage Observation's aggregates, one named_struct per source
+    partition over the relation the write consumes: 'up'/'del' = source
+    rows that won (``won_sql``) split by op, 'late' = source rows that lost
+    to the target (``late_sql``; None -> NULL, MoR defers that judgement
+    to scan-time collapse), 'b' = the source rows' payload bytes.
+    ``src_sql`` marks source rows, ``pid_sql`` their partition."""
+    exprs = []
+    for p in pids:
+        m = f"{src_sql} and ({pid_sql}) " + ("is null" if p is None else f"= {int(p)}")
+        late = (
+            "cast(null as bigint)"
+            if late_sql is None
+            else f"sum(case when ({m}) and ({late_sql}) then 1 else 0 end)"
+        )
+        exprs.append(
+            F.expr(
+                "named_struct("
+                f"'up', sum(case when ({m}) and ({won_sql}) and {op_sql} != 'delete' then 1 else 0 end), "
+                f"'del', sum(case when ({m}) and ({won_sql}) and {op_sql} = 'delete' then 1 else 0 end), "
+                f"'late', {late}, "
+                f"'b', cast(coalesce(sum(case when ({m}) then {blen_sql} end), 0) as bigint)"
+                f") as pid_{'null' if p is None else p}"
+            )
+        )
+    return exprs
 
 
 def _internal_schema(user: T.StructType) -> T.StructType:
@@ -1131,17 +1254,12 @@ class SnapLake:
         spark: SparkSession,
         batch_df: DataFrame,
         epoch_id: int,
-        source_partition_col: str = "source_partition",
-        collect_lineage: bool = True,
         input_stats: list[dict] | None = None,
         touched_buckets: list[int] | None = None,
-        mor_lineage_stats: list[dict] | None = None,
         fast_obs=None,
         fast_pids: list | None = None,
         est_rows: int | None = None,
         quarantine_writer=None,
-        cow_broadcast: bool = False,
-        cow_merge: str = "window",
     ) -> dict[str, Any] | None:
         """CDC-apply one deduped micro-batch (S4/J1). Returns commit stats,
         or None when ``epoch_id`` is already in the ledger (idempotence, J4).
@@ -1149,371 +1267,215 @@ class SnapLake:
         ``batch_df`` must be one-row-per-url (run dedup.lww_dedup first —
         invariant 1 of SURVEY.md §4) with WAL columns (seq, op, payload...).
 
-        ``input_stats``: optional pre-dedup per-source-partition rows
-        ``{partition_id, rows_in, first_seq, last_seq, bytes}`` from
-        apply_epoch, so ledger/lineage record the FULL consumed offset
-        range, not just LWW winners. Without it, stats fall back to the
-        (deduped) batch itself.
+        Four steps: ``_merge_plan`` (schema evolution, conform, the per-mode
+        result relation carrying the lineage Observation), ``_merge_write``
+        (debris check, parquet write, footer stats), ``_merge_resolve``
+        (the write job's Observations become input stats, touched buckets
+        and lineage rows) and ``_merge_publish`` (optimistic commit).
 
-        ``mor_lineage_stats``: optional pre-aggregated MoR lineage rows
-        ``{pid, rows_upserted, rows_deleted, rows_late_ignored, bytes}``
-        (apply_epoch folds them into its pre-commit aggregate — one fewer
-        job per epoch); requires ``input_stats``. Ignored in COW mode.
+        ``input_stats`` / ``touched_buckets``: pre-dedup per-source-
+        partition rows ``{partition_id, rows_in, rows_quarantined,
+        first_seq, last_seq}`` and the touched-bucket set, from
+        apply_epoch's prepare, so ledger/lineage record the FULL consumed
+        offset range, not just LWW winners. Direct callers omit both; one
+        narrow per-pid aggregate over the batch then supplies them.
 
         ``fast_obs``/``fast_pids``: the MoR replay fast path (apply.
-        _apply_mor_fast) — an Observation already attached below
-        ``batch_df`` whose per-pid structs carry input stats, quarantine
-        counts, lineage splits, and the touched-bucket set. merge then
-        runs the write as the epoch's ONLY job and resolves all commit
-        metadata from the observation afterwards. ``est_rows`` sizes the
-        adaptive fanout (the expected seq-window width — exact for a
-        dense WAL); ``quarantine_writer`` is invoked (still before the
-        commit) only if the observation reports quarantined rows.
-
-        ``cow_merge``: COW apply strategy (round 7, guide §2.4 "remove
-        shuffles outright"). "window" (default) — the ONE-EXCHANGE form:
-        UNION the conformed target rows with the batch winners, hash-
-        repartition once on the output bucket, and pick the LWW winner
-        per url with a row_number window partitioned by (_bucket, url)
-        — hash partitioning on _bucket alone satisfies the window's
-        clustered distribution (url determines bucket), so no second
-        exchange is inserted, and the window's sort IS the write's
-        required (bucket, url) clustering. The join path shuffled the
-        full-width target TWICE per epoch (url-hash into the SMJ, then
-        bucket-hash before the write) plus the batch once; this shuffles
-        target+batch exactly once. "join" — the round-6 full-outer
-        sort-merge form (with the broadcast variant under its gate),
-        kept for A/B and regression tests; state/ledger/lineage are
-        byte-identical across all three (tests/test_cow_broadcast.py).
+        _apply_mor_fast) — an input Observation (``observe_input``)
+        already attached below ``batch_df``, and the footer-bound pid
+        list. The write is then the epoch's ONLY job; input stats and the
+        touched-bucket set are resolved from the Observations afterwards.
+        ``est_rows`` sizes the adaptive fanout (the expected seq-window
+        width — exact for a dense WAL); ``quarantine_writer`` is invoked
+        (still before the commit) only if the observation reports
+        quarantined rows.
         """
-        t0 = time.monotonic()
-        _plan_t0 = time.monotonic()
+        t0 = plan_t0 = time.monotonic()
         man = self.manifest()
         if self.ledger_entry(epoch_id, man) is not None:
             return None
-        n_buckets = man["n_buckets"]
-        version = man["version"] + 1
-        snapshot_id = f"v{version:08d}"
+        if fast_obs is None and input_stats is None:
+            input_stats, touched_buckets = _batch_input_stats(batch_df, man["n_buckets"])
+            plan_t0 = time.monotonic()
+        plan = self._merge_plan(
+            spark, man, batch_df, epoch_id, input_stats, touched_buckets,
+            fast_pids, est_rows,
+        )
+        if _timing.enabled():
+            # plan-construction span: per-epoch DRIVER time (serial at any
+            # cluster size), the term the F.expr conversions shrink
+            _timing.records.append(("merge_plan", time.monotonic() - plan_t0))
+        new_files = self._merge_write(plan, epoch_id)
+        if new_files is None:
+            return None
+        resolved = self._merge_resolve(
+            plan, epoch_id, input_stats, fast_obs, quarantine_writer, t0
+        )
+        if resolved is None:
+            # empty window, or every row quarantined: nothing to commit
+            shutil.rmtree(plan.out_abs, ignore_errors=True)
+            return None
+        return self._merge_publish(plan, epoch_id, new_files, *resolved, t0)
 
-        # -- schema evolution: widen table schema by the batch's payload cols
-        cur_schema = T.StructType.fromJson(man["schema"])
+    def _merge_plan(
+        self,
+        spark: SparkSession,
+        man: dict,
+        batch_df: DataFrame,
+        epoch_id: int,
+        input_stats: list[dict] | None,
+        touched: list[int] | None,
+        pids: list | None,
+        est_rows: int | None,
+    ) -> _MergePlan:
+        """PLAN step: widen the table schema by the batch's payload columns,
+        conform the batch, and build the epoch's output relation — already
+        bucket-partitioned and url-sorted for the write — with the lineage
+        Observation attached where it sees every source row.
+
+        MoR: the deduped batch IS the delta; no target read, tombstones
+        ride along as _deleted rows and scan-time collapse judges LWW.
+
+        COW: the ONE-EXCHANGE union+window apply. The conformed target
+        rows of the touched buckets are unioned with the batch winners,
+        hash-repartitioned once on the output bucket, and the LWW winner
+        per url is picked by a row_number window over (_bucket, url) —
+        hash partitioning on _bucket alone satisfies the window's
+        clustered distribution (url determines bucket), so no second
+        exchange is inserted, and the window's sort IS the write's
+        (bucket, url) clustering. Strictly-newer wins: ties (which the
+        ledger makes impossible) break to the TARGET row.
+
+        Fanout modulus and partition width are fixed here, from metadata
+        only (input_stats rows + manifest carried rows), so the single
+        repartition IS the write layout."""
+        from pyspark.sql import Observation, Window
+
+        n_buckets = man["n_buckets"]
+        mode = man.get("mode", "cow")
+        version = man["version"] + 1
         incoming = T.StructType(
             [f for f in batch_df.schema.fields if f.name not in WAL_META_COLS]
         )
-        new_schema = evolve_schema(cur_schema, incoming)
-        user_cols = [f.name for f in new_schema.fields]
+        new_schema = evolve_schema(T.StructType.fromJson(man["schema"]), incoming)
+        user_cols = [F.col(f"`{f.name}`") for f in new_schema.fields]
         src = conform(batch_df, new_schema, passthrough=WAL_META_COLS)
-        src = src.withColumn("_bucket", bucket_expr("url", n_buckets))
+        if touched is not None:
+            touched = sorted(touched)
+        if pids is None:
+            pids = [s["partition_id"] for s in input_stats]
+        sp_sql = (
+            "cast(source_partition as int)"
+            if "source_partition" in batch_df.columns
+            else "cast(null as int)"
+        )
+        blen_sql = (
+            "octet_length(html)" if "html" in batch_df.columns else "cast(null as int)"
+        )
 
-        if fast_obs is not None:
-            touched = None  # resolved from the observation after the write
-        else:
-            touched = (
-                sorted(touched_buckets)
-                if touched_buckets is not None
-                else sorted(
-                    r["_bucket"] for r in src.select("_bucket").distinct().collect()
-                )
-            )
-
-        mode = man.get("mode", "cow")
-        obs = obs_pids = None
-        prepart = False  # window strategy: result is already partitioned+sorted
-        u_win = None  # window strategy's pre-filter relation (lineage fallback)
-        carried_rows = 0  # COW only: target rows rewritten alongside the batch
-        if mode == "mor":
-            # merge-on-read: the deduped batch IS the delta — no target read,
-            # no join. Tombstones ride along as _deleted rows; scan collapses.
-            #
-            # Lineage for this mode is a per-source-partition aggregate over
-            # the SAME rows the write consumes, so it rides INSIDE the write
-            # job via an Observation node (map-side, no extra job barrier)
-            # instead of a second collect — the pids are known up front from
-            # input_stats, so the aggregate unrolls to a few counters each.
-            if (
-                collect_lineage
-                and mor_lineage_stats is None
-                and input_stats is not None
-            ):
-                from pyspark.sql import Observation
-
-                obs_pids = [s["partition_id"] for s in input_stats]
-                has_sp0 = source_partition_col in batch_df.columns
-                sp0 = (
-                    f"cast({source_partition_col} as int)"
-                    if has_sp0
-                    else "cast(null as int)"
-                )
-                blen0 = (
-                    "octet_length(html)"
-                    if "html" in batch_df.columns
-                    else "cast(null as int)"
-                )
-                # ONE F.expr per pid (a named_struct of the aggregates):
-                # building these as column-object trees cost ~30 py4j round
-                # trips per pid — measured 0.2s/epoch of pure driver time
-                # at this workload's partition count, a serial term at any
-                # cluster size. A single SQL string is one round trip.
-                exprs = []
-                for p in obs_pids:
-                    m = f"({sp0}) is null" if p is None else f"({sp0}) = {int(p)}"
-                    tag = "null" if p is None else str(p)
-                    exprs.append(
-                        F.expr(
-                            f"named_struct("
-                            f"'up', sum(case when ({m}) and op != 'delete' then 1 else 0 end), "
-                            f"'del', sum(case when ({m}) and op = 'delete' then 1 else 0 end), "
-                            f"'late', cast(null as bigint), "
-                            f"'b', cast(coalesce(sum(case when ({m}) then {blen0} end), 0) as bigint)"
-                            f") as pid_{tag}"
-                        )
-                    )
-                obs = Observation(f"lineage_e{epoch_id}_v{version}")
-                src = src.observe(obs, *exprs)
-            j = s_here = s_newer = t_here = None
-            result = src.select(
-                *user_cols,
-                F.col("seq").alias(INTERNAL_SEQ),
-                (F.col("op") == F.lit("delete")).alias(INTERNAL_DELETED),
-                F.col("_bucket"),
-            )
-        else:
-            # resolve the covering file list once: it feeds both the target
-            # scan and the fanout estimate (a COW rewrite emits batch rows
-            # PLUS every carried row from these files — sizing class files
-            # off batch rows alone made a small epoch on a large table
-            # write a few oversized files; round-4 ADVICE)
+        # adaptive fanout: collapse per-bucket files into bucket-CLASS files
+        # when the epoch is small (file count tracks data, not bucket count
+        # — a 50k-row epoch on a 4096-bucket table writes ~64 files, not
+        # 4096 tiny ones). A COW rewrite emits every carried row of the
+        # touched buckets' files too, so they count toward the size.
+        carried_rows = 0
+        if mode == "cow":
             tgt_files = self._files(man, set(touched))
             carried_rows = sum(int(f.get("rows") or 0) for f in tgt_files)
-            tgt = self.scan_internal(spark, files=tgt_files)
-            # target conformed to the evolved schema (old snapshot may be narrower)
-            tgt = conform(tgt, _internal_schema(new_schema))
+        est = est_rows
+        if est is None and input_stats is not None:
+            est = sum(int(st["rows_in"]) for st in input_stats)
+        if est is not None:
+            est += carried_rows
+        ft = self._write_modulus(n_buckets, est)
+        nparts = max(
+            1,
+            min(
+                ft if ft < n_buckets else (n_buckets if touched is None else len(touched)),
+                spark.sparkContext.defaultParallelism,
+            ),
+        )
+        # same bucket function as salt.bucket_expr (pmod/xxhash64 with
+        # Spark's default seed 42)
+        bucket_sql = f"pmod(xxhash64(url), {n_buckets})"
+        out_bucket = F.expr(bucket_sql if ft == n_buckets else f"pmod({bucket_sql}, {ft})")
+        obs = Observation(f"lineage_e{epoch_id}_v{version}")
 
-            if not cow_broadcast and cow_merge == "window":
-                # ---- ONE-EXCHANGE union+window CDC apply (round 7) ----
-                # See the ``cow_merge`` parameter notes. Fanout modulus and
-                # partition width are fixed BEFORE the plan (pure metadata:
-                # input_stats rows + manifest carried rows) so the single
-                # repartition IS the write layout; the window then needs no
-                # exchange of its own (hash on _bucket satisfies clustering
-                # on (_bucket, url)) and its sort doubles as the writer's
-                # required bucket clustering + the per-file url ordering.
-                from pyspark.sql import Observation, Window as _W
+        if mode == "mor":
+            exprs = _lineage_exprs(pids, "true", sp_sql, "op", "true", None, blen_sql)
+            if touched is None:
+                exprs.append(F.expr(f"collect_set({bucket_sql}) as _touched"))
+            out = (
+                src.observe(obs, *exprs)
+                .select(
+                    *user_cols,
+                    F.col("seq").alias(INTERNAL_SEQ),
+                    (F.col("op") == F.lit("delete")).alias(INTERNAL_DELETED),
+                    out_bucket.alias("_bucket"),
+                )
+                .repartition(nparts, F.col("_bucket"))
+                .sortWithinPartitions("url")
+            )
+        else:
+            tgt = conform(
+                self.scan_internal(spark, files=tgt_files), _internal_schema(new_schema)
+            )
+            t_side = tgt.select(
+                *user_cols,
+                F.col(INTERNAL_SEQ).alias("_mseq"),
+                F.col(INTERNAL_DELETED).alias("_mdel"),
+                F.expr("cast(null as string)").alias("_mop"),
+                F.expr("cast(null as int)").alias("_mpid"),
+                F.lit(False).alias("_msrc"),
+            )
+            s_side = src.select(
+                *user_cols,
+                F.col("seq").alias("_mseq"),
+                F.lit(False).alias("_mdel"),
+                F.col("op").alias("_mop"),
+                F.expr(sp_sql).alias("_mpid"),
+                F.lit(True).alias("_msrc"),
+            )
+            w_lww = Window.partitionBy("_bucket", "url").orderBy(
+                F.col("warc_ts").desc(), F.col("_mseq").desc(), F.col("_msrc").asc()
+            )
+            # the Observation sits below the rn filter, so a source row that
+            # loses to the target is still counted (as late_ignored)
+            u = (
+                t_side.unionByName(s_side)
+                .withColumn("_bucket", out_bucket)
+                .repartition(nparts, F.col("_bucket"))
+                .withColumn("_rn", F.row_number().over(w_lww))
+                .observe(
+                    obs,
+                    *_lineage_exprs(
+                        pids, "_msrc", "_mpid", "_mop", "_rn = 1", "_rn > 1", blen_sql
+                    ),
+                )
+            )
+            out = u.where(F.col("_rn") == 1).select(
+                *user_cols,
+                F.col("_mseq").alias(INTERNAL_SEQ),
+                F.expr("case when _msrc then _mop = 'delete' else _mdel end").alias(
+                    INTERNAL_DELETED
+                ),
+                F.col("_bucket"),
+            )
 
-                est = est_rows
-                if est is None and input_stats is not None:
-                    est = sum(int(st["rows_in"]) for st in input_stats)
-                if est is not None:
-                    est += carried_rows
-                ft = self._write_modulus(n_buckets, est)
-                nparts = max(
-                    1,
-                    min(
-                        ft if ft < n_buckets else len(touched),
-                        spark.sparkContext.defaultParallelism,
-                    ),
-                )
-                sp_sql0 = (
-                    f"cast({source_partition_col} as int)"
-                    if source_partition_col in batch_df.columns
-                    else "cast(null as int)"
-                )
-                t_side = tgt.select(
-                    *[F.col(f"`{c}`") for c in user_cols],
-                    F.col(INTERNAL_SEQ).alias("_mseq"),
-                    F.col(INTERNAL_DELETED).alias("_mdel"),
-                    F.expr("cast(null as string)").alias("_mop"),
-                    F.expr("cast(null as int)").alias("_mpid"),
-                    F.lit(False).alias("_msrc"),
-                )
-                s_side = src.select(
-                    *[F.col(f"`{c}`") for c in user_cols],
-                    F.col("seq").alias("_mseq"),
-                    F.lit(False).alias("_mdel"),
-                    F.col("op").alias("_mop"),
-                    F.expr(sp_sql0).alias("_mpid"),
-                    F.lit(True).alias("_msrc"),
-                )
-                u = t_side.unionByName(s_side).withColumn(
-                    "_bucket", F.expr(f"pmod(xxhash64(url), {n_buckets})")
-                )
-                if ft < n_buckets:
-                    u = u.withColumn("_bucket", F.pmod(F.col("_bucket"), F.lit(ft)))
-                u = u.repartition(nparts, F.col("_bucket"))
-                # LWW winner per url: strictly-newer wins, so ties (which
-                # the ledger makes impossible) break to the TARGET row —
-                # exactly the join path's `s strictly newer than t`
-                w_lww = _W.partitionBy("_bucket", "url").orderBy(
-                    F.col("warc_ts").desc(),
-                    F.col("_mseq").desc(),
-                    F.col("_msrc").asc(),
-                )
-                u = u.withColumn("_rn", F.row_number().over(w_lww))
-                if collect_lineage and input_stats is None:
-                    # direct-merge lineage fallback needs the inserted-vs-
-                    # updated split: count target rows per url group (same
-                    # window partitioning -> no extra exchange)
-                    u = u.withColumn(
-                        "_thit",
-                        F.sum(F.when(~F.col("_msrc"), 1).otherwise(0)).over(
-                            _W.partitionBy("_bucket", "url")
-                        ),
-                    )
-                u_win = u
-                if collect_lineage and input_stats is not None:
-                    # lineage rides the SAME write job (observe sits below
-                    # the rn filter so loser source rows are still counted
-                    # as late_ignored) — semantics identical to the join
-                    # path's Observation: up/del = source row won, late =
-                    # source row lost, bytes = all source rows' payload
-                    obs_pids = [s_["partition_id"] for s_ in input_stats]
-                    blen0 = (
-                        "octet_length(html)"
-                        if "html" in batch_df.columns
-                        else "cast(null as int)"
-                    )
-                    exprs = []
-                    for p in obs_pids:
-                        m = (
-                            "_msrc and _mpid is null"
-                            if p is None
-                            else f"_msrc and _mpid = {int(p)}"
-                        )
-                        tag = "null" if p is None else str(p)
-                        exprs.append(
-                            F.expr(
-                                f"named_struct("
-                                f"'up', sum(case when ({m}) and _rn = 1 and _mop != 'delete' then 1 else 0 end), "
-                                f"'del', sum(case when ({m}) and _rn = 1 and _mop = 'delete' then 1 else 0 end), "
-                                f"'late', sum(case when ({m}) and _rn > 1 then 1 else 0 end), "
-                                f"'b', cast(coalesce(sum(case when ({m}) then {blen0} end), 0) as bigint)"
-                                f") as pid_{tag}"
-                            )
-                        )
-                    obs = Observation(f"lineage_e{epoch_id}_v{version}")
-                    u = u.observe(obs, *exprs)
-                result = u.where(F.col("_rn") == 1).select(
-                    *[F.col(f"`{c}`") for c in user_cols],
-                    F.col("_mseq").alias(INTERNAL_SEQ),
-                    F.expr("case when _msrc then _mop = 'delete' else _mdel end").alias(
-                        INTERNAL_DELETED
-                    ),
-                    F.col("_bucket"),
-                )
-                prepart = True
-            else:
-                if cow_broadcast:
-                    # broadcast CDC-apply (round 6): the epoch's winners fit a
-                    # broadcast (prepare_epoch's map-side estimate), so the
-                    # WIDE TARGET NEVER ENTERS A JOIN EXCHANGE — updates are a
-                    # map-side target LEFT JOIN broadcast(batch), inserts a
-                    # batch ANTI JOIN over a column-pruned url-only target
-                    # scan. The only remaining full-width shuffle is the
-                    # bucket repartition before the write (the join path pays
-                    # that PLUS a both-sides url shuffle). Both branches are
-                    # packed into (t, s) STRUCT columns so every downstream
-                    # expression (winner predicate, per-column pick, lineage
-                    # Observation) is shared verbatim with the full-outer
-                    # path: t.url / s.`col` resolve as struct fields, a NULL
-                    # t struct behaves exactly like the outer join's
-                    # null-extended t side. Result rows are byte-identical
-                    # (tests/test_cow_broadcast.py).
-                    j = _cow_broadcast_plan(tgt, src)
-                else:
-                    j = tgt.alias("t").join(src.alias("s"), F.col("t.url") == F.col("s.url"), "full_outer")
-                # winner predicate + per-column pick, as SQL strings: one py4j
-                # round trip per column instead of the ~6 a when/otherwise
-                # column tree costs — this is per-epoch DRIVER time (serial at
-                # any cluster size; measured ~0.17s/epoch as column objects)
-                newer_sql = (
-                    "(case when t.url is null then true "
-                    "when s.url is null then false "
-                    "else (s.warc_ts > t.warc_ts) or "
-                    f"(s.warc_ts = t.warc_ts and s.seq > t.{INTERNAL_SEQ}) end)"
-                )
-                s_newer = F.expr(newer_sql)
-                # needed by the no-input_stats lineage fallback below (direct
-                # merge() callers; apply_epoch always passes input_stats and
-                # takes the Observation path instead)
-                s_here = F.col("s.url").isNotNull()
-                t_here = F.col("t.url").isNotNull()
-                pick = [
-                    F.expr(f"case when {newer_sql} then s.`{c}` else t.`{c}` end as `{c}`")
-                    for c in user_cols
-                ]
-                if collect_lineage and input_stats is not None:
-                    # COW lineage rides INSIDE the write job via an Observation
-                    # on the full-outer join (same lever the MoR path got one
-                    # round earlier): the outcome split per source partition is
-                    # collected map-side while the winners stream to parquet,
-                    # removing the separate narrow re-join job — one Spark job
-                    # barrier per epoch, pure serial time at any cluster size.
-                    # One F.expr per pid (a named_struct of the 4 aggregates):
-                    # column-object trees here cost ~30 py4j round trips per
-                    # pid of driver time.
-                    from pyspark.sql import Observation
-
-                    obs_pids = [s["partition_id"] for s in input_stats]
-                    sh = "s.url is not null"
-                    newer = (
-                        "(case when t.url is null then true "
-                        "when s.url is null then false "
-                        "else (s.warc_ts > t.warc_ts) or "
-                        f"(s.warc_ts = t.warc_ts and s.seq > t.{INTERNAL_SEQ}) end)"
-                    )
-                    sp_sql = (
-                        f"cast(s.{source_partition_col} as int)"
-                        if source_partition_col in batch_df.columns
-                        else "cast(null as int)"
-                    )
-                    blen_sql = (
-                        "octet_length(s.html)"
-                        if "html" in batch_df.columns
-                        else "cast(null as int)"
-                    )
-                    exprs = []
-                    for p in obs_pids:
-                        m = (
-                            f"({sh}) and ({sp_sql}) is null"
-                            if p is None
-                            else f"({sh}) and ({sp_sql}) = {int(p)}"
-                        )
-                        tag = "null" if p is None else str(p)
-                        exprs.append(
-                            F.expr(
-                                f"named_struct("
-                                f"'up', sum(case when ({m}) and ({newer}) and s.op != 'delete' then 1 else 0 end), "
-                                f"'del', sum(case when ({m}) and ({newer}) and s.op = 'delete' then 1 else 0 end), "
-                                f"'late', sum(case when ({m}) and not ({newer}) then 1 else 0 end), "
-                                f"'b', cast(coalesce(sum(case when ({m}) then {blen_sql} end), 0) as bigint)"
-                                f") as pid_{tag}"
-                            )
-                        )
-                    obs = Observation(f"lineage_e{epoch_id}_v{version}")
-                    j = j.observe(obs, *exprs)
-                result = j.select(
-                    *pick,
-                    F.expr(
-                        f"case when {newer_sql} then s.seq else t.{INTERNAL_SEQ} end "
-                        f"as {INTERNAL_SEQ}"
-                    ),
-                    F.expr(
-                        f"case when {newer_sql} then s.op = 'delete' "
-                        f"else t.{INTERNAL_DELETED} end as {INTERNAL_DELETED}"
-                    ),
-                    # same bucket function as salt.bucket_expr (pmod/xxhash64
-                    # with Spark's default seed 42)
-                    F.expr(
-                        f"coalesce(s._bucket, pmod(xxhash64(t.url), {n_buckets})) as _bucket"
-                    ),
-                )
-
-        # one output file per touched bucket: repartition ON the bucket id,
-        # cluster by url inside each file (O3, MERGE locality)
-        commit_seed = f"{man['table_uuid']}:{epoch_id}"
-        commit_id = "c" + _stable_hash(commit_seed)
+        commit_id = "c" + _stable_hash(f"{man['table_uuid']}:{epoch_id}")
         out_rel = os.path.join("data", commit_id)
-        out_abs = os.path.join(self.path, out_rel)
+        return _MergePlan(
+            man=man, mode=mode, version=version, incoming=incoming,
+            new_schema=new_schema, out=out, obs=obs, pids=pids, touched=touched,
+            ft=ft, commit_id=commit_id, out_rel=out_rel,
+            out_abs=os.path.join(self.path, out_rel),
+        )
+
+    def _merge_write(self, plan: _MergePlan, epoch_id: int) -> list[dict] | None:
+        """WRITE step: clear crash debris, write the epoch's data files (the
+        epoch's one data job; it also fills the lineage Observation) and
+        read their footer stats. None when a peer committed this epoch."""
+        out_abs = plan.out_abs
         if os.path.exists(out_abs):
             # dir exists: either debris from a crash between data write and
             # manifest commit, or a peer committed this epoch after our head
@@ -1521,8 +1483,6 @@ class SnapLake:
             # a published manifest references.
             if self.ledger_entry(int(epoch_id), self.manifest()) is not None:
                 return None
-            import shutil
-
             # crash debris by every check we can make — but if a SECOND
             # live tailer (out of contract: the engine assumes one logical
             # tailer per table) is mid-write here, this rmtree would eat
@@ -1545,123 +1505,105 @@ class SnapLake:
                 file=sys.stderr,
             )
             shutil.rmtree(out_abs)
-        # adaptive fanout: collapse per-bucket files into bucket-CLASS
-        # files when the epoch is small (file count tracks data, not
-        # bucket count — a 50k-row epoch on a 4096-bucket table writes
-        # ~64 files, not 4096 tiny ones)
-        if not prepart:
-            # (the window strategy computed ft/nparts up front and baked
-            # the modulus + repartition into its single exchange)
-            if est_rows is None and input_stats is not None:
-                est_rows = sum(int(st["rows_in"]) for st in input_stats)
-            if est_rows is not None and carried_rows:
-                # a COW rewrite emits the carried target rows too — without
-                # them the modulus tracks batch size, not bytes written
-                est_rows += carried_rows
-            ft = self._write_modulus(n_buckets, est_rows)
-            if ft < n_buckets:
-                result = result.withColumn(
-                    "_bucket", F.pmod(F.col("_bucket"), F.lit(ft))
-                )
-            nparts = max(
-                1,
-                min(ft if ft < n_buckets else (n_buckets if touched is None else len(touched)),
-                    spark.sparkContext.defaultParallelism),
-            )
-        from cdc_engine import timing as _timing
-        if _timing.enabled():
-            # plan-construction span: everything from the manifest read to
-            # the write action — per-epoch DRIVER time (serial at any
-            # cluster size), the term the F.expr conversions above shrink
-            _timing.records.append(("merge_plan", time.monotonic() - _plan_t0))
-            if mode != "mor":
-                _timing.records.append(
-                    (
-                        "cow_apply_broadcast"
-                        if cow_broadcast
-                        else ("cow_apply_window" if prepart else "cow_apply_join"),
-                        0.0,
-                    )
-                )
         with phase("data_write"):
-            out_df = (
-                result  # window strategy: already bucket-partitioned + sorted
-                if prepart
-                else result.repartition(nparts, F.col("_bucket")).sortWithinPartitions("url")
-            )
-            out_df.write.mode("errorifexists").partitionBy("_bucket").parquet(out_abs)
-
+            plan.out.write.mode("errorifexists").partitionBy("_bucket").parquet(out_abs)
         with phase("footer_stats"):
             new_files = _walk_bucket_files(
-                self.path, out_rel, man.get("key_blooms", False)
+                self.path, plan.out_rel, plan.man.get("key_blooms", False)
             )
-        if ft < n_buckets:
-            for f in new_files:
-                f["bmod"] = ft  # class file: covers residue f["bucket"] mod ft
-        if mode == "mor":
-            for f in new_files:
+        for f in new_files:
+            if plan.ft < plan.man["n_buckets"]:
+                f["bmod"] = plan.ft  # class file: covers residue f["bucket"] mod ft
+            if plan.mode == "mor":
                 f["kind"] = "delta"  # append-only; compaction folds
-        if fast_obs is not None:
-            # resolve ALL commit metadata from the write job's two
-            # Observations (the epoch's only job): obs_in = consumed input
-            # (pre-filter), obs_out = applied rows (post-filter/dedup —
-            # byte-identical lineage semantics to the stats-job path)
-            obs_in, obs_out = fast_obs
-            in_vals = obs_in.get
-            if int(in_vals["_total"]) == 0:
-                # empty window: nothing written, nothing to commit
-                import shutil
+        return new_files
 
-                shutil.rmtree(out_abs, ignore_errors=True)
-                return None
-            out_vals = obs_out.get
-            per_pid = []
-            for p in fast_pids:
-                tag = "null" if p is None else str(p)
-                st = in_vals[f"pid_{tag}"]
-                if int(st["seen"]) == 0:
-                    continue  # footer-bound superset: pid absent this epoch
-                per_pid.append((p, st, out_vals[f"pid_{tag}"]))
-            if sum(int(st["seen"]) for _p, st, _o in per_pid) != int(in_vals["_total"]):
-                raise RuntimeError(
-                    f"epoch {epoch_id}: source_partition values outside the "
-                    f"footer-stat bound {fast_pids[:1]}..{fast_pids[-1:]} — "
-                    f"WAL statistics are untrustworthy; rerun without the "
-                    f"fast path"
-                )
-            input_stats = [
-                {
-                    "partition_id": None if p is None else int(p),
-                    "rows_in": int(st["seen"]) - int(st["q"]),
-                    "rows_quarantined": int(st["q"]),
-                    "first_seq": None if st["lo"] is None else int(st["lo"]),
-                    "last_seq": None if st["hi"] is None else int(st["hi"]),
-                    "bytes": None,
-                }
-                for p, st, _o in per_pid
-            ]
-            mor_lineage_stats = [
-                {
-                    "pid": None if p is None else int(p),
-                    "rows_upserted": int(o["up"]),
-                    "rows_deleted": int(o["del"]),
-                    "rows_late_ignored": None,
-                    "bytes": int(o["b"]),
-                }
-                for p, _st, o in per_pid
-                if int(o["up"]) or int(o["del"]) or int(o["b"])
-            ]
-            touched = sorted(int(b) for b in (out_vals["_touched"] or []))
+    def _merge_resolve(
+        self,
+        plan: _MergePlan,
+        epoch_id: int,
+        input_stats: list[dict] | None,
+        fast_obs,
+        quarantine_writer,
+        t0: float,
+    ) -> tuple | None:
+        """RESOLVE step: the single lineage route. The write job's
+        Observations (complete: the write action has finished, so reading
+        them costs no job) become the input stats and touched buckets (MoR
+        fast path) and the per-partition lineage rows. Returns (touched,
+        lineage_rows, first_seq, last_seq), or None when there is nothing
+        to commit."""
+        if fast_obs is not None:
+            input_stats = input_stats_from(fast_obs.get, plan.pids, epoch_id)
+            if input_stats is None:
+                return None  # empty window
             if quarantine_writer is not None and any(
-                int(st["q"]) for _p, st, _o in per_pid
+                s["rows_quarantined"] for s in input_stats
             ):
                 quarantine_writer()  # rare path; still before the commit
+        vals = plan.obs.get
+        touched = plan.touched
+        if touched is None:
+            touched = sorted(int(b) for b in (vals["_touched"] or []))
             if not touched:
-                # every row was quarantined; nothing to commit
-                import shutil
+                return None  # every row was quarantined
+        # a pid with no source row is omitted (the footer-bound pid list is
+        # a superset), not kept as an all-zero observation row
+        by_pid = {}
+        for p in plan.pids:
+            st = vals["pid_null" if p is None else f"pid_{p}"]
+            if st["up"] or st["del"] or st["late"] or st["b"]:
+                by_pid[p] = st
+        latency_ms = (time.monotonic() - t0) * 1000.0
+        lineage_rows = []
+        for ins in sorted(
+            input_stats, key=lambda s: (s["partition_id"] is None, s["partition_id"])
+        ):
+            r = by_pid.get(ins["partition_id"])
+            lineage_rows.append(
+                {
+                    "epoch_id": int(epoch_id),
+                    "partition_id": ins["partition_id"],
+                    "first_seq": int(ins["first_seq"]),
+                    "last_seq": int(ins["last_seq"]),
+                    "snapshot_id": None,  # set by the publish step
+                    "rows_in": int(ins["rows_in"]),
+                    "rows_upserted": 0 if r is None else int(r["up"]),
+                    "rows_deleted": 0 if r is None else int(r["del"]),
+                    "rows_late_ignored": (
+                        0 if r is None else None if r["late"] is None else int(r["late"])
+                    ),
+                    "rows_quarantined": int(ins.get("rows_quarantined", 0)),
+                    # bytes applied: the source rows' html payload
+                    "bytes": None if r is None else int(r["b"]),
+                    "apply_latency_ms": latency_ms,
+                }
+            )
+        lo = min(s["first_seq"] for s in input_stats) if input_stats else None
+        hi = max(s["last_seq"] for s in input_stats) if input_stats else None
+        return touched, lineage_rows, lo, hi
 
-                shutil.rmtree(out_abs, ignore_errors=True)
-                return None
+    def _merge_publish(
+        self,
+        plan: _MergePlan,
+        epoch_id: int,
+        new_files: list[dict],
+        touched: list[int],
+        lineage_rows: list[dict],
+        lo: int | None,
+        hi: int | None,
+        t0: float,
+    ) -> dict[str, Any] | None:
+        """PUBLISH step: metadata commit with optimistic-concurrency retry
+        (the Iceberg commit-retry analog): a concurrent writer publishing
+        first makes _write_manifest's exclusive create raise; re-read HEAD,
+        no-op if the peer committed THIS epoch (drop our unreferenced data
+        dir), else rebase the metadata plane onto the new head and try
+        again. Data files never move — they are keyed by commit_id, and
+        only a published manifest references them."""
+        man, version, new_schema = plan.man, plan.version, plan.new_schema
+        commit_id = plan.commit_id
+        snapshot_id = f"v{version:08d}"
         bundle = _SideBundle(
             os.path.join("metadata", f"commit-{man['table_uuid'][:8]}-{commit_id}.json")
         )
@@ -1669,207 +1611,6 @@ class SnapLake:
             file_groups = self._advance_file_groups(
                 man, commit_id, set(touched), new_files, bundle
             )
-
-        # -- stats for ledger + lineage (narrow second pass: Catalyst prunes
-        # html/text out of both scans; the join re-runs on slim columns)
-        if input_stats is not None:
-            lo = min(s["first_seq"] for s in input_stats) if input_stats else None
-            hi = max(s["last_seq"] for s in input_stats) if input_stats else None
-        else:
-            r0 = batch_df.agg(F.min("seq").alias("lo"), F.max("seq").alias("hi")).collect()[0]
-            lo = None if r0["lo"] is None else int(r0["lo"])
-            hi = None if r0["hi"] is None else int(r0["hi"])
-        lineage_rows: list[dict] = []
-        if collect_lineage:
-            has_sp = source_partition_col in batch_df.columns
-            if mode == "mor" and mor_lineage_stats is not None:
-                # apply_epoch already folded the upsert/delete/byte split
-                # into its combined pre-commit aggregate — no extra job
-                stats = mor_lineage_stats
-            elif obs is not None:
-                # the write job's Observation collected the aggregates
-                # map-side (both modes; COW observes the full-outer join);
-                # obs.get is already complete (the write action above
-                # finished) — zero extra jobs
-                vals = obs.get
-                stats = []
-                for p in obs_pids:
-                    tag = "null" if p is None else str(p)
-                    st = vals[f"pid_{tag}"]
-                    late = st["late"]
-                    row = {
-                        "pid": p,
-                        "rows_upserted": int(st["up"]),
-                        "rows_deleted": int(st["del"]),
-                        "rows_late_ignored": None if late is None else int(late),
-                        "bytes": int(st["b"]),
-                    }
-                    # normalize the absent-pid encoding across lineage
-                    # modes (round-3 advisor): a pid with no surviving
-                    # rows is OMITTED (as the collect-based path did),
-                    # not emitted as an all-zero observation row
-                    if (
-                        row["rows_upserted"]
-                        or row["rows_deleted"]
-                        or row["rows_late_ignored"]
-                        or row["bytes"]
-                    ):
-                        stats.append(row)
-            elif mode == "mor":
-                # no target read in MoR: upsert/delete split comes from the
-                # batch ops; late-vs-fresh classification is deferred to
-                # scan-time collapse (Iceberg MoR behaves the same way)
-                sp_col = (
-                    F.col(source_partition_col).cast("int") if has_sp else F.lit(None).cast("int")
-                )
-                blen = (
-                    F.octet_length("html") if "html" in batch_df.columns else F.lit(None).cast("int")
-                )
-                stats = (
-                    batch_df.select(
-                        sp_col.alias("pid"), "op", "seq", blen.alias("b"),
-                    )
-                    .groupBy("pid")
-                    .agg(
-                        F.count("*").alias("rows_applied"),
-                        F.min("seq").alias("first_seq"),
-                        F.max("seq").alias("last_seq"),
-                        F.sum(F.when(F.col("op") != "delete", 1).otherwise(0)).alias("rows_upserted"),
-                        F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("rows_deleted"),
-                        F.lit(None).cast("long").alias("rows_late_ignored"),
-                        F.coalesce(F.sum("b"), F.lit(0)).alias("bytes"),
-                    )
-                )
-                with phase("lineage_agg"):
-                    stats = stats.collect()
-            elif prepart:
-                # window-strategy direct-merge fallback: same outcome
-                # classification as the join path, read off the union+
-                # window relation (an extra job, exactly like the join
-                # fallback re-running the join on slim columns)
-                sp_col = F.col("_mpid")
-                outcome = (
-                    F.when(F.col("_rn") > 1, F.lit("late_ignored"))
-                    .when(F.col("_mop") == "delete", F.lit("deleted"))
-                    .when(F.col("_thit") == 0, F.lit("inserted"))
-                    .otherwise(F.lit("updated"))
-                )
-                stats = (
-                    u_win.where(F.col("_msrc"))
-                    .select(
-                        sp_col.alias("pid"), outcome.alias("oc"),
-                        F.col("_mseq").alias("seq"),
-                        (
-                            F.octet_length("html")
-                            if "html" in batch_df.columns
-                            else F.lit(None).cast("int")
-                        ).alias("b"),
-                    )
-                    .groupBy("pid")
-                    .agg(
-                        F.count("*").alias("rows_applied"),
-                        F.min("seq").alias("first_seq"),
-                        F.max("seq").alias("last_seq"),
-                        F.sum(F.when(F.col("oc").isin("inserted", "updated"), 1).otherwise(0)).alias("rows_upserted"),
-                        F.sum(F.when(F.col("oc") == "deleted", 1).otherwise(0)).alias("rows_deleted"),
-                        F.sum(F.when(F.col("oc") == "late_ignored", 1).otherwise(0)).alias("rows_late_ignored"),
-                        F.coalesce(F.sum("b"), F.lit(0)).alias("bytes"),
-                    )
-                )
-                with phase("lineage_agg"):
-                    stats = stats.collect()
-            else:
-                sp_col = (
-                    F.col(f"s.{source_partition_col}").cast("int")
-                    if has_sp
-                    else F.lit(None).cast("int")
-                )
-                outcome = (
-                    F.when(~s_newer, F.lit("late_ignored"))
-                    .when(F.col("s.op") == "delete", F.lit("deleted"))
-                    .when(~t_here, F.lit("inserted"))
-                    .otherwise(F.lit("updated"))
-                )
-                stats = (
-                    j.where(s_here)
-                    .select(
-                        sp_col.alias("pid"), outcome.alias("oc"),
-                        F.col("s.seq").alias("seq"),
-                        (
-                            F.octet_length(F.col("s.html"))
-                            if "html" in batch_df.columns
-                            else F.lit(None).cast("int")
-                        ).alias("b"),
-                    )
-                    .groupBy("pid")
-                    .agg(
-                        F.count("*").alias("rows_applied"),
-                        F.min("seq").alias("first_seq"),
-                        F.max("seq").alias("last_seq"),
-                        F.sum(F.when(F.col("oc").isin("inserted", "updated"), 1).otherwise(0)).alias("rows_upserted"),
-                        F.sum(F.when(F.col("oc") == "deleted", 1).otherwise(0)).alias("rows_deleted"),
-                        F.sum(F.when(F.col("oc") == "late_ignored", 1).otherwise(0)).alias("rows_late_ignored"),
-                        F.coalesce(F.sum("b"), F.lit(0)).alias("bytes"),
-                    )
-                )
-                with phase("lineage_agg"):
-                    stats = stats.collect()
-            latency_ms = (time.monotonic() - t0) * 1000.0
-            by_pid = {
-                (None if r["pid"] is None else int(r["pid"])): r for r in stats
-            }
-            in_by_pid = (
-                {s["partition_id"]: s for s in input_stats}
-                if input_stats is not None
-                else {
-                    pid: {
-                        "partition_id": pid,
-                        "rows_in": int(r["rows_applied"]),
-                        "rows_quarantined": 0,
-                        "first_seq": int(r["first_seq"]),
-                        "last_seq": int(r["last_seq"]),
-                        "bytes": None,
-                    }
-                    for pid, r in by_pid.items()
-                }
-            )
-            lineage_rows = []
-            for pid, ins in sorted(in_by_pid.items(), key=lambda kv: (kv[0] is None, kv[0])):
-                r = by_pid.get(pid)
-                lineage_rows.append(
-                    {
-                        "epoch_id": int(epoch_id),
-                        "partition_id": pid,
-                        "first_seq": int(ins["first_seq"]),
-                        "last_seq": int(ins["last_seq"]),
-                        "snapshot_id": snapshot_id,
-                        "rows_in": int(ins["rows_in"]),
-                        "rows_upserted": 0 if r is None else int(r["rows_upserted"]),
-                        "rows_deleted": 0 if r is None else int(r["rows_deleted"]),
-                        "rows_late_ignored": (
-                            0 if r is None
-                            else None if r["rows_late_ignored"] is None
-                            else int(r["rows_late_ignored"])
-                        ),
-                        "rows_quarantined": int(ins.get("rows_quarantined", 0)),
-                        # bytes applied (winner payload), measured off the
-                        # cached deduped batch — never a second wide scan
-                        "bytes": (
-                            int(r["bytes"])
-                            if r is not None and "bytes" in r
-                            else None if ins.get("bytes") is None else int(ins["bytes"])
-                        ),
-                        "apply_latency_ms": latency_ms,
-                    }
-                )
-
-        # -- metadata commit with optimistic-concurrency retry (the Iceberg
-        # commit-retry analog): a concurrent writer publishing first makes
-        # _write_manifest's exclusive create raise; re-read HEAD, no-op if
-        # the peer committed THIS epoch (drop our unreferenced data dir),
-        # else rebase the metadata plane onto the new head and try again.
-        # Data files never move — they are keyed by commit_id, and only a
-        # published manifest references them.
         max_races = 5
         for _race in range(max_races):
             ledger_entry = {
@@ -1892,16 +1633,16 @@ class SnapLake:
                 "version": version,
                 "table_uuid": man["table_uuid"],
                 "schema": new_schema.jsonValue(),
-                "n_buckets": n_buckets,
-                "mode": mode,
+                "n_buckets": man["n_buckets"],
+                "mode": plan.mode,
                 "key_blooms": man.get("key_blooms", False),
                 "file_groups": file_groups,
                 "parent": man["version"],
                 "summary": {
                     "commit_id": commit_id,
                     "epoch_id": int(epoch_id),
-                    "first_seq": ledger_entry["first_seq"],
-                    "last_seq": ledger_entry["last_seq"],
+                    "first_seq": lo,
+                    "last_seq": hi,
                     "touched_buckets": len(touched),
                     "files_written": len(new_files),
                 },
@@ -1937,7 +1678,7 @@ class SnapLake:
                 # narrower-or-equal and NULL-fill at read, same as any
                 # pre-evolution file)
                 new_schema = evolve_schema(
-                    T.StructType.fromJson(man["schema"]), incoming
+                    T.StructType.fromJson(man["schema"]), plan.incoming
                 )
                 version = man["version"] + 1
                 snapshot_id = f"v{version:08d}"
@@ -2019,8 +1760,6 @@ class SnapLake:
         out_rel = os.path.join("data", commit_id)
         out_abs = os.path.join(self.path, out_rel)
         if os.path.exists(out_abs):
-            import shutil
-
             shutil.rmtree(out_abs)
         # coverage-closure expansion: a bucket-class delta file covering a
         # requested bucket also holds rows of its OTHER residue-class
@@ -2186,8 +1925,6 @@ class SnapLake:
         out_rel = os.path.join("data", commit_id)
         out_abs = os.path.join(self.path, out_rel)
         if os.path.exists(out_abs):
-            import shutil
-
             shutil.rmtree(out_abs)
         files_in = self._files(man)
         est_rows = sum(int(f.get("rows") or 0) for f in files_in) or None

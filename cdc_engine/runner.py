@@ -144,8 +144,8 @@ def replay(
                 if fut is not None:
                     try:
                         p = fut.result()
-                        if p is not None and p.persisted is not None:
-                            p.persisted.unpersist()
+                        if p is not None:
+                            p.df.unpersist()
                     except Exception:
                         pass
     elif width <= 1 or len(todo) <= 1:

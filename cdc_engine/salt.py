@@ -43,10 +43,6 @@ def spread(df: DataFrame) -> DataFrame:
     of probing at all. The probe reads the JVM plan's partition count
     directly (queryExecution().toRdd() — metadata only, no job, and no
     Python-conversion layer in the probed plan)."""
-    import os
-
-    if os.environ.get("CDC_SPREAD") == "0":  # A/B escape hatch
-        return df
     memo = getattr(df, "_cdc_spread", None)
     if memo is True:
         return df  # this DataFrame is itself already spread

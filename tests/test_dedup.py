@@ -1,5 +1,4 @@
-"""W1 unit tests: LWW survivor selection, permutation invariance,
-strategy equivalence (maxby == window == salted)."""
+"""W1 unit tests: LWW survivor selection and permutation invariance."""
 
 from __future__ import annotations
 
@@ -33,14 +32,17 @@ def test_survivors(spark):
     assert got == {"a": (2, "a-v2"), "b": (5, "b-v1"), "c": (6, "c-v1")}
 
 
-@pytest.mark.parametrize("strategy,salt", [("maxby", 0), ("maxby", 4), ("window", 0)])
-def test_strategies_agree_and_permutation_invariant(spark, strategy, salt):
-    df = _events(spark)
-    base = sorted(lww_dedup(df, strategy="maxby").collect())
-    kb = sorted(lww_dedup(df.orderBy(F.rand(9)), strategy="keybroadcast").collect())
-    assert kb == base
-    got = sorted(lww_dedup(df.orderBy(F.rand(7)), strategy=strategy, salt_buckets=salt).collect())
-    assert got == base
+@pytest.mark.parametrize("seed", [3, 7, 11, 19, 42])
+def test_permutation_invariant(spark, seed):
+    """Any input order yields test_survivors' winners, payload included."""
+    df = _events(spark).orderBy(F.rand(seed)).repartition(3)
+    got = sorted((r["url"], r["seq"], r["text"]) for r in lww_dedup(df).collect())
+    assert got == [("a", 2, "a-v2"), ("b", 5, "b-v1"), ("c", 6, "c-v1")]
+
+
+def test_unknown_strategy_rejected(spark):
+    with pytest.raises(ValueError):
+        lww_dedup(_events(spark), strategy="maxby")
 
 
 def test_schema_preserved(spark):

@@ -1,9 +1,10 @@
-"""Regression guard for the per-epoch action budget: a MoR epoch must
+"""Regression guard for the per-epoch action budget: an epoch must
 trigger exactly ONE driver-side collect (the combined stats aggregate)
-plus the data write — the lineage aggregate must ride inside one of them
-(Observation / combined agg), never as its own collect. Every extra
-driver-side action is a job barrier that dilutes N->4N scaling
-efficiency (the serial term in BENCH/ANALYSIS_r3.md).
+plus the data write — the lineage aggregate must ride inside the write
+(Observation), never as its own collect. A direct ``lake.merge`` gets one
+narrow pre-aggregate collect for its input stats and touched buckets.
+Every extra driver-side action is a job barrier that dilutes N->4N
+scaling efficiency (the serial term in BENCH/ANALYSIS_r3.md).
 
 Jobs-per-action is AQE-dependent (each exchange stage is its own DAG
 job), so the guard counts ACTIONS, not jobs.
@@ -11,30 +12,21 @@ job), so the guard counts ACTIONS, not jobs.
 
 from __future__ import annotations
 
+import datetime as dt
+
+import pytest
+
 from cdc_engine import CdcConfig, SnapLake, apply_epoch
-from cdc_engine.schemas import PAGES_SCHEMA_V1
+from cdc_engine.schemas import PAGES_SCHEMA_V1, WAL_SCHEMA_V1
 from cdc_engine.source import read_seq_range
 from gen.walgen import WalConfig, generate_wal
 from tests.conftest import DOCS_SF0001
 
 
-def _collects_for_epoch(spark, tmp_path, mode, mor_write_dedup, tag, monkeypatch):
-    wal = str(tmp_path / f"wal_{tag}")
-    generate_wal(
-        wal,
-        WalConfig(n_events=1_000, events_per_epoch=1_000, docs_parquet=DOCS_SF0001),
-    )
-    lake = SnapLake.create(
-        str(tmp_path / f"lake_{tag}"), PAGES_SCHEMA_V1, n_buckets=8, mode=mode
-    )
-    cfg = CdcConfig(
-        events_per_epoch=1_000, n_buckets=8, mor_write_dedup=mor_write_dedup
-    )
-    batch = read_seq_range(spark, wal, 0, 1_000)
-
+def _count_collects(monkeypatch, df, fn):
     # patch the RUNTIME class (pyspark 4's classic.DataFrame overrides
     # collect, so patching the abstract pyspark.sql.DataFrame misses it)
-    cls = type(batch)
+    cls = type(df)
     calls = {"n": 0}
     real_collect = cls.collect
 
@@ -43,17 +35,62 @@ def _collects_for_epoch(spark, tmp_path, mode, mor_write_dedup, tag, monkeypatch
         return real_collect(self)
 
     monkeypatch.setattr(cls, "collect", counting)
-    r = apply_epoch(spark, lake, batch, epoch_id=0, cfg=cfg)
-    monkeypatch.undo()
+    try:
+        r = fn()
+    finally:
+        monkeypatch.undo()
     assert r is not None
     return calls["n"]
 
 
-def test_mor_eager_epoch_is_one_collect(spark, tmp_path, monkeypatch):
-    assert _collects_for_epoch(spark, tmp_path, "mor", True, "eager", monkeypatch) == 1
-
-
-def test_mor_deferred_epoch_is_one_collect(spark, tmp_path, monkeypatch):
-    assert (
-        _collects_for_epoch(spark, tmp_path, "mor", False, "deferred", monkeypatch) == 1
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_apply_epoch_is_one_collect(spark, tmp_path, monkeypatch, mode):
+    wal = str(tmp_path / "wal")
+    generate_wal(
+        wal,
+        WalConfig(n_events=1_000, events_per_epoch=1_000, docs_parquet=DOCS_SF0001),
     )
+    lake = SnapLake.create(str(tmp_path / "lake"), PAGES_SCHEMA_V1, n_buckets=8, mode=mode)
+    cfg = CdcConfig(events_per_epoch=1_000, n_buckets=8)
+    batch = read_seq_range(spark, wal, 0, 1_000)
+    n = _count_collects(
+        monkeypatch, batch, lambda: apply_epoch(spark, lake, batch, epoch_id=0, cfg=cfg)
+    )
+    assert n == 1
+
+
+def _wal_batch(spark, rows):
+    ts = dt.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [
+            (seq, op, url, ts + dt.timedelta(seconds=seq),
+             None if op == "delete" else f"<{url}>".encode(),
+             None if op == "delete" else f"text {seq}", "en", pid)
+            for seq, op, url, pid in rows
+        ],
+        WAL_SCHEMA_V1,
+    )
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_direct_merge_is_one_collect(spark, tmp_path, monkeypatch, mode):
+    """A direct merge resolves input stats and touched buckets with one
+    narrow pre-aggregate and its lineage from the write job's
+    Observation; the lineage rows are those the three-collect route wrote
+    (pid, rows_in, upserted, deleted, late_ignored)."""
+    lake = SnapLake.create(str(tmp_path / "lake"), PAGES_SCHEMA_V1, n_buckets=8, mode=mode)
+    e0 = _wal_batch(spark, [(1, "insert", "u/a", 0), (2, "insert", "u/b", 1)])
+    assert lake.merge(spark, e0, epoch_id=0) is not None
+    e1 = _wal_batch(
+        spark,
+        [(3, "update", "u/a", 0), (4, "delete", "u/b", 1), (5, "insert", "u/c", 1)],
+    )
+    n = _count_collects(monkeypatch, e1, lambda: lake.merge(spark, e1, epoch_id=1))
+    assert n == 1
+    late = 0 if mode == "cow" else None
+    got = [
+        (r["partition_id"], r["rows_in"], r["rows_upserted"], r["rows_deleted"],
+         r["rows_late_ignored"], r["first_seq"], r["last_seq"])
+        for r in lake.manifest()["lineage"]
+    ]
+    assert got == [(0, 1, 1, 0, late, 3, 3), (1, 2, 1, 1, late, 4, 5)]

@@ -1,12 +1,9 @@
-"""J6: salted repartitioning on hash(url) defuses hot-domain skew, and the
-salted dedup path is result-identical to the unsalted one (SURVEY.md §4
-invariant 3: salting never changes LWW semantics)."""
+"""J6: repartitioning on hash(url) defuses hot-domain skew."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cdc_engine.dedup import lww_dedup
 from cdc_engine.salt import partition_balance
 from cdc_engine.source import list_segments, read_segments
 from cdc_engine.schemas import WAL_SCHEMA_V1
@@ -33,11 +30,3 @@ def test_hash_url_defuses_domain_skew(spark, wal_basic):
     assert url_ratio < 1.5, f"url-hash partitions skewed: {url_counts}"
     assert url_ratio < dom_ratio, "salting should beat domain partitioning"
 
-
-def test_salted_dedup_equals_unsalted(spark, wal_basic):
-    df = _wal_df(spark, wal_basic)
-    a = lww_dedup(df, salt_buckets=0)
-    # salting is a maxby-strategy feature (two-level hash agg); the default
-    # strategy is now "window", so pin maxby to actually exercise the salt
-    b = lww_dedup(df, strategy="maxby", salt_buckets=8)
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
