@@ -7,8 +7,8 @@ pointing at teragrep/cfe_39) with an idiomatic Spark design:
 
     WAL tail (Structured Streaming / bounded replay)
       -> schema normalize (unionByName + cast widening)
-      -> last-writer-wins dedup (url keyed, ordered by (warc_ts, seq))
-      -> salted repartition on hash(url)
+      -> last-writer-wins dedup (url keyed, ordered by (warc_ts, seq);
+         its window shuffle hash-partitions on url)
       -> MERGE into a snapshot-versioned lake table (SnapLake: bucketed
          parquet data files + atomic JSON manifest commits, the in-sandbox
          stand-in for Iceberg; IcebergLake wraps real Iceberg SQL when jars

@@ -1,9 +1,12 @@
 """apply_epoch: the whole CDC apply for one micro-batch (SURVEY.md §3.1).
 
 Pure function of (batch contents, epoch_id, lake state): normalize ->
-validate/quarantine -> LWW dedup -> salted repartition -> MERGE (which
-atomically commits data + ledger + lineage). Both the streaming path
-(foreachBatch) and the deterministic replay path call exactly this.
+validate/quarantine -> LWW dedup (its window hash-partitions on url) ->
+MERGE (which atomically commits data + ledger + lineage). It is
+``commit_epoch(prepare_epoch(...))``: the prepare is state-independent,
+the commit reads or publishes table state. The streaming path
+(foreachBatch) calls apply_epoch; the deterministic replay path runs the
+two halves itself, prepares ahead and commits in epoch order.
 
 Ledger identity: the ledger keys on epoch_id, but replay numbers epochs by
 seq range while streaming uses Spark batch ids — and both share one lake
@@ -25,9 +28,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdc_engine.config import CdcConfig
 from cdc_engine.dedup import lww_dedup
-from cdc_engine.lake import VALID_SQL, SnapLake, input_stats_from, observe_input
+from cdc_engine.lake import (
+    VALID_SQL,
+    SnapLake,
+    StagedMerge,
+    batch_input_stats,
+    input_stats_from,
+    observe_input,
+)
 from cdc_engine.normalize import apply_mapping
-from cdc_engine.salt import bucket_expr, salted_repartition
 from cdc_engine.timing import phase
 
 
@@ -84,8 +93,9 @@ def apply_epoch(
     pid_bounds: tuple[int, int] | None = None,
     batch_seq_range: tuple[int, int] | None = None,
 ) -> dict[str, Any] | None:
-    """Apply one epoch; returns commit stats, or None if the epoch was
-    already committed / the batch is empty (both are safe no-ops).
+    """Apply one epoch — ``commit_epoch(prepare_epoch(...))``; returns
+    commit stats, or None if the epoch was already committed / the batch
+    is empty (both are safe no-ops).
 
     ``expected_seq_range``: the [lo, hi) seq window this epoch id is
     DEFINED to own (the replay path knows it without any Spark work);
@@ -106,9 +116,56 @@ def apply_epoch(
     AND an expected seq window, a MoR epoch takes the ZERO-EXTRA-JOB fast
     path: input stats, quarantine counts, touched buckets, and lineage all
     ride the write job's Observation, so the epoch is exactly ONE Spark
-    job (the delta write). Every job barrier is pure serial time at any
-    cluster size — this removes one of the two MoR ingest barriers.
+    job (the delta write). With it, a COW epoch's prepare is ONE job: its
+    stats ride an Observation on the winners-cache materialization. Every
+    job barrier is pure serial time at any cluster size.
     """
+    prep = prepare_epoch(
+        spark, lake, batch_df, epoch_id, cfg, quarantine_dir,
+        expected_seq_range, pid_bounds, batch_seq_range,
+    )
+    return None if prep is None else commit_epoch(spark, lake, prep)
+
+
+class PreparedEpoch:
+    """A prepared COW epoch: everything computed about it BEFORE the
+    merge — all of it a pure function of the batch contents, independent
+    of table state. ``df`` is the persisted LWW winners; ``commit_epoch``
+    merges and unpersists it, ``discard_epoch`` only unpersists it."""
+
+    __slots__ = ("epoch_id", "df", "input_stats", "touched")
+
+    def __init__(self, epoch_id, df, input_stats, touched):
+        self.epoch_id = epoch_id
+        self.df = df
+        self.input_stats = input_stats
+        self.touched = touched
+
+
+def prepare_epoch(
+    spark: SparkSession,
+    lake: SnapLake,
+    batch_df: DataFrame,
+    epoch_id: int,
+    cfg: CdcConfig | None = None,
+    quarantine_dir: str | None = None,
+    expected_seq_range: tuple[int, int] | None = None,
+    pid_bounds: tuple[int, int] | None = None,
+    batch_seq_range: tuple[int, int] | None = None,
+) -> PreparedEpoch | StagedMerge | None:
+    """The state-INDEPENDENT half of ``apply_epoch`` (same arguments),
+    safe to run ahead of earlier epochs' commits. None for an empty or
+    already-committed epoch (a ledger hit is verified first).
+
+    COW: normalize, quarantine, LWW dedup into a persisted winners cache
+    (a ``PreparedEpoch``); the merge reads the table the previous commit
+    leaves, so it belongs to the commit. MoR: everything a merge does
+    before publishing — plan, delta write, lineage resolve (a lake
+    ``StagedMerge``); a delta never reads table state.
+
+    Routes: the MoR fast path when ``expected_seq_range`` and
+    ``pid_bounds`` are known; the COW one-job prepare whenever
+    ``pid_bounds`` is known; the stats-job collect otherwise."""
     cfg = cfg or CdcConfig()
     if quarantine_dir is None:
         quarantine_dir = cfg.quarantine_dir
@@ -121,44 +178,52 @@ def apply_epoch(
         return None
 
     df = apply_mapping(batch_df, cfg.column_mapping)
-
-    if (
-        expected_seq_range is not None
-        and pid_bounds is not None
-        and man.get("mode", "cow") == "mor"
-    ):
-        return _apply_mor_fast(
-            spark, lake, df, epoch_id, cfg, quarantine_dir,
-            expected_seq_range, pid_bounds, man,
+    mor = man.get("mode", "cow") == "mor"
+    if mor and expected_seq_range is not None and pid_bounds is not None:
+        return _stage_mor_fast(
+            spark, lake, df, epoch_id, quarantine_dir, expected_seq_range, pid_bounds
         )
+    if not mor and entry is None and pid_bounds is not None:
+        return _prepare_cow_one_job(df, epoch_id, quarantine_dir, man, pid_bounds)
+    prep = _prepare_stats_job(df, epoch_id, quarantine_dir, man, entry)
+    if prep is None or not mor:
+        return prep
+    try:
+        with phase("merge_total"):
+            return lake._merge_stage(
+                spark, prep.df, epoch_id, input_stats=prep.input_stats,
+                touched_buckets=prep.touched,
+            )
+    finally:
+        prep.df.unpersist()  # the delta write has consumed the winners
 
-    prep = prepare_epoch(
-        spark, lake, df, epoch_id, cfg, quarantine_dir, man=man, entry=entry
-    )
-    if prep is None:
-        return None
-    return commit_prepared(spark, lake, prep)
+
+def commit_epoch(
+    spark: SparkSession, lake: SnapLake, prep: PreparedEpoch | StagedMerge
+) -> dict[str, Any] | None:
+    """The state-DEPENDENT half of ``apply_epoch``; replay runs it on one
+    thread in epoch order. COW: merge the winners into the touched
+    buckets (the target read sees the previous commit). MoR: publish the
+    staged delta."""
+    if isinstance(prep, StagedMerge):
+        with phase("merge_total"):
+            return lake._merge_publish(prep)
+    try:
+        with phase("merge_total"):
+            return lake.merge(
+                spark, prep.df, prep.epoch_id, input_stats=prep.input_stats,
+                touched_buckets=prep.touched,
+            )
+    finally:
+        discard_epoch(prep)
 
 
-class PreparedEpoch:
-    """Everything the stats-job path computes about one epoch BEFORE the
-    merge — all of it a pure function of the batch contents, independent
-    of table state. Produced by ``prepare_epoch`` (runs the combined stats
-    job + rare quarantine write), consumed by ``commit_prepared`` (runs
-    the state-dependent merge/commit). The split exists so a COW replay
-    can overlap epoch k+1's preparation with epoch k's merge (round-4
-    verdict task 4): COW merges must stay strictly ordered (the target
-    read depends on the previous commit), but nothing in here does.
-    ``df`` is the persisted LWW winners; ``commit_prepared`` unpersists
-    it."""
-
-    __slots__ = ("epoch_id", "df", "input_stats", "touched")
-
-    def __init__(self, epoch_id, df, input_stats, touched):
-        self.epoch_id = epoch_id
-        self.df = df
-        self.input_stats = input_stats
-        self.touched = touched
+def discard_epoch(prep: PreparedEpoch | StagedMerge) -> None:
+    """Release a prepared epoch that will not be committed: unpersist a
+    COW epoch's winners cache. A staged MoR epoch holds no cache; its
+    unreferenced commit dir is debris the epoch's next stage clears."""
+    if isinstance(prep, PreparedEpoch):
+        prep.df.unpersist()
 
 
 def _footer_pids(df: DataFrame, pid_bounds: tuple[int, int]) -> list[int | None]:
@@ -170,103 +235,41 @@ def _footer_pids(df: DataFrame, pid_bounds: tuple[int, int]) -> list[int | None]
     return list(range(pid_bounds[0], pid_bounds[1] + 1))
 
 
-def prepare_epoch(
-    spark: SparkSession,
-    lake: SnapLake,
-    df: DataFrame,
-    epoch_id: int,
-    cfg: CdcConfig,
-    quarantine_dir: str | None,
-    man: dict | None = None,
-    entry: dict | None = ...,
-    materialize: bool = False,
-    pid_bounds: tuple[int, int] | None = None,
-) -> PreparedEpoch | None:
-    """The state-independent half of the stats-job apply path: combined
-    stats aggregate, quarantine write, LWW dedup plan, persist. Returns
-    None for empty/already-committed epochs (after verifying a ledger hit
-    against the batch's actual seq range). ``materialize`` additionally
-    forces the persisted winners to materialize NOW (one count action) so
-    a prefetching caller pulls the dedup shuffle into the overlap window,
-    not just the stats job.
-
-    ``pid_bounds``: WAL-footer (min, max) source_partition bound. With it
-    (and ``materialize``), the COW prepare runs as exactly ONE Spark job
-    (round 7, same lever _apply_mor_fast gave MoR a round earlier): the
-    per-pid input stats, quarantine counts and touched-bucket set ride an
-    Observation on the raw batch BELOW the valid-filter + LWW dedup, and
-    the cache-materializing count is the only action — the separate
-    pre-dedup stats job (a full extra job barrier AND a second WAL scan
-    per epoch) disappears. Quarantined rows are persisted in one extra job
-    on that rare path only, still before the commit."""
-    if man is None:
-        man = lake.manifest()
-    if entry is ...:
-        entry = lake.ledger_entry(epoch_id, man)
-
-    if (
-        materialize
-        and pid_bounds is not None
-        and entry is None
-        and cfg.quarantine_invalid
-        and man.get("mode", "cow") == "cow"
-    ):
-        return _prepare_cow_one_job(
-            spark, lake, df, epoch_id, cfg, quarantine_dir, man, pid_bounds
+def _write_quarantine(df: DataFrame, quarantine_dir: str | None, epoch_id: int) -> None:
+    """Persist the batch's invalid rows (rare path; always before the
+    commit). Without a quarantine dir they are only counted in lineage."""
+    if quarantine_dir is not None:
+        df.where(~F.expr(VALID_SQL)).write.mode("append").parquet(
+            os.path.join(quarantine_dir, f"epoch={epoch_id}")
         )
 
-    # P4: null-safe key guard — LWW is undefined for null url/warc_ts/seq
-    valid = F.expr(VALID_SQL)
 
-    # ONE pre-dedup aggregate job computes everything the commit needs from
-    # the raw batch: per-source-partition input stats (ledger/lineage must
-    # record the FULL consumed offset range — including quarantined rows —
-    # S6/S7), emptiness, quarantine counts, and the set of touched lake
-    # buckets (saves merge a separate distinct-buckets job). It is
-    # deliberately NARROW (seq, source_partition, validity, url hash —
-    # lineage comes later from the merge's write-job Observation).
-    n_buckets = man["n_buckets"]
-    sp = F.col("source_partition").cast("int") if "source_partition" in df.columns else F.lit(None).cast("int")
-    stats_query = df.groupBy(sp.alias("pid")).agg(
-        F.count("*").alias("rows_seen"),
-        F.sum(F.when(valid, 0).otherwise(1)).alias("rows_quarantined"),
-        F.min("seq").alias("first_seq"),
-        F.max("seq").alias("last_seq"),
-        # bucket only for valid rows: xxhash64(NULL) is the seed (42),
-        # so a null url would otherwise smuggle in a phantom bucket
-        F.collect_set(F.when(valid, bucket_expr("url", n_buckets))).alias("buckets"),
-    )
+def _prepare_stats_job(
+    df: DataFrame,
+    epoch_id: int,
+    quarantine_dir: str | None,
+    man: dict,
+    entry: dict | None,
+) -> PreparedEpoch | None:
+    """The stats-job prepare: ONE narrow pre-dedup aggregate
+    (``batch_input_stats``) gives the per-source-partition input stats
+    (ledger/lineage record the FULL consumed offset range — including
+    quarantined rows — S6/S7), emptiness, quarantine counts and the
+    touched buckets; then the quarantine write and the persisted LWW
+    winners. A ledger hit is verified against the batch's seq span."""
     with phase("stats_agg"):
-        stats_rows = stats_query.collect()
-    if not stats_rows:
+        input_stats, touched = batch_input_stats(df, man["n_buckets"])
+    if not input_stats:
         return None
-    seqs_lo = [int(r["first_seq"]) for r in stats_rows if r["first_seq"] is not None]
-    seqs_hi = [int(r["last_seq"]) for r in stats_rows if r["last_seq"] is not None]
     if entry is not None:
         # streaming re-delivery: verify contents before honoring the skip
-        if seqs_lo and seqs_hi:
-            _verify_ledger_hit(entry, epoch_id, (min(seqs_lo), max(seqs_hi)), None)
+        los = [s["first_seq"] for s in input_stats if s["first_seq"] is not None]
+        his = [s["last_seq"] for s in input_stats if s["last_seq"] is not None]
+        if los and his:
+            _verify_ledger_hit(entry, epoch_id, (min(los), max(his)), None)
         return None
-    input_stats = [
-        {
-            "partition_id": None if r["pid"] is None else int(r["pid"]),
-            "rows_in": int(r["rows_seen"]) - int(r["rows_quarantined"]),
-            "rows_quarantined": int(r["rows_quarantined"]),
-            "first_seq": None if r["first_seq"] is None else int(r["first_seq"]),
-            "last_seq": None if r["last_seq"] is None else int(r["last_seq"]),
-        }
-        for r in stats_rows
-    ]
-    touched = sorted({int(b) for r in stats_rows for b in r["buckets"]})
-
-    if cfg.quarantine_invalid:
-        if quarantine_dir is not None and any(
-            s["rows_quarantined"] for s in input_stats
-        ):
-            df.where(~valid).write.mode("append").parquet(
-                os.path.join(quarantine_dir, f"epoch={epoch_id}")
-            )
-        df = df.where(valid)
+    if any(s["rows_quarantined"] for s in input_stats):
+        _write_quarantine(df, quarantine_dir, epoch_id)
     if not touched:
         return None  # every row was quarantined; nothing to commit
 
@@ -275,50 +278,36 @@ def prepare_epoch(
     # SURVEY.md §4 inv. 1). A MoR delta would tolerate multiplicity, but
     # deduping first collapses an update-heavy epoch ~100x BEFORE the wide
     # parquet write (measured 14.0 s eager vs 66.2 s writing the raw batch,
-    # 12M events / 8 pinned cores).
-    df = lww_dedup(df)
-
-    # J6: optional explicit pre-merge shuffle on hash(url); the dedup above
-    # already leaves the batch hash-partitioned on url, so default is off
-    if cfg.repartition_urls:
-        df = salted_repartition(df, "url", cfg.repartition_urls)
-
+    # 12M events / 8 pinned cores). The dedup's window leaves the winners
+    # hash-partitioned on url (J6).
     # cache the winners: the merge's write job consumes them (otherwise the
     # dedup shuffle re-runs per job)
-    df = df.persist()
-    if materialize:
-        # prefetch mode: pull the dedup shuffle (WAL read + LWW window +
-        # cache write) into the caller's overlap window with one count —
-        # a cache scan materializes whole partitions regardless of column
-        # pruning; the later merge's write job then reads straight from
-        # the cache
-        with phase("prefetch_materialize"):
-            df.count()
-    return PreparedEpoch(epoch_id, df, input_stats, touched)
+    winners = lww_dedup(df.where(F.expr(VALID_SQL))).persist()
+    return PreparedEpoch(epoch_id, winners, input_stats, touched)
 
 
 def _prepare_cow_one_job(
-    spark: SparkSession,
-    lake: SnapLake,
     df: DataFrame,
     epoch_id: int,
-    cfg: CdcConfig,
     quarantine_dir: str | None,
     man: dict,
     pid_bounds: tuple[int, int],
 ) -> PreparedEpoch | None:
-    """ONE-JOB COW prepare (see prepare_epoch docstring): input stats /
-    quarantine counts / touched buckets ride an Observation on the raw
-    batch; the winners-cache materialization count is the only job."""
+    """ONE-JOB COW prepare (round 7, the lever ``_stage_mor_fast`` gave
+    MoR a round earlier): the per-pid input stats, quarantine counts and
+    touched-bucket set ride an Observation on the raw batch BELOW the
+    valid-filter + LWW dedup, and the winners-cache materializing count is
+    the only action — no separate pre-dedup stats job (a full job barrier
+    AND a second WAL scan per epoch). Quarantined rows are persisted in
+    one extra job on that rare path only, still before the commit."""
     pids = _footer_pids(df, pid_bounds)
     observed, obs = observe_input(
         df, f"prep_e{epoch_id}", pids, n_buckets=man["n_buckets"]
     )
-    winners = lww_dedup(observed.where(F.expr(VALID_SQL)))
-    if cfg.repartition_urls:
-        winners = salted_repartition(winners, "url", cfg.repartition_urls)
-    winners = winners.persist()
+    winners = lww_dedup(observed.where(F.expr(VALID_SQL))).persist()
     with phase("prepare_one_job"):
+        # a cache scan materializes whole partitions regardless of column
+        # pruning; the merge's write job then reads straight from the cache
         winners.count()
     vals = obs.get
     input_stats = input_stats_from(vals, pids, epoch_id)
@@ -326,51 +315,29 @@ def _prepare_cow_one_job(
         winners.unpersist()
         return None
     touched = sorted(int(b) for b in (vals["_buckets"] or []))
-    if quarantine_dir is not None and any(s["rows_quarantined"] for s in input_stats):
-        # rare path: persist quarantined rows in one extra job, before
-        # the commit (same ordering as the stats-job path)
-        df.where(~F.expr(VALID_SQL)).write.mode("append").parquet(
-            os.path.join(quarantine_dir, f"epoch={epoch_id}")
-        )
+    if any(s["rows_quarantined"] for s in input_stats):
+        _write_quarantine(df, quarantine_dir, epoch_id)
     if not touched:
         winners.unpersist()
         return None  # every row was quarantined; nothing to commit
     return PreparedEpoch(epoch_id, winners, input_stats, touched)
 
 
-def commit_prepared(
-    spark: SparkSession, lake: SnapLake, prep: PreparedEpoch
-) -> dict[str, Any] | None:
-    """State-DEPENDENT half: the merge/commit of a prepared epoch. For COW
-    this reads the target table, so it must run strictly after the
-    previous epoch's commit."""
-    try:
-        with phase("merge_total"):
-            return lake.merge(
-                spark, prep.df, prep.epoch_id, input_stats=prep.input_stats,
-                touched_buckets=prep.touched,
-            )
-    finally:
-        prep.df.unpersist()
-
-
-def _apply_mor_fast(
+def _stage_mor_fast(
     spark: SparkSession,
     lake: SnapLake,
     df: DataFrame,
     epoch_id: int,
-    cfg: CdcConfig,
     quarantine_dir: str | None,
     expected_seq_range: tuple[int, int],
     pid_bounds: tuple[int, int],
-    man: dict,
-) -> dict[str, Any] | None:
-    """MoR replay epoch as exactly ONE Spark job: an input Observation on
-    the raw batch computes — per source partition, map-side — the input
-    stats (rows/quarantined/seq range), and the merge's own lineage
-    Observation on the written winners adds the lineage split and the
-    touched-bucket set, so the pre-commit stats job (one full job barrier
-    + one extra WAL scan per epoch) disappears.
+) -> StagedMerge | None:
+    """MoR epoch as exactly ONE Spark job: an input Observation on the raw
+    batch computes — per source partition, map-side — the input stats
+    (rows/quarantined/seq range), and the merge's own lineage Observation
+    on the written winners adds the lineage split and the touched-bucket
+    set, so the pre-commit stats job (one full job barrier + one extra
+    WAL scan per epoch) disappears.
 
     Quarantined rows are filtered before the write; if the Observation
     reports any, they are persisted in one extra job on that rare path
@@ -378,20 +345,13 @@ def _apply_mor_fast(
     pids = _footer_pids(df, pid_bounds)
     observed, obs_in = observe_input(df, f"fast_in_e{epoch_id}", pids)
     winners = lww_dedup(observed.where(F.expr(VALID_SQL)))
-
-    def quarantine_writer() -> None:
-        if cfg.quarantine_invalid and quarantine_dir is not None:
-            df.where(~F.expr(VALID_SQL)).write.mode("append").parquet(
-                os.path.join(quarantine_dir, f"epoch={epoch_id}")
-            )
-
     with phase("merge_total"):
-        return lake.merge(
+        return lake._merge_stage(
             spark,
             winners,
             epoch_id,
             fast_obs=obs_in,
             fast_pids=pids,
             est_rows=expected_seq_range[1] - expected_seq_range[0],
-            quarantine_writer=quarantine_writer,
+            quarantine_writer=lambda: _write_quarantine(df, quarantine_dir, epoch_id),
         )

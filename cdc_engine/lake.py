@@ -74,6 +74,7 @@ import time
 import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
+from functools import lru_cache
 from typing import Any
 
 import pyarrow.parquet as pq
@@ -113,13 +114,22 @@ def _entry_covers(f: dict, n_buckets: int, buckets) -> bool:
 
 
 def _load_side_json(path: str):
-    """Read-cache for immutable metadata side files (per-commit bundles,
-    plus any standalone legacy files). Safe to cache: side files are
-    content-deterministic, written via fsync+rename BEFORE the manifest
-    referencing them, and their names embed the table uuid + commit id, so
-    a re-created table at the same path can never alias a stale cache
-    entry."""
-    return _load_side_json_cached(path)
+    """Read-cache for metadata side files (per-commit bundles, plus any
+    standalone legacy files), keyed on the file's identity — path, inode,
+    mtime and size — not on its path alone. Bundle paths repeat: a commit
+    id hashes ``table_uuid:epoch_id``, so re-applying an epoch after a
+    rollback or crash, or into a copy or restore of a lake at a path the
+    process already read, writes new content (new Spark part-file names)
+    at an old path. Every side file is written by rename, so a rewrite is
+    a new inode and misses the cache."""
+    st = os.stat(path)
+    return _load_side_json_at(path, st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+@lru_cache(maxsize=512)
+def _load_side_json_at(path: str, _ino: int, _mtime_ns: int, _size: int):
+    with open(path) as f:
+        return json.load(f)
 
 
 class _SideBundle:
@@ -138,18 +148,6 @@ class _SideBundle:
         """Store ``obj`` under ``member``; returns the manifest ref."""
         self.members[member] = obj
         return {"path": self.rel_path, "member": member}
-
-
-def _lru(fn):
-    from functools import lru_cache
-
-    return lru_cache(maxsize=512)(fn)
-
-
-@_lru
-def _load_side_json_cached(path: str):
-    with open(path) as f:
-        return json.load(f)
 
 
 _LEDGER_SCHEMA = T.StructType(
@@ -187,9 +185,7 @@ class _MergePlan:
 
     man: dict
     mode: str
-    version: int
     incoming: T.StructType
-    new_schema: T.StructType
     out: DataFrame  # bucket-partitioned, url-sorted rows to write
     obs: Any  # lineage Observation the write job fills
     pids: list
@@ -198,6 +194,22 @@ class _MergePlan:
     commit_id: str
     out_rel: str
     out_abs: str
+
+
+@dataclass
+class StagedMerge:
+    """A merge whose data files are written and whose lineage is resolved,
+    but which no manifest references yet: ``SnapLake._merge_stage``'s
+    result and ``SnapLake._merge_publish``'s input."""
+
+    plan: _MergePlan
+    epoch_id: int
+    new_files: list[dict]
+    touched: list[int]
+    lineage_rows: list[dict]
+    first_seq: int | None
+    last_seq: int | None
+    t0: float  # stage start, for apply_latency_ms
 
 
 # LWW is undefined for a null url/warc_ts/seq: such rows are quarantined
@@ -277,32 +289,39 @@ def input_stats_from(vals, pids: list, epoch_id: int) -> list[dict] | None:
     ]
 
 
-def _batch_input_stats(batch_df: DataFrame, n_buckets: int) -> tuple[list[dict], list[int]]:
-    """Input stats and touched buckets of a direct ``merge`` call's batch:
-    ONE narrow per-pid aggregate (Catalyst prunes the payload out of the
-    scan), the merge's only collect."""
+def batch_input_stats(df: DataFrame, n_buckets: int) -> tuple[list[dict], list[int]]:
+    """Per-source-partition input stats and the touched buckets of a
+    batch, from ONE narrow per-pid aggregate and collect (Catalyst prunes
+    the payload out of the scan): rows seen and quarantined (``VALID_SQL``
+    fails), the seq span, and the buckets the valid rows hash to. The
+    Observation counterpart is ``observe_input``/``input_stats_from``.
+    Returns ([], []) for an empty batch."""
+    valid = F.expr(VALID_SQL)
     sp = (
         F.col("source_partition").cast("int")
-        if "source_partition" in batch_df.columns
+        if "source_partition" in df.columns
         else F.lit(None).cast("int")
     )
     rows = (
-        batch_df.groupBy(sp.alias("pid"))
+        df.groupBy(sp.alias("pid"))
         .agg(
             F.count("*").alias("n"),
+            F.sum(F.when(valid, 0).otherwise(1)).alias("q"),
             F.min("seq").alias("lo"),
             F.max("seq").alias("hi"),
-            F.collect_set(bucket_expr("url", n_buckets)).alias("buckets"),
+            # bucket only for valid rows: xxhash64(NULL) is the seed (42),
+            # so a null url would otherwise smuggle in a phantom bucket
+            F.collect_set(F.when(valid, bucket_expr("url", n_buckets))).alias("buckets"),
         )
         .collect()
     )
     input_stats = [
         {
             "partition_id": None if r["pid"] is None else int(r["pid"]),
-            "rows_in": int(r["n"]),
-            "rows_quarantined": 0,
-            "first_seq": int(r["lo"]),
-            "last_seq": int(r["hi"]),
+            "rows_in": int(r["n"]) - int(r["q"]),
+            "rows_quarantined": int(r["q"]),
+            "first_seq": None if r["lo"] is None else int(r["lo"]),
+            "last_seq": None if r["hi"] is None else int(r["hi"]),
         }
         for r in rows
     ]
@@ -473,15 +492,7 @@ class SnapLake:
         after the target — the CDC undo story (bad epochs re-ingested
         cleanly, deterministic commit dirs left no debris). O(data files
         of the abandoned commits), zero Spark jobs. Refuses to cross a
-        tag (drop the tag first); single-writer assumption as in merge.
-
-        Invalidate the side-bundle LRU: that cache is sound because side
-        files are immutable, and rollback is the ONE operation that breaks
-        the contract — a re-applied epoch reuses its deterministic bundle
-        path with new content, so a stale cached copy would resurrect the
-        deleted commit's file list. The clear happens LAST — rollback's own
-        referenced_paths walk re-populates the cache with the abandoned
-        bundles it is about to delete."""
+        tag (drop the tag first); single-writer assumption as in merge."""
         tv = self._resolve_version(to_version)
         head = self.head_version()
         if tv > head:
@@ -528,7 +539,6 @@ class SnapLake:
         for dirpath, dirs, names in os.walk(self.data_dir, topdown=False):
             if not dirs and not names and dirpath != self.data_dir:
                 os.rmdir(dirpath)
-        _load_side_json_cached.cache_clear()
         return {
             "version": tv,
             "removed_manifests": removed_man,
@@ -737,7 +747,6 @@ class SnapLake:
             os.remove(self._manifest_path(version))
         except FileNotFoundError:
             pass  # the peer's HEAD swap and our check raced
-        _load_side_json_cached.cache_clear()
         return True
 
     def schema(self, version: int | None = None) -> T.StructType:
@@ -753,20 +762,12 @@ class SnapLake:
         HEAD swap, making every pending side-file rename durable before the
         manifest that references them can become visible."""
         ap = os.path.join(self.path, rel)
-        overwrite = os.path.exists(ap)
         tmp = f"{ap}.tmp.{os.getpid()}"
         with open(tmp, "w") as f:
             json.dump(obj, f)
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, ap)
-        if overwrite:
-            # the LRU assumes side files are immutable; an overwrite (crash
-            # retry, or re-applying an epoch onto rollback/crash debris at
-            # its deterministic path) breaks that — drop the cache so no
-            # reader resurrects the superseded content. Never taken on the
-            # happy path: fresh commits use never-before-seen paths.
-            _load_side_json_cached.cache_clear()
 
     # ------------------------------------------------------------- ledger
     def _resolve_ref(self, ref):
@@ -1256,10 +1257,6 @@ class SnapLake:
         epoch_id: int,
         input_stats: list[dict] | None = None,
         touched_buckets: list[int] | None = None,
-        fast_obs=None,
-        fast_pids: list | None = None,
-        est_rows: int | None = None,
-        quarantine_writer=None,
     ) -> dict[str, Any] | None:
         """CDC-apply one deduped micro-batch (S4/J1). Returns commit stats,
         or None when ``epoch_id`` is already in the ledger (idempotence, J4).
@@ -1267,35 +1264,55 @@ class SnapLake:
         ``batch_df`` must be one-row-per-url (run dedup.lww_dedup first —
         invariant 1 of SURVEY.md §4) with WAL columns (seq, op, payload...).
 
-        Four steps: ``_merge_plan`` (schema evolution, conform, the per-mode
-        result relation carrying the lineage Observation), ``_merge_write``
-        (debris check, parquet write, footer stats), ``_merge_resolve``
-        (the write job's Observations become input stats, touched buckets
-        and lineage rows) and ``_merge_publish`` (optimistic commit).
-
         ``input_stats`` / ``touched_buckets``: pre-dedup per-source-
         partition rows ``{partition_id, rows_in, rows_quarantined,
         first_seq, last_seq}`` and the touched-bucket set, from
         apply_epoch's prepare, so ledger/lineage record the FULL consumed
-        offset range, not just LWW winners. Direct callers omit both; one
-        narrow per-pid aggregate over the batch then supplies them.
+        offset range, not just LWW winners. Direct callers omit both;
+        ``batch_input_stats`` then supplies them.
 
-        ``fast_obs``/``fast_pids``: the MoR replay fast path (apply.
-        _apply_mor_fast) — an input Observation (``observe_input``)
-        already attached below ``batch_df``, and the footer-bound pid
-        list. The write is then the epoch's ONLY job; input stats and the
-        touched-bucket set are resolved from the Observations afterwards.
-        ``est_rows`` sizes the adaptive fanout (the expected seq-window
-        width — exact for a dense WAL); ``quarantine_writer`` is invoked
-        (still before the commit) only if the observation reports
-        quarantined rows.
+        A merge is ``_merge_publish(_merge_stage(...))``. A MoR stage never
+        reads table state, so replay stages MoR epochs ahead and publishes
+        them in epoch order.
         """
+        staged = self._merge_stage(spark, batch_df, epoch_id, input_stats, touched_buckets)
+        return None if staged is None else self._merge_publish(staged)
+
+    def _merge_stage(
+        self,
+        spark: SparkSession,
+        batch_df: DataFrame,
+        epoch_id: int,
+        input_stats: list[dict] | None = None,
+        touched_buckets: list[int] | None = None,
+        fast_obs=None,
+        fast_pids: list | None = None,
+        est_rows: int | None = None,
+        quarantine_writer=None,
+    ) -> StagedMerge | None:
+        """Everything a merge does before publishing: ``_merge_plan``
+        (schema evolution, conform, the per-mode result relation carrying
+        the lineage Observation), ``_merge_write`` (debris check, parquet
+        write, footer stats) and ``_merge_resolve`` (the write job's
+        Observations become input stats, touched buckets and lineage
+        rows). None when the epoch is already committed or has nothing to
+        commit. ``batch_df``, ``input_stats`` and ``touched_buckets`` as
+        in ``merge``.
+
+        ``fast_obs``/``fast_pids``: the MoR replay fast path — an input
+        Observation (``observe_input``) already attached below
+        ``batch_df``, and the footer-bound pid list. The write is then the
+        epoch's ONLY job; input stats and the touched-bucket set are
+        resolved from the Observations afterwards. ``est_rows`` sizes the
+        adaptive fanout (the expected seq-window width — exact for a dense
+        WAL); ``quarantine_writer`` is invoked (still before the commit)
+        only if the observation reports quarantined rows."""
         t0 = plan_t0 = time.monotonic()
         man = self.manifest()
         if self.ledger_entry(epoch_id, man) is not None:
             return None
         if fast_obs is None and input_stats is None:
-            input_stats, touched_buckets = _batch_input_stats(batch_df, man["n_buckets"])
+            input_stats, touched_buckets = batch_input_stats(batch_df, man["n_buckets"])
             plan_t0 = time.monotonic()
         plan = self._merge_plan(
             spark, man, batch_df, epoch_id, input_stats, touched_buckets,
@@ -1315,7 +1332,7 @@ class SnapLake:
             # empty window, or every row quarantined: nothing to commit
             shutil.rmtree(plan.out_abs, ignore_errors=True)
             return None
-        return self._merge_publish(plan, epoch_id, new_files, *resolved, t0)
+        return StagedMerge(plan, int(epoch_id), new_files, *resolved, t0)
 
     def _merge_plan(
         self,
@@ -1465,8 +1482,7 @@ class SnapLake:
         commit_id = "c" + _stable_hash(f"{man['table_uuid']}:{epoch_id}")
         out_rel = os.path.join("data", commit_id)
         return _MergePlan(
-            man=man, mode=mode, version=version, incoming=incoming,
-            new_schema=new_schema, out=out, obs=obs, pids=pids, touched=touched,
+            man=man, mode=mode, incoming=incoming, out=out, obs=obs, pids=pids, touched=touched,
             ft=ft, commit_id=commit_id, out_rel=out_rel,
             out_abs=os.path.join(self.path, out_rel),
         )
@@ -1583,49 +1599,53 @@ class SnapLake:
         hi = max(s["last_seq"] for s in input_stats) if input_stats else None
         return touched, lineage_rows, lo, hi
 
-    def _merge_publish(
-        self,
-        plan: _MergePlan,
-        epoch_id: int,
-        new_files: list[dict],
-        touched: list[int],
-        lineage_rows: list[dict],
-        lo: int | None,
-        hi: int | None,
-        t0: float,
-    ) -> dict[str, Any] | None:
+    def _merge_publish(self, staged: StagedMerge) -> dict[str, Any] | None:
         """PUBLISH step: metadata commit with optimistic-concurrency retry
-        (the Iceberg commit-retry analog): a concurrent writer publishing
-        first makes _write_manifest's exclusive create raise; re-read HEAD,
-        no-op if the peer committed THIS epoch (drop our unreferenced data
-        dir), else rebase the metadata plane onto the new head and try
-        again. Data files never move — they are keyed by commit_id, and
-        only a published manifest references them."""
-        man, version, new_schema = plan.man, plan.version, plan.new_schema
+        (the Iceberg commit-retry analog). Every attempt starts from the
+        current HEAD: no-op if it already holds this epoch (a peer
+        committed it — our unreferenced data dir is left alone), else
+        evolve HEAD's schema by the batch's columns and build this
+        commit's ledger, file groups and side bundle on top of HEAD. A
+        writer publishing first makes _write_manifest's exclusive create
+        raise; the next attempt then rebases onto the new HEAD, after
+        clearing an unpublished manifest a crashed writer left at the
+        target version. Data files never move — they are keyed by
+        commit_id, and only a published manifest references them."""
+        plan, epoch_id, touched = staged.plan, staged.epoch_id, staged.touched
         commit_id = plan.commit_id
-        snapshot_id = f"v{version:08d}"
-        bundle = _SideBundle(
-            os.path.join("metadata", f"commit-{man['table_uuid'][:8]}-{commit_id}.json")
-        )
-        with phase("advance_groups"):
-            file_groups = self._advance_file_groups(
-                man, commit_id, set(touched), new_files, bundle
-            )
+        lo, hi = staged.first_seq, staged.last_seq
         max_races = 5
         for _race in range(max_races):
+            man = self.manifest()
+            if self.ledger_entry(epoch_id, man) is not None:
+                return None
+            version = man["version"] + 1
+            snapshot_id = f"v{version:08d}"
+            # HEAD's schema may have evolved since the stage planned; the
+            # table schema becomes the union (already-written files are
+            # narrower-or-equal and NULL-fill at read, same as any
+            # pre-evolution file)
+            new_schema = evolve_schema(T.StructType.fromJson(man["schema"]), plan.incoming)
+            bundle = _SideBundle(
+                os.path.join("metadata", f"commit-{man['table_uuid'][:8]}-{commit_id}.json")
+            )
+            with phase("advance_groups"):
+                file_groups = self._advance_file_groups(
+                    man, commit_id, set(touched), staged.new_files, bundle
+                )
             ledger_entry = {
                 "commit_id": commit_id,
-                "epoch_id": int(epoch_id),
+                "epoch_id": epoch_id,
                 "first_seq": lo,
                 "last_seq": hi,
                 "committed_at": datetime.now(timezone.utc).isoformat(),
                 "snapshot_id": snapshot_id,
             }
-            for row in lineage_rows:
+            for row in staged.lineage_rows:
                 row["snapshot_id"] = snapshot_id
             with phase("commit_meta"):
                 inline_ledger, ledger_spill = self._advance_ledger(
-                    man, int(epoch_id), ledger_entry, bundle
+                    man, epoch_id, ledger_entry, bundle
                 )
                 if bundle.members:
                     self._write_side_json(bundle.rel_path, bundle.members)
@@ -1640,71 +1660,35 @@ class SnapLake:
                 "parent": man["version"],
                 "summary": {
                     "commit_id": commit_id,
-                    "epoch_id": int(epoch_id),
+                    "epoch_id": epoch_id,
                     "first_seq": lo,
                     "last_seq": hi,
                     "touched_buckets": len(touched),
-                    "files_written": len(new_files),
+                    "files_written": len(staged.new_files),
                 },
                 "ledger": inline_ledger,
                 "ledger_spill": ledger_spill,
-                "lineage": lineage_rows,
+                "lineage": staged.lineage_rows,
             }
             try:
                 with phase("commit_meta"):
                     self._write_manifest(new_man)
-                break
             except FileExistsError:
-                man = self.manifest()
-                if self.ledger_entry(int(epoch_id), man) is not None:
-                    # the peer committed exactly this epoch: clean no-op.
-                    # Leave the data dir alone — with interleaved same-path
-                    # writes it may be the very dir the peer's manifest
-                    # references; if it is truly ours and orphaned,
-                    # expire_snapshots' vacuum reclaims it by reference set.
-                    return None
-                if man["version"] < version and os.path.isfile(
-                    self._manifest_path(version)
-                ):
-                    self._clear_unpublished_manifest(version)
-                    man = self.manifest()
-                    # fall through to the common rebase: it recomputes the
-                    # target version from the fresh head (the SAME number
-                    # if debris was cleared) and, crucially, rebuilds the
-                    # side bundle fresh (reusing the populated one would
-                    # duplicate its members)
-                # rebase: head schema may have evolved under us; table
-                # schema becomes the union (our already-written files are
-                # narrower-or-equal and NULL-fill at read, same as any
-                # pre-evolution file)
-                new_schema = evolve_schema(
-                    T.StructType.fromJson(man["schema"]), plan.incoming
-                )
-                version = man["version"] + 1
-                snapshot_id = f"v{version:08d}"
-                bundle = _SideBundle(
-                    os.path.join(
-                        "metadata",
-                        f"commit-{man['table_uuid'][:8]}-{commit_id}.json",
-                    )
-                )
-                file_groups = self._advance_file_groups(
-                    man, commit_id, set(touched), new_files, bundle
-                )
-        else:
-            raise RuntimeError(
-                f"epoch {epoch_id}: lost {max_races} manifest races in a row "
-                f"(a crashed peer may have left an unpublished manifest for "
-                f"version {version}; inspect {self.meta_dir})"
-            )
-        return {
-            "version": version,
-            "commit_id": commit_id,
-            "snapshot_id": snapshot_id,
-            "touched_buckets": touched,
-            "lineage": lineage_rows,
-            "apply_latency_ms": (time.monotonic() - t0) * 1000.0,
-        }
+                self._clear_unpublished_manifest(version)
+                continue
+            return {
+                "version": version,
+                "commit_id": commit_id,
+                "snapshot_id": snapshot_id,
+                "touched_buckets": touched,
+                "lineage": staged.lineage_rows,
+                "apply_latency_ms": (time.monotonic() - staged.t0) * 1000.0,
+            }
+        raise RuntimeError(
+            f"epoch {epoch_id}: lost {max_races} manifest races in a row "
+            f"(a crashed peer may have left an unpublished manifest for "
+            f"version {version}; inspect {self.meta_dir})"
+        )
 
     # --------------------------------------------------------- compaction
     def bucket_file_counts(self) -> dict[int, int]:

@@ -1,6 +1,6 @@
 """T1/T6/S9: streaming + replay entry points (SURVEY.md §3.1–3.2).
 
-Two drivers around the SAME apply_epoch:
+Two drivers around the SAME prepare/commit split of apply_epoch:
 
 * ``ingest_stream`` — Structured Streaming tail: readStream ->
   foreachBatch(apply_epoch) with a checkpointLocation. Exactly-once:
@@ -11,17 +11,23 @@ Two drivers around the SAME apply_epoch:
   maxFilesPerTrigger / trigger cadence converges to the same snapshot.
 * ``replay`` — deterministic bounded replay: epochs are cut on fixed seq
   ranges (epoch k = seqs [k*E, (k+1)*E)), NOT on wall time or file
-  arrival, so the ledger/lineage content is byte-reproducible too
-  (SURVEY.md §3.2). Resumes from whatever the ledger already holds.
+  arrival, and committed in epoch order, so the ledger/lineage content is
+  byte-reproducible too (SURVEY.md §3.2). Resumes from whatever the
+  ledger already holds. A small pool runs each epoch's state-independent
+  stage (``prepare_epoch``) ahead; the calling thread commits the staged
+  epochs in order (``commit_epoch``), each followed by ``maybe_compact``.
 """
 
 from __future__ import annotations
 
+from collections import deque
+from concurrent.futures import ThreadPoolExecutor
+from itertools import islice
 from typing import Any
 
 from pyspark.sql import SparkSession
 
-from cdc_engine.apply import apply_epoch
+from cdc_engine.apply import apply_epoch, commit_epoch, discard_epoch, prepare_epoch
 from cdc_engine.config import CdcConfig
 from cdc_engine.timing import phase
 from cdc_engine.lake import SnapLake
@@ -33,6 +39,12 @@ from cdc_engine.source import (
     read_seq_range,
     trigger_files,
 )
+
+# replay's stage pool width per table mode: a MoR stage (plan, delta
+# write, resolve) never reads table state, so two run ahead of the
+# commits; a COW stage (WAL scan, LWW dedup, winners cache) runs one
+# epoch ahead of the merge that reads the previous commit's state
+STAGE_WIDTH = {"mor": 2, "cow": 1}
 
 
 def replay(
@@ -61,7 +73,7 @@ def replay(
 
     committed = lake.committed_epochs()
     # footer-stat pid bound for the whole WAL (superset of any epoch's):
-    # enables the MoR one-job fast path in apply_epoch; None disables it
+    # enables prepare_epoch's one-job routes; None disables them
     pid_bounds = partition_pid_bounds(wal_dir, 0, max_seq)
     todo: list[int] = []
     for k in range(n_epochs):
@@ -85,112 +97,51 @@ def replay(
         if max_epochs is not None and len(todo) >= max_epochs:
             break
 
-    def _run_one(k: int):
+    def _stage(k: int):
         batch = read_seq_range(spark, wal_dir, k * e, (k + 1) * e)
         # expected_seq_range: epoch k OWNS this window by definition, so a
         # ledger hit under a different batching is detected without Spark work
-        with phase("apply_total"):
-            return apply_epoch(
-                spark, lake, batch, epoch_id=k, cfg=cfg,
+        with phase("prepare_total"):
+            return prepare_epoch(
+                spark, lake, batch, k, cfg,
                 expected_seq_range=(k * e, (k + 1) * e),
                 pid_bounds=pid_bounds,
             )
 
+    # Epoch k+W is submitted before epoch k commits, so no worker idles
+    # during a publish. Commits and compaction share the calling thread,
+    # so compaction never races a publication; an in-flight MoR stage
+    # writes only its own commit dir.
+    width = STAGE_WIDTH[lake.manifest().get("mode", "cow")]
+    pending = iter(todo)
     results = []
-    mode = lake.manifest().get("mode", "cow")
-    width = max(1, cfg.mor_pipeline) if mode == "mor" else 1
-    if mode == "cow" and cfg.cow_prefetch > 0 and len(todo) > 1:
-        # COW epoch OVERLAP (round-4 verdict task 4): full pipelining is
-        # unsafe for COW — epoch k+1's merge reads the table state epoch k
-        # commits — but everything BEFORE the merge (WAL scan, combined
-        # stats job, LWW dedup shuffle, cache materialization) is a pure
-        # function of the batch. A single prefetch worker prepares epoch
-        # k+1 (materialize=True pulls the dedup shuffle into the overlap,
-        # not just the stats job) while the main thread runs epoch k's
-        # merge/commit; commit_prepared stays strictly ordered on the main
-        # thread, which IS the state-read barrier.
-        from concurrent.futures import ThreadPoolExecutor
-
-        from cdc_engine.apply import commit_prepared, prepare_epoch
-        from cdc_engine.normalize import apply_mapping
-
-        def _prep(k: int):
-            batch = read_seq_range(spark, wal_dir, k * e, (k + 1) * e)
-            df = apply_mapping(batch, cfg.column_mapping)
-            with phase("prepare_total"):
-                # pid_bounds (WAL footer stats) upgrade the prepare to the
-                # ONE-JOB path: stats/quarantine/touched ride the cache-
-                # materialize job's Observation (round 7)
-                return prepare_epoch(
-                    spark, lake, df, k, cfg, cfg.quarantine_dir,
-                    materialize=True, pid_bounds=pid_bounds,
-                )
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(_prep, todo[0])
-            try:
-                for i, k in enumerate(todo):
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        staged = deque(pool.submit(_stage, k) for k in islice(pending, width))
+        try:
+            while staged:
+                prep = staged.popleft().result()
+                for k in islice(pending, 1):
+                    staged.append(pool.submit(_stage, k))
+                if prep is None:
+                    continue
+                with phase("apply_total"):
+                    r = commit_epoch(spark, lake, prep)
+                if r is not None:
+                    results.append(r)
+                    # MoR hygiene: fold delta files back into base once a
+                    # bucket accumulates too many (a no-op for COW tables)
+                    with phase("maybe_compact"):
+                        lake.maybe_compact(spark, cfg.compact_after_files)
+        finally:
+            # a failed stage or commit must not leak the staged epochs'
+            # caches (and must not mask the original error)
+            for fut in staged:
+                try:
                     prep = fut.result()
-                    fut = pool.submit(_prep, todo[i + 1]) if i + 1 < len(todo) else None
-                    if prep is None:
-                        continue
-                    with phase("apply_total"):
-                        r = commit_prepared(spark, lake, prep)
-                    if r is not None:
-                        results.append(r)
-            finally:
-                # a failed commit must not leak the in-flight prepared
-                # epoch's cache (and must not mask the original error)
-                if fut is not None:
-                    try:
-                        p = fut.result()
-                        if p is not None:
-                            p.df.unpersist()
-                    except Exception:
-                        pass
-    elif width <= 1 or len(todo) <= 1:
-        for k in todo:
-            r = _run_one(k)
-            if r is not None:
-                results.append(r)
-                # MoR hygiene: fold delta files back into base once a bucket
-                # accumulates too many (no-op for COW tables — one file/bucket)
-                with phase("maybe_compact"):
-                    lake.maybe_compact(spark, cfg.compact_after_files)
-    else:
-        # PIPELINED MoR replay: a delta epoch never reads table state, so
-        # adjacent epochs are data-independent; only manifest publication
-        # serializes, and the optimistic commit retry (test_commit_race)
-        # already rebases losers. Overlapping epochs hides each epoch's
-        # serial tail (driver plan work, job-barrier latency, commit
-        # fsyncs) under the next epoch's data-parallel work — at 2 epochs
-        # this roughly halves the replay's total serial term, the quantity
-        # the N->4N scaling criterion is gated on. Epoch order of COMMITS
-        # may interleave; final state is order-independent (scan-time LWW
-        # judges by (warc_ts, seq), and ledger entries are keyed).
-        from concurrent.futures import ThreadPoolExecutor
-
-        # periodic compaction (round-4 ADVICE): deferring maybe_compact to
-        # one pass after the full drain let delta files accumulate without
-        # bound across a long replay — every commit rewrites its file-group
-        # lists, so metadata work grew O(files)/commit, O(epochs^2) total,
-        # and the compact_after_files bound didn't hold mid-replay. Epochs
-        # are therefore submitted in chunks of `stride`; at each chunk
-        # boundary the pool has drained, so compaction is serialized with
-        # the in-flight commits by construction (never racing an epoch's
-        # optimistic manifest publication) and per-bucket file count stays
-        # <= compact_after_files + stride throughout. The boundary costs
-        # one pipeline bubble (~one epoch's serial tail) per stride epochs.
-        stride = max(2 * width, cfg.compact_after_files)
-        with ThreadPoolExecutor(max_workers=width) as pool:
-            for c0 in range(0, len(todo), stride):
-                futs = [(k, pool.submit(_run_one, k)) for k in todo[c0 : c0 + stride]]
-                for _k, f in futs:
-                    r = f.result()
-                    if r is not None:
-                        results.append(r)
-                with phase("maybe_compact"):
-                    lake.maybe_compact(spark, cfg.compact_after_files)
+                except Exception:
+                    continue
+                if prep is not None:
+                    discard_epoch(prep)
     return results
 
 

@@ -1,11 +1,12 @@
-"""J6: salted repartitioning on hash(url) for hot-domain skew (SURVEY.md §2.3).
+"""J6: hash(url) partitioning against hot-domain skew (SURVEY.md §2.3).
 
 A Common-Crawl CDC tail is zipf-skewed by domain; partitioning raw events by
 domain (or by Spark's default partitioner on a low-cardinality key) melts a
-few reducers. We always shuffle on pmod(xxhash64(url), P) — the full url, not
-the domain, so a hot domain's pages spread across partitions — and expose a
-skew probe that measures achieved balance (it doubles as the lineage skew
-sensor, SURVEY.md §7.4).
+few reducers. The engine's shuffles key on the full url, not the domain, so
+a hot domain's pages spread across partitions: the LWW dedup window
+partitions by url and the lake buckets by pmod(xxhash64(url), n). This
+module holds that bucket function and a skew probe that measures achieved
+balance (it doubles as the lineage skew sensor, SURVEY.md §7.4).
 """
 
 from __future__ import annotations
@@ -57,11 +58,6 @@ def spread(df: DataFrame) -> DataFrame:
         return out
     except Exception:
         return df
-
-
-def salted_repartition(df: DataFrame, key_col: str = "url", num_partitions: int = 32) -> DataFrame:
-    """Repartition by hashed key so downstream per-partition work balances."""
-    return df.repartition(num_partitions, bucket_expr(key_col, num_partitions))
 
 
 def hot_domains(df: DataFrame, key_col: str = "url", k: int = 20, sample: float = 0.0) -> DataFrame:

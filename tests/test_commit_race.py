@@ -55,13 +55,25 @@ def test_lost_race_rebases_onto_new_head(spark, tmp_path, monkeypatch):
     apply_epoch(spark, lake, read_seq_range(spark, wal, 0, 1_000), epoch_id=0, cfg=cfg)
     assert lake.head_version() == 1
 
-    # our writer plans epoch 1 against the stale v0 head (2 head reads:
-    # apply_epoch's and merge's) -> its v1 manifest write collides -> it
-    # must rebase to v2 and succeed
-    _stale_view(monkeypatch, lake, stale, n_calls=2)
+    # our writer plans epoch 1 against the stale v0 head (3 head reads:
+    # the prepare's, the stage's and the publish's first attempt) -> its
+    # v1 manifest write collides -> it must rebase to v2 and succeed
+    _stale_view(monkeypatch, lake, stale, n_calls=3)
+    collisions = []
+    real_write = SnapLake._write_manifest
+
+    def probe(self, man):
+        try:
+            return real_write(self, man)
+        except FileExistsError:
+            collisions.append(man["version"])
+            raise
+
+    monkeypatch.setattr(SnapLake, "_write_manifest", probe)
     r = apply_epoch(spark, lake, read_seq_range(spark, wal, 1_000, 2_000), epoch_id=1, cfg=cfg)
     monkeypatch.undo()
 
+    assert collisions == [1]  # the exclusive create lost, then rebased
     assert r is not None and r["version"] == 2
     assert sorted(lake.committed_epochs()) == [0, 1]
 

@@ -13,7 +13,7 @@ import datetime as dt
 import json
 import os
 
-from cdc_engine.lake import SnapLake, _load_side_json_cached
+from cdc_engine.lake import SnapLake
 from cdc_engine.schemas import PAGES_SCHEMA_V1, WAL_SCHEMA_V1
 
 TS = dt.datetime(2025, 1, 1)
@@ -99,13 +99,11 @@ def test_fsck_detects_each_corruption_class(spark, tmp_path):
     entries[0]["rows"] += 1
     with open(bp, "w") as f:
         json.dump(bundle, f)
-    _load_side_json_cached.cache_clear()
     r = lake.fsck(deep=True)
     assert not r["ok"] and any("row-count mismatch" in e for e in r["errors"])
     entries[0]["rows"] -= 1
     with open(bp, "w") as f:
         json.dump(bundle, f)
-    _load_side_json_cached.cache_clear()
 
     # delete a side bundle: unresolvable refs
     os.remove(bp)

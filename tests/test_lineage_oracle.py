@@ -6,8 +6,9 @@ previous epoch left behind (tombstones included): a winner strictly newer
 than the url's current (warc_ts, seq) is an upsert or a delete, anything
 else is late. MoR never reads table state, so its late count is None.
 ``bytes`` is the winners' html payload. The engine's lineage rows must
-match per (epoch, source partition) on every apply route: the COW prefetch
-(one-job prepare), the COW stats-job prepare and the MoR fast path.
+match per (epoch, source partition) on every apply route: the COW one-job
+prepare (replay), the COW stats-job prepare (apply_epoch without
+pid_bounds) and the MoR fast path (replay).
 """
 
 from __future__ import annotations
@@ -18,8 +19,9 @@ import os
 import pandas as pd
 import pytest
 
-from cdc_engine import CdcConfig, SnapLake, replay
+from cdc_engine import CdcConfig, SnapLake, apply_epoch, replay
 from cdc_engine.schemas import PAGES_SCHEMA_V1
+from cdc_engine.source import read_seq_range
 
 COLS = [
     "epoch_id", "partition_id", "first_seq", "last_seq", "rows_in",
@@ -66,19 +68,24 @@ def _reference(events: pd.DataFrame, per_epoch: int, mode: str) -> list[tuple]:
 
 
 @pytest.mark.parametrize(
-    "mode,cow_prefetch",
-    [("cow", 1), ("cow", 0), ("mor", 1)],
+    "mode,route",
+    [("cow", "replay"), ("cow", "stats_job"), ("mor", "replay")],
     ids=["cow_prefetch", "cow_stats_job", "mor"],
 )
-def test_lineage_matches_sequential_reference(spark, wal_evolving, tmp_path, mode, cow_prefetch):
+def test_lineage_matches_sequential_reference(spark, wal_evolving, tmp_path, mode, route):
     wal_dir, wcfg, _oracle = wal_evolving
     lake = SnapLake.create(
-        str(tmp_path / f"lake_{mode}_{cow_prefetch}"), PAGES_SCHEMA_V1, n_buckets=16, mode=mode
+        str(tmp_path / f"lake_{mode}_{route}"), PAGES_SCHEMA_V1, n_buckets=16, mode=mode
     )
-    cfg = CdcConfig(
-        events_per_epoch=wcfg.events_per_epoch, n_buckets=16, cow_prefetch=cow_prefetch
-    )
-    replay(spark, lake, wal_dir, cfg)
+    cfg = CdcConfig(events_per_epoch=wcfg.events_per_epoch, n_buckets=16)
+    if route == "replay":
+        replay(spark, lake, wal_dir, cfg)
+    else:
+        # apply_epoch without pid_bounds takes the stats-job prepare
+        e = wcfg.events_per_epoch
+        for k in range(-(-wcfg.n_events // e)):
+            batch = read_seq_range(spark, wal_dir, k * e, (k + 1) * e)
+            apply_epoch(spark, lake, batch, k, cfg, expected_seq_range=(k * e, (k + 1) * e))
 
     got = sorted(
         tuple(None if v is None else int(v) for v in r)

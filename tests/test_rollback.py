@@ -164,8 +164,6 @@ def test_crash_mid_rollback_leaves_recoverable_debris(spark, tmp_path):
     as rolled back (it travels with HEAD), re-applying the undone epochs
     overwrites the debris in the deterministic commit dirs and lands on
     the original state bit-for-bit, and a deep fsck afterwards is clean."""
-    from cdc_engine.lake import _load_side_json_cached
-
     lake = SnapLake.create(str(tmp_path / "c"), PAGES_SCHEMA_V1, n_buckets=4, mode="mor")
     eps = _epochs()
     for e, rows in enumerate(eps):
@@ -175,7 +173,6 @@ def test_crash_mid_rollback_leaves_recoverable_debris(spark, tmp_path):
     # crash window: HEAD swapped to 2, zero cleanup performed
     with open(os.path.join(lake.meta_dir, "HEAD"), "w") as f:
         f.write("2")
-    _load_side_json_cached.cache_clear()  # model the process restart
 
     assert lake.head_version() == 2
     r = lake.fsck()
@@ -205,9 +202,6 @@ def test_vacuum_reclaims_crash_rollback_orphans_then_reapply(spark, tmp_path):
 
     with open(os.path.join(lake.meta_dir, "HEAD"), "w") as f:
         f.write("2")
-    from cdc_engine.lake import _load_side_json_cached
-
-    _load_side_json_cached.cache_clear()
 
     assert lake.fsck()["orphan_data_files"] > 0
     lake.expire_snapshots(keep_last=10)  # vacuum reclaims the orphans
@@ -235,9 +229,6 @@ def test_compact_recovers_from_manifest_debris(spark, tmp_path):
 
     with open(os.path.join(lake.meta_dir, "HEAD"), "w") as f:
         f.write("2")
-    from cdc_engine.lake import _load_side_json_cached
-
-    _load_side_json_cached.cache_clear()
 
     r = lake.compact(spark, sorted(lake.bucket_file_counts()))  # hits v3 debris
     assert r is not None and r["version"] == 3

@@ -42,11 +42,8 @@ def test_mor_100_epoch_soak_bounds_hold_throughout(spark, tmp_path):
         str(tmp_path / "lake_soak"), PAGES_SCHEMA_V1, n_buckets=8, mode="mor"
     )
     cfg = CdcConfig(events_per_epoch=PER_EPOCH, n_buckets=8)
-    # the pipelined path compacts every `stride` epochs at a drained chunk
-    # boundary; mid-replay a bucket may briefly hold up to
-    # compact_after_files + stride files
-    stride = max(2 * cfg.mor_pipeline, cfg.compact_after_files)
-    bound = cfg.compact_after_files + stride
+    # replay runs maybe_compact after every commit
+    bound = cfg.compact_after_files
 
     man_sizes: list[int] = []
     probe_every = 10
