@@ -3138,9 +3138,12 @@ def _bpe_train_oracle(n_merges: int = 8) -> str:
     subqueries) to w{r-1}; pair counting mirrors textops.bpe_train exactly
     (symbols = marker-split, pair key = a || '_' || b, argmax = count DESC
     then pair ASC). Generated from the same round structure the Spark loop
-    executes, so the two cannot drift."""
+    executes, so the two cannot drift. Every round's CTEs are MATERIALIZED:
+    inlined, each round would re-evaluate the whole chain below it (w{r-1}
+    is read by p{r} and w{r}, b{r} by two scalar subqueries), exponential
+    in the round count."""
     ctes = [
-        """w0 AS (
+        """w0 AS MATERIALIZED (
             SELECT regexp_replace(w, '(.)', '_\\1', 'g') AS r, COUNT(*) AS wf
             FROM (
                 SELECT unnest(list_filter(
@@ -3150,7 +3153,7 @@ def _bpe_train_oracle(n_merges: int = 8) -> str:
         )"""
     ]
     for k in range(1, n_merges + 1):
-        ctes.append(f"""p{k} AS (
+        ctes.append(f"""p{k} AS MATERIALIZED (
             SELECT p, CAST(SUM(wf) AS BIGINT) AS n FROM (
                 SELECT wf, unnest(list_transform(range(1, len(s)),
                        i -> s[i] || '_' || s[i + 1])) AS p
@@ -3158,9 +3161,9 @@ def _bpe_train_oracle(n_merges: int = 8) -> str:
                       FROM w{k - 1}))
             GROUP BY p
         )""")
-        ctes.append(f"""b{k} AS (SELECT p, n FROM p{k} ORDER BY n DESC, p ASC LIMIT 1)""")
+        ctes.append(f"""b{k} AS MATERIALIZED (SELECT p, n FROM p{k} ORDER BY n DESC, p ASC LIMIT 1)""")
         if k < n_merges:
-            ctes.append(f"""w{k} AS (
+            ctes.append(f"""w{k} AS MATERIALIZED (
             SELECT replace(r, (SELECT '_' || p FROM b{k}),
                               (SELECT '_' || replace(p, '_', '') FROM b{k})) AS r, wf
             FROM w{k - 1}

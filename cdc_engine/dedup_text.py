@@ -567,6 +567,11 @@ def simhash_candidate_pairs(
     ``bands`` disjoint bit bands and equi-join on (band, band_bits), then
     post-filter XOR-popcount <= ``max_hamming``. Returns (da, db, hamming).
 
+    Precondition: ``doc_id`` is unique in ``docs``. Two rows sharing a
+    doc_id each join against every partner, so the function emits the
+    same (da, db, hamming) row more than once, and nothing downstream
+    removes the duplicates.
+
     Recall is EXACT, not probabilistic: by pigeonhole, a pair within
     Hamming distance d <= bands-1 differs in at most bands-1 bands, so it
     agrees exactly on at least one — every such pair survives the band

@@ -41,8 +41,10 @@ the engine needs, in pure PySpark + JSON manifests:
       untouched groups' refs forward. Bucket-pruned scans load only the
       groups they need, so metadata reads prune with the data.
   All side files are fsynced BEFORE the manifest referencing them, and the
-  HEAD swap stays the single atomic commit point; crash retries rewrite
-  side files byte-identically (deterministic names + contents).
+  HEAD swap stays the single atomic commit point. A crash retry writes its
+  side file under the same name but not with the same bytes (its data
+  files get new part-file names), so readers cache side files by file
+  identity, never by path alone (``_load_side_json``).
 * **Idempotence**: ``merge`` consults the accumulated ledger first; a
   re-delivered epoch (foreachBatch retry / replay overlap) is a no-op.
   The LWW merge condition is the semantic backstop: even a forced re-apply
@@ -103,25 +105,30 @@ FILE_GROUPS_MAX = 64
 TARGET_ROWS_PER_FILE = 100_000
 
 
+def _bucket_cover(f: dict, n_buckets: int) -> range:
+    """The buckets file entry ``f`` covers: its own bucket, or for a class
+    file every bucket congruent to its residue mod ``bmod``."""
+    m = f.get("bmod", n_buckets)
+    return range(f["bucket"] % m, n_buckets, m)
+
+
 def _entry_covers(f: dict, n_buckets: int, buckets) -> bool:
     """Does file entry ``f`` (possibly a bucket-class file) cover any of
     ``buckets``? Conservative by design: a class file may hold rows for
     only some of its declared residue class — selection then reads a few
     extra small files, never misses one."""
-    m = f.get("bmod", n_buckets)
-    r = f["bucket"] % m
-    return any(b % m == r for b in buckets)
+    cover = _bucket_cover(f, n_buckets)
+    return any(b in cover for b in buckets)
 
 
 def _load_side_json(path: str):
-    """Read-cache for metadata side files (per-commit bundles, plus any
-    standalone legacy files), keyed on the file's identity — path, inode,
-    mtime and size — not on its path alone. Bundle paths repeat: a commit
-    id hashes ``table_uuid:epoch_id``, so re-applying an epoch after a
-    rollback or crash, or into a copy or restore of a lake at a path the
-    process already read, writes new content (new Spark part-file names)
-    at an old path. Every side file is written by rename, so a rewrite is
-    a new inode and misses the cache."""
+    """Read-cache for metadata side files (per-commit bundles), keyed on
+    the file's identity — path, inode, mtime and size — not on its path
+    alone. Bundle paths repeat: a commit id hashes ``table_uuid:epoch_id``,
+    so re-applying an epoch after a rollback or crash, or into a copy or
+    restore of a lake at a path the process already read, writes new
+    content (new Spark part-file names) at an old path. Every side file is
+    written by rename, so a rewrite is a new inode and misses the cache."""
     st = os.stat(path)
     return _load_side_json_at(path, st.st_ino, st.st_mtime_ns, st.st_size)
 
@@ -178,6 +185,42 @@ _LINEAGE_SCHEMA = T.StructType(
 )
 
 
+@dataclass(frozen=True)
+class _Fanout:
+    """The data-file layout every write shares (merge, compaction,
+    rebucket): a row lands in ``_bucket=K``, K its url bucket or, when the
+    fanout modulus ``ft`` is below ``n_buckets``, its bucket CLASS mod
+    ``ft``; the relation is hash-partitioned ``nparts`` ways on K — one
+    partition per class file or written bucket, capped at the default
+    parallelism."""
+
+    n_buckets: int
+    ft: int
+    nparts: int
+
+    @staticmethod
+    def plan(
+        spark: SparkSession, n_buckets: int, est_rows: int | None, n_out: int
+    ) -> "_Fanout":
+        """``est_rows``: the rows the write emits (None: unknown);
+        ``n_out``: the buckets it writes."""
+        ft = SnapLake._write_modulus(n_buckets, est_rows)
+        nparts = min(ft if ft < n_buckets else n_out, spark.sparkContext.defaultParallelism)
+        return _Fanout(n_buckets, ft, max(1, nparts))
+
+    @property
+    def bucket_sql(self) -> str:
+        # same bucket function as salt.bucket_expr (pmod/xxhash64 with
+        # Spark's default seed 42)
+        return f"pmod(xxhash64(url), {self.n_buckets})"
+
+    def distribute(self, df: DataFrame) -> DataFrame:
+        """``df`` with its ``_bucket`` column, hash-partitioned on it."""
+        b = self.bucket_sql
+        col = F.expr(b if self.ft == self.n_buckets else f"pmod({b}, {self.ft})")
+        return df.withColumn("_bucket", col).repartition(self.nparts, F.col("_bucket"))
+
+
 @dataclass
 class _MergePlan:
     """What ``SnapLake._merge_plan`` hands the write, resolve and publish
@@ -190,7 +233,7 @@ class _MergePlan:
     obs: Any  # lineage Observation the write job fills
     pids: list
     touched: list[int] | None  # None: resolved from obs (MoR fast path)
-    ft: int  # fanout modulus (n_buckets unless class files)
+    fan: _Fanout
     commit_id: str
     out_rel: str
     out_abs: str
@@ -723,15 +766,16 @@ class SnapLake:
             os.close(dfd)
 
     def _clear_unpublished_manifest(self, version: int) -> bool:
-        """Crash-debris recovery shared by merge and compact: a manifest
-        file exists at ``version`` but HEAD sits below it. Either a live
-        peer is in the microsecond window between its exclusive create and
-        HEAD swap, or the file is UNPUBLISHED DEBRIS (crash in that window,
-        or a crash mid-rollback left abandoned ahead-of-HEAD manifests). A
-        live peer swaps HEAD immediately, so grant a grace period; if HEAD
-        still hasn't reached ``version``, delete the debris (unpublished ==
-        uncommitted) and return True. Returns False when HEAD advanced —
-        a real racing peer published."""
+        """Crash-debris recovery shared by merge and the compaction rewrite
+        (``compact``, ``rebucket``): a manifest file exists at ``version``
+        but HEAD sits below it. Either a live peer is in the microsecond
+        window between its exclusive create and HEAD swap, or the file is
+        UNPUBLISHED DEBRIS (crash in that window, or a crash mid-rollback
+        left abandoned ahead-of-HEAD manifests). A live peer swaps HEAD
+        immediately, so grant a grace period; if HEAD still hasn't reached
+        ``version``, delete the debris (unpublished == uncommitted) and
+        return True. Returns False when HEAD advanced — a real racing peer
+        published."""
         if self.manifest()["version"] >= version:
             return False
         time.sleep(0.1)
@@ -770,25 +814,18 @@ class SnapLake:
         os.replace(tmp, ap)
 
     # ------------------------------------------------------------- ledger
-    def _resolve_ref(self, ref):
+    def _resolve_ref(self, ref: dict):
         """Load a metadata side object: ``{"path", "member"}`` addresses a
-        member inside a per-commit bundle; a bare string is a legacy
-        standalone side file."""
-        if isinstance(ref, str):
-            return _load_side_json(os.path.join(self.path, ref))
+        member inside a per-commit bundle."""
         return _load_side_json(os.path.join(self.path, ref["path"]))[ref["member"]]
 
     def _resolve_ref_pending(self, ref, bundle: _SideBundle):
         """_resolve_ref that can also see THIS commit's not-yet-written
         bundle (the log-structured segment merge may fold a segment the
         same commit just spilled)."""
-        if not isinstance(ref, str) and ref["path"] == bundle.rel_path:
+        if ref["path"] == bundle.rel_path:
             return bundle.members[ref["member"]]
         return self._resolve_ref(ref)
-
-    @staticmethod
-    def _spill_index_ref(spill: dict):
-        return spill.get("index") or spill.get("index_path")  # new | legacy
 
     def ledger_entry(
         self, epoch_id: int, man: dict | None = None
@@ -800,18 +837,18 @@ class SnapLake:
         e = man["ledger"].get(str(epoch_id))
         if e is not None:
             return e
-        spill = man.get("ledger_spill") or {}
-        idx_ref = self._spill_index_ref(spill)
+        spill = man["ledger_spill"]
+        idx_ref = spill["index"]
         if not idx_ref:
             return None
-        if spill.get("max_epoch") is not None and epoch_id > spill["max_epoch"]:
+        if spill["max_epoch"] is not None and epoch_id > spill["max_epoch"]:
             return None
         index = self._resolve_ref(idx_ref)
         # ranges may overlap if epoch ids ever arrive out of order; check
         # every covering segment, newest first
         for seg in reversed(index["segments"]):
             if seg["min_epoch"] <= epoch_id <= seg["max_epoch"]:
-                entries = self._resolve_ref(seg.get("ref") or seg["path"])
+                entries = self._resolve_ref(seg["ref"])
                 hit = entries["entries"].get(str(epoch_id))
                 if hit is not None:
                     return hit
@@ -823,12 +860,11 @@ class SnapLake:
         use ledger_entry)."""
         man = self.manifest(version)
         out: dict[int, dict] = {}
-        spill = man.get("ledger_spill") or {}
-        idx_ref = self._spill_index_ref(spill)
+        idx_ref = man["ledger_spill"]["index"]
         if idx_ref:
             index = self._resolve_ref(idx_ref)
             for seg in index["segments"]:
-                entries = self._resolve_ref(seg.get("ref") or seg["path"])
+                entries = self._resolve_ref(seg["ref"])
                 out.update({int(k): v for k, v in entries["entries"].items()})
         out.update({int(k): v for k, v in man["ledger"].items()})
         return out
@@ -840,14 +876,12 @@ class SnapLake:
         spills the oldest LEDGER_SPILL_CHUNK inline entries to an immutable
         segment + rewrites the (tiny) index when the window overflows —
         both as members of this commit's side bundle. Spill contents are
-        pure functions of the parent manifest, so a crash-retry rewrites
-        them byte-identically."""
+        pure functions of the parent manifest, so a crash retry spills the
+        same entries (the bundle around them still differs: its file lists
+        name the retry's new part files)."""
         inline = dict(man["ledger"])
         inline[str(epoch_id)] = entry
-        spill = dict(
-            man.get("ledger_spill")
-            or {"index": None, "max_epoch": None, "n_spilled": 0}
-        )
+        spill = dict(man["ledger_spill"])
         if len(inline) <= LEDGER_INLINE_MAX:
             return inline, spill
         oldest = sorted(inline, key=int)[:LEDGER_SPILL_CHUNK]
@@ -855,9 +889,8 @@ class SnapLake:
         lo, hi = int(oldest[0]), int(oldest[-1])
         seg_ref = bundle.add(f"ledger-seg-{lo:012d}-{hi:012d}", {"entries": seg_entries})
         segments = []
-        idx_ref = self._spill_index_ref(spill)
-        if idx_ref:
-            segments = list(self._resolve_ref(idx_ref)["segments"])
+        if spill["index"]:
+            segments = list(self._resolve_ref(spill["index"])["segments"])
         segments.append(
             {"ref": seg_ref, "min_epoch": lo, "max_epoch": hi, "n": len(seg_entries)}
         )
@@ -867,12 +900,8 @@ class SnapLake:
         # of linear (10^6 epochs => ~15 segments, not ~31k)
         while len(segments) >= 2 and segments[-1]["n"] == segments[-2]["n"]:
             a, b = segments[-2], segments[-1]
-            merged = dict(
-                self._resolve_ref_pending(a.get("ref") or a["path"], bundle)["entries"]
-            )
-            merged.update(
-                self._resolve_ref_pending(b.get("ref") or b["path"], bundle)["entries"]
-            )
+            merged = dict(self._resolve_ref_pending(a["ref"], bundle)["entries"])
+            merged.update(self._resolve_ref_pending(b["ref"], bundle)["entries"])
             mlo = min(a["min_epoch"], b["min_epoch"])
             mhi = max(a["max_epoch"], b["max_epoch"])
             m_ref = bundle.add(f"ledger-seg-{mlo:012d}-{mhi:012d}", {"entries": merged})
@@ -880,29 +909,24 @@ class SnapLake:
                 {"ref": m_ref, "min_epoch": mlo, "max_epoch": mhi, "n": len(merged)}
             ]
         index_ref = bundle.add("ledger-index", {"segments": segments})
-        max_e = hi if spill.get("max_epoch") is None else max(spill["max_epoch"], hi)
+        max_e = hi if spill["max_epoch"] is None else max(spill["max_epoch"], hi)
         return inline, {
             "index": index_ref,
             "max_epoch": max_e,
-            "n_spilled": spill.get("n_spilled", 0) + len(seg_entries),
+            "n_spilled": spill["n_spilled"] + len(seg_entries),
         }
 
     # --------------------------------------------------------------- scan
     def _files(self, manifest: dict, buckets: set[int] | None = None) -> list[dict]:
-        if "files" in manifest:  # legacy inline file list
-            fs = manifest["files"]
+        fg = manifest["file_groups"]
+        g_all = fg["groups"]
+        if buckets is None:
+            need = sorted(g_all, key=int)
         else:
-            fg = manifest["file_groups"]
-            g_all = fg["groups"]
-            if buckets is None:
-                need = sorted(g_all, key=int)
-            else:
-                need = sorted(
-                    {str(b % fg["n_groups"]) for b in buckets} & set(g_all), key=int
-                )
-            fs = []
-            for g in need:  # metadata reads prune with the bucket filter
-                fs.extend(self._resolve_ref(g_all[g].get("ref") or g_all[g]["path"]))
+            need = sorted({str(b % fg["n_groups"]) for b in buckets} & set(g_all), key=int)
+        fs = []
+        for g in need:  # metadata reads prune with the bucket filter
+            fs.extend(self._resolve_ref(g_all[g]["ref"]))
         if buckets is not None:
             nb = manifest["n_buckets"]
             fs = [f for f in fs if _entry_covers(f, nb, buckets)]
@@ -921,29 +945,11 @@ class SnapLake:
         delta files (kind 'delta' rides in on the entries). Only groups
         containing touched buckets get a new member in this commit's side
         bundle; every other group's ref is carried forward untouched."""
-        legacy = "file_groups" not in man
-        if legacy:
-            n_groups = min(FILE_GROUPS_MAX, man["n_buckets"])
-            groups: dict[str, dict] = {}
-            old_all = man["files"]
-            dirty = {f["bucket"] % n_groups for f in old_all} | {
-                b % n_groups for b in touched
-            }
-        else:
-            n_groups = man["file_groups"]["n_groups"]
-            groups = dict(man["file_groups"]["groups"])
-            old_all = None
-            dirty = {b % n_groups for b in touched}
+        n_groups = man["file_groups"]["n_groups"]
+        groups = dict(man["file_groups"]["groups"])
         appending = all(f.get("kind", "base") == "delta" for f in new_files) and new_files
-        for g in sorted(dirty):
-            if legacy:
-                old = [f for f in old_all if f["bucket"] % n_groups == g]
-            elif str(g) in groups:
-                old = self._resolve_ref(
-                    groups[str(g)].get("ref") or groups[str(g)]["path"]
-                )
-            else:
-                old = []
+        for g in sorted({b % n_groups for b in touched}):
+            old = self._resolve_ref(groups[str(g)]["ref"]) if str(g) in groups else []
             fresh = [f for f in new_files if f["bucket"] % n_groups == g]
             if appending:
                 kept = list(old)  # MoR: append-only; compaction folds later
@@ -1043,28 +1049,8 @@ class SnapLake:
         With MoR delta files present, file pruning could hide a row's newer
         version, so only the row filter (post-collapse) is used."""
         man = self.manifest(version)
-        files = self._files(man)
-        all_base = all(f.get("kind", "base") == "base" for f in files)
-        if (ts_min is not None or ts_max is not None or col_bounds) and all_base:
-            from datetime import datetime as _dt
-
-            keep = []
-            for f in files:
-                lo, hi = f.get("ts_min"), f.get("ts_max")
-                if lo is not None and hi is not None:
-                    flo, fhi = _dt.fromisoformat(lo), _dt.fromisoformat(hi)
-                    if (ts_max is not None and flo > ts_max) or (
-                        ts_min is not None and fhi < ts_min
-                    ):
-                        continue  # file provably out of range
-                if col_bounds and self._cstats_disjoint(f, col_bounds):
-                    continue
-                keep.append(f)
-            # exact file-granular pruning: a bucket with one in-range and one
-            # out-of-range file reads only the in-range file
-            df = self.scan_internal(spark, version, files=keep)
-        else:
-            df = self.scan_internal(spark, version)
+        files = self._scan_files(man, ts_min, ts_max, col_bounds)
+        df = self.scan_internal(spark, version, files=files)
         if ts_min is not None:
             df = df.where(F.col("warc_ts") >= F.lit(ts_min))
         if ts_max is not None:
@@ -1076,6 +1062,31 @@ class SnapLake:
                 df = df.where(F.col(c) <= F.lit(hi))
         user_cols = [f.name for f in T.StructType.fromJson(man["schema"]).fields]
         return df.where(~F.col(INTERNAL_DELETED)).select(*user_cols)
+
+    def _scan_files(self, man: dict, ts_min=None, ts_max=None, col_bounds=None) -> list[dict]:
+        """The files ``scan`` reads for these bounds: all of ``man``'s
+        files, minus — only when every file is a base file — those whose
+        footer-stat warc_ts or cluster-column ranges prove them out of
+        range. Exact file-granular pruning: a bucket with one in-range and
+        one out-of-range file reads only the in-range file."""
+        files = self._files(man)
+        if not (ts_min is not None or ts_max is not None or col_bounds) or any(
+            f.get("kind", "base") != "base" for f in files
+        ):
+            return files
+        keep = []
+        for f in files:
+            lo, hi = f.get("ts_min"), f.get("ts_max")
+            if lo is not None and hi is not None:
+                flo, fhi = datetime.fromisoformat(lo), datetime.fromisoformat(hi)
+                if (ts_max is not None and flo > ts_max) or (
+                    ts_min is not None and fhi < ts_min
+                ):
+                    continue  # file provably out of range
+            if col_bounds and self._cstats_disjoint(f, col_bounds):
+                continue
+            keep.append(f)
+        return keep
 
     def lookup(
         self, spark: SparkSession, urls: list[str], version: int | None = None
@@ -1109,16 +1120,14 @@ class SnapLake:
     def touched_buckets_between(self, v_old: int, v_new: int) -> set[int] | None:
         """Buckets whose covering file set differs between two manifests —
         pure metadata (group refs compared before any side-file resolve;
-        only changed groups resolve their lists). None = unknowable
-        (legacy inline file list, or a partition-spec change between the
-        versions — bucket ids are not comparable across moduli) => caller
-        must treat ALL buckets as touched. Shared by incremental MV
-        maintenance (mview.py) and the change data feed (``changes``):
-        both bound their scans to exactly these buckets, which is what
-        keeps them trickle-epoch-cheap at 100 TB."""
+        only changed groups resolve their lists). None = unknowable (a
+        partition-spec change between the versions — bucket ids are not
+        comparable across moduli) => caller must treat ALL buckets as
+        touched. Shared by incremental MV maintenance (mview.py) and the
+        change data feed (``changes``): both bound their scans to exactly
+        these buckets, which is what keeps them trickle-epoch-cheap at
+        100 TB."""
         man_old, man_new = self.manifest(v_old), self.manifest(v_new)
-        if "file_groups" not in man_old or "file_groups" not in man_new:
-            return None
         if man_old["n_buckets"] != man_new["n_buckets"]:
             # rebucket in the interval: every file was rewritten and the
             # two versions' bucket spaces don't align — "all buckets" is
@@ -1130,21 +1139,14 @@ class SnapLake:
         touched: set[int] = set()
         for g in set(go) | set(gn):
             ro, rn = go.get(g), gn.get(g)
-            rpo = self._ref_path(ro.get("ref") or ro["path"]) if ro else None
-            rpn = self._ref_path(rn.get("ref") or rn["path"]) if rn else None
+            rpo = ro["ref"]["path"] if ro else None
+            rpn = rn["ref"]["path"] if rn else None
             if rpo == rpn:
                 continue  # group untouched between the two versions
-            fo = self._resolve_ref(ro.get("ref") or ro["path"]) if ro else []
-            fn = self._resolve_ref(rn.get("ref") or rn["path"]) if rn else []
-            po = {f["path"]: f for f in fo}
-            pn = {f["path"]: f for f in fn}
+            po = {f["path"]: f for f in (self._resolve_ref(ro["ref"]) if ro else [])}
+            pn = {f["path"]: f for f in (self._resolve_ref(rn["ref"]) if rn else [])}
             for p in set(po) ^ set(pn):
-                f = po.get(p) or pn[p]
-                bmod = f.get("bmod")
-                if bmod and bmod <= n_buckets:  # class file: whole residue class
-                    touched.update(range(f["bucket"] % bmod, n_buckets, bmod))
-                else:
-                    touched.add(f["bucket"])
+                touched.update(_bucket_cover(po.get(p) or pn[p], n_buckets))
         return touched
 
     def changes(
@@ -1206,27 +1208,17 @@ class SnapLake:
         self, col_bounds: dict[str, tuple], version: int | None = None
     ) -> tuple[int, int]:
         """(files kept, files total) for a cluster-stat-bounded scan — the
-        observability hook for the cluster_by data-skipping path."""
-        files = self._files(self.manifest(version))
-        kept = sum(1 for f in files if not self._cstats_disjoint(f, col_bounds))
-        return kept, len(files)
+        observability hook for the cluster_by data-skipping path. Counts
+        exactly what ``scan`` reads (``_scan_files``)."""
+        man = self.manifest(version)
+        return len(self._scan_files(man, col_bounds=col_bounds)), len(self._files(man))
 
     def prunable_files(self, ts_min, ts_max, version: int | None = None) -> tuple[int, int]:
         """(files kept, files total) for a time-bounded scan — the pruning
-        observability hook used by tests and ops."""
-        files = self._files(self.manifest(version))
-        from datetime import datetime as _dt
-
-        kept = 0
-        for f in files:
-            lo, hi = f.get("ts_min"), f.get("ts_max")
-            if lo is None or hi is None:
-                kept += 1
-                continue
-            flo, fhi = _dt.fromisoformat(lo), _dt.fromisoformat(hi)
-            if (ts_max is None or flo <= ts_max) and (ts_min is None or fhi >= ts_min):
-                kept += 1
-        return kept, len(files)
+        observability hook used by tests and ops. Counts exactly what
+        ``scan`` reads (``_scan_files``)."""
+        man = self.manifest(version)
+        return len(self._scan_files(man, ts_min, ts_max)), len(self._files(man))
 
     @staticmethod
     def _write_modulus(n_buckets: int, est_rows: int | None) -> int:
@@ -1404,35 +1396,22 @@ class SnapLake:
             est = sum(int(st["rows_in"]) for st in input_stats)
         if est is not None:
             est += carried_rows
-        ft = self._write_modulus(n_buckets, est)
-        nparts = max(
-            1,
-            min(
-                ft if ft < n_buckets else (n_buckets if touched is None else len(touched)),
-                spark.sparkContext.defaultParallelism,
-            ),
+        fan = _Fanout.plan(
+            spark, n_buckets, est, n_buckets if touched is None else len(touched)
         )
-        # same bucket function as salt.bucket_expr (pmod/xxhash64 with
-        # Spark's default seed 42)
-        bucket_sql = f"pmod(xxhash64(url), {n_buckets})"
-        out_bucket = F.expr(bucket_sql if ft == n_buckets else f"pmod({bucket_sql}, {ft})")
         obs = Observation(f"lineage_e{epoch_id}_v{version}")
 
         if mode == "mor":
             exprs = _lineage_exprs(pids, "true", sp_sql, "op", "true", None, blen_sql)
             if touched is None:
-                exprs.append(F.expr(f"collect_set({bucket_sql}) as _touched"))
-            out = (
-                src.observe(obs, *exprs)
-                .select(
+                exprs.append(F.expr(f"collect_set({fan.bucket_sql}) as _touched"))
+            out = fan.distribute(
+                src.observe(obs, *exprs).select(
                     *user_cols,
                     F.col("seq").alias(INTERNAL_SEQ),
                     (F.col("op") == F.lit("delete")).alias(INTERNAL_DELETED),
-                    out_bucket.alias("_bucket"),
                 )
-                .repartition(nparts, F.col("_bucket"))
-                .sortWithinPartitions("url")
-            )
+            ).sortWithinPartitions("url")
         else:
             tgt = conform(
                 self.scan_internal(spark, files=tgt_files), _internal_schema(new_schema)
@@ -1459,9 +1438,7 @@ class SnapLake:
             # the Observation sits below the rn filter, so a source row that
             # loses to the target is still counted (as late_ignored)
             u = (
-                t_side.unionByName(s_side)
-                .withColumn("_bucket", out_bucket)
-                .repartition(nparts, F.col("_bucket"))
+                fan.distribute(t_side.unionByName(s_side))
                 .withColumn("_rn", F.row_number().over(w_lww))
                 .observe(
                     obs,
@@ -1483,7 +1460,7 @@ class SnapLake:
         out_rel = os.path.join("data", commit_id)
         return _MergePlan(
             man=man, mode=mode, incoming=incoming, out=out, obs=obs, pids=pids, touched=touched,
-            ft=ft, commit_id=commit_id, out_rel=out_rel,
+            fan=fan, commit_id=commit_id, out_rel=out_rel,
             out_abs=os.path.join(self.path, out_rel),
         )
 
@@ -1521,17 +1498,43 @@ class SnapLake:
                 file=sys.stderr,
             )
             shutil.rmtree(out_abs)
+        return self._write_data_files(
+            plan.out,
+            plan.out_rel,
+            plan.fan,
+            plan.man.get("key_blooms", False),
+            # MoR files are append-only deltas; compaction folds them
+            kind="delta" if plan.mode == "mor" else None,
+        )
+
+    def _write_data_files(
+        self,
+        df: DataFrame,
+        out_rel: str,
+        fan: _Fanout,
+        key_blooms: bool,
+        kind: str | None = None,
+        partition_by: tuple[str, ...] = ("_bucket",),
+        stat_cols: tuple[str, ...] = (),
+    ) -> list[dict]:
+        """The one parquet data-file write (merge, compaction, rebucket):
+        ``df``, laid out by ``fan`` and carrying ``_bucket``, goes to
+        ``out_rel`` partitioned by ``partition_by`` (ending in
+        ``_bucket``); returns the new files' manifest entries from their
+        footers (``_walk_bucket_files``), a class file tagged with ``bmod``
+        (it covers residue ``bucket`` mod ``fan.ft``) and every file with
+        ``kind`` when given."""
         with phase("data_write"):
-            plan.out.write.mode("errorifexists").partitionBy("_bucket").parquet(out_abs)
-        with phase("footer_stats"):
-            new_files = _walk_bucket_files(
-                self.path, plan.out_rel, plan.man.get("key_blooms", False)
+            df.write.mode("errorifexists").partitionBy(*partition_by).parquet(
+                os.path.join(self.path, out_rel)
             )
+        with phase("footer_stats"):
+            new_files = _walk_bucket_files(self.path, out_rel, key_blooms, stat_cols)
         for f in new_files:
-            if plan.ft < plan.man["n_buckets"]:
-                f["bmod"] = plan.ft  # class file: covers residue f["bucket"] mod ft
-            if plan.mode == "mor":
-                f["kind"] = "delta"  # append-only; compaction folds
+            if fan.ft < fan.n_buckets:
+                f["bmod"] = fan.ft
+            if kind is not None:
+                f["kind"] = kind
         return new_files
 
     def _merge_resolve(
@@ -1696,11 +1699,9 @@ class SnapLake:
         bucket in its residue class — that is exactly the number of files
         a bucket-scoped scan of that bucket must read)."""
         man = self.manifest()
-        nb = man["n_buckets"]
         counts: dict[int, int] = {}
         for f in self._files(man):
-            m = f.get("bmod", nb)
-            for b in range(f["bucket"] % m, nb, m):
+            for b in _bucket_cover(f, man["n_buckets"]):
                 counts[b] = counts.get(b, 0) + 1
         return counts
 
@@ -1715,8 +1716,9 @@ class SnapLake:
         """Fold the given buckets' base+delta files into fresh base files
         (the Iceberg rewrite_data_files analog). Logical state is unchanged
         — scan_internal already collapses — so this is a pure physical
-        rewrite, committed as its own snapshot. Deterministic: triggered by
-        file counts, which depend only on the epoch sequence.
+        rewrite, committed as its own snapshot (``_rewrite``).
+        Deterministic: triggered by file counts, which depend only on the
+        epoch sequence.
 
         ``purge_tombstones_older_than_seq``: optionally drop tombstone rows
         whose winning seq is below the given WAL horizon. Safe ONLY when the
@@ -1739,12 +1741,6 @@ class SnapLake:
         man = self.manifest()
         if not buckets:
             return None
-        version = man["version"] + 1
-        commit_id = "k" + _stable_hash(f"{man['table_uuid']}:compact:{version}")
-        out_rel = os.path.join("data", commit_id)
-        out_abs = os.path.join(self.path, out_rel)
-        if os.path.exists(out_abs):
-            shutil.rmtree(out_abs)
         # coverage-closure expansion: a bucket-class delta file covering a
         # requested bucket also holds rows of its OTHER residue-class
         # buckets; collapsing those rows against a subset of their files
@@ -1752,114 +1748,25 @@ class SnapLake:
         # files. Expand the set until every selected file's full coverage
         # is inside it — replacement set == coverage closure, preserving
         # the one-base-file-per-url invariant.
-        nb = man["n_buckets"]
         bucket_set = set(buckets)
         while True:
-            cov: set[int] = set()
-            for f in self._files(man, bucket_set):
-                m = f.get("bmod", nb)
-                cov.update(range(f["bucket"] % m, nb, m))
+            cov = {
+                b
+                for f in self._files(man, bucket_set)
+                for b in _bucket_cover(f, man["n_buckets"])
+            }
             if cov <= bucket_set:
                 break
             bucket_set |= cov
-        files_in = self._files(man, bucket_set)
-        est_rows = sum(int(f.get("rows") or 0) for f in files_in) or None
-        collapsed = self.scan_internal(spark, buckets=bucket_set)
-        if purge_tombstones_older_than_seq is not None:
-            collapsed = collapsed.where(
-                ~(
-                    F.col(INTERNAL_DELETED)
-                    & (F.col(INTERNAL_SEQ) < purge_tombstones_older_than_seq)
-                )
-            )
-        collapsed = collapsed.withColumn(
-            "_bucket", bucket_expr("url", man["n_buckets"])
+        new_man = self._rewrite(
+            spark, man, bucket_set, man["n_buckets"],
+            purge_tombstones_older_than_seq, cluster_by, cluster_files_per_bucket,
         )
-        # same adaptive fanout as merge: compacting a small table must not
-        # re-explode it into one tiny file per bucket
-        ft = self._write_modulus(nb, est_rows)
-        if ft < nb:
-            collapsed = collapsed.withColumn(
-                "_bucket", F.pmod(F.col("_bucket"), F.lit(ft))
-            )
-        nparts = max(
-            1,
-            min(ft if ft < nb else len(bucket_set),
-                spark.sparkContext.defaultParallelism),
-        )
-        if cluster_by:
-            from pyspark.sql.window import Window
-
-            have = set(collapsed.columns)
-            missing = [c for c in cluster_by if c not in have]
-            if missing:
-                raise ValueError(f"cluster_by columns not in schema: {missing}")
-            per_bucket = None if est_rows is None else est_rows // max(1, len(bucket_set))
-            k = cluster_files_per_bucket or (
-                1
-                if per_bucket is None
-                else max(1, min(64, -(-per_bucket // TARGET_ROWS_PER_FILE)))
-            )
-            w = Window.partitionBy("_bucket").orderBy(*cluster_by, "url")
-            (
-                collapsed.repartition(nparts, F.col("_bucket"))
-                .withColumn("_ccls", F.ntile(int(k)).over(w))
-                .sortWithinPartitions("_bucket", "_ccls", *cluster_by, "url")
-                .write.mode("errorifexists")
-                .partitionBy("_ccls", "_bucket")
-                .parquet(out_abs)
-            )
-        else:
-            (
-                collapsed.repartition(nparts, F.col("_bucket"))
-                .sortWithinPartitions("url")
-                .write.mode("errorifexists")
-                .partitionBy("_bucket")
-                .parquet(out_abs)
-            )
-        new_files = _walk_bucket_files(
-            self.path,
-            out_rel,
-            man.get("key_blooms", False),
-            stat_cols=tuple(cluster_by or ()),
-        )
-        if ft < nb:
-            for f in new_files:
-                f["bmod"] = ft
-        bundle = _SideBundle(
-            os.path.join("metadata", f"commit-{man['table_uuid'][:8]}-{commit_id}.json")
-        )
-        file_groups = self._advance_file_groups(
-            man, commit_id, bucket_set, new_files, bundle
-        )
-        if bundle.members:
-            self._write_side_json(bundle.rel_path, bundle.members)
-        new_man = {
-            **man,
-            "version": version,
-            "file_groups": file_groups,
-            "parent": man["version"],
-            "summary": {
-                "commit_id": commit_id,
-                "kind": "compaction",
-                "buckets": sorted(bucket_set),
-                "files_written": len(new_files),
-                **({"cluster_by": cluster_by} if cluster_by else {}),
-            },
-            "lineage": [],
+        return {
+            "version": new_man["version"],
+            "commit_id": new_man["summary"]["commit_id"],
+            "buckets": sorted(bucket_set),
         }
-        new_man.pop("files", None)  # legacy inline list superseded by groups
-        try:
-            self._write_manifest(new_man)
-        except FileExistsError:
-            # same wedge merge recovers from: ahead-of-HEAD debris at our
-            # target version. Clear and retry once; if HEAD actually moved
-            # (live writer — out of compact's single-writer contract),
-            # surface the collision.
-            if not self._clear_unpublished_manifest(version):
-                raise
-            self._write_manifest(new_man)
-        return {"version": version, "commit_id": commit_id, "buckets": sorted(bucket_set)}
 
     def maybe_compact(self, spark: SparkSession, max_files_per_bucket: int = 8):
         """Compact every bucket whose live file count exceeds the bound —
@@ -1868,6 +1775,116 @@ class SnapLake:
             b for b, n in self.bucket_file_counts().items() if n > max_files_per_bucket
         ]
         return self.compact(spark, sorted(over))
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        man: dict,
+        buckets: set[int] | None,
+        n_buckets: int,
+        purge_tombstones_older_than_seq: int | None = None,
+        cluster_by: list[str] | None = None,
+        cluster_files_per_bucket: int | None = None,
+    ) -> dict:
+        """The compaction rewrite behind ``compact`` and ``rebucket``: the
+        MoR-collapsed rows of ``buckets`` (None: the whole table) become
+        fresh base files under the modulus ``n_buckets`` — the table's own
+        for a compaction, a new one for a rebucket — committed on top of
+        ``man`` as one snapshot that replaces every file covering those
+        buckets and carries the ledger verbatim. Returns the published
+        manifest; the other parameters as in ``compact``."""
+        version = man["version"] + 1
+        uid = man["table_uuid"]
+        if n_buckets == man["n_buckets"]:
+            commit_id = "k" + _stable_hash(f"{uid}:compact:{version}")
+            summary = {"kind": "compaction", "buckets": sorted(buckets)}
+            out_buckets, base = buckets, man
+        else:
+            commit_id = "b" + _stable_hash(f"{uid}:rebucket:{version}:{n_buckets}")
+            summary = {
+                "kind": "rebucket",
+                "n_buckets_old": man["n_buckets"],
+                "n_buckets_new": n_buckets,
+            }
+            # the bucket->group mapping changes with the modulus, so every
+            # new group is built from an empty group map
+            out_buckets = set(range(n_buckets))
+            base = {
+                "n_buckets": n_buckets,
+                "file_groups": {"n_groups": min(FILE_GROUPS_MAX, n_buckets), "groups": {}},
+            }
+        out_rel = os.path.join("data", commit_id)
+        out_abs = os.path.join(self.path, out_rel)
+        if os.path.exists(out_abs):
+            shutil.rmtree(out_abs)  # crash debris of an unpublished rewrite
+        files_in = self._files(man, buckets)
+        est_rows = sum(int(f.get("rows") or 0) for f in files_in) or None
+        rows = self.scan_internal(spark, files=files_in)
+        if purge_tombstones_older_than_seq is not None:
+            rows = rows.where(
+                ~(
+                    F.col(INTERNAL_DELETED)
+                    & (F.col(INTERNAL_SEQ) < purge_tombstones_older_than_seq)
+                )
+            )
+        # same adaptive fanout as merge: compacting a small table must not
+        # re-explode it into one tiny file per bucket
+        fan = _Fanout.plan(spark, n_buckets, est_rows, len(out_buckets))
+        partition_by: tuple[str, ...] = ("_bucket",)
+        if cluster_by:
+            from pyspark.sql.window import Window
+
+            missing = [c for c in cluster_by if c not in rows.columns]
+            if missing:
+                raise ValueError(f"cluster_by columns not in schema: {missing}")
+            per_bucket = None if est_rows is None else est_rows // max(1, len(out_buckets))
+            k = cluster_files_per_bucket or (
+                1
+                if per_bucket is None
+                else max(1, min(64, -(-per_bucket // TARGET_ROWS_PER_FILE)))
+            )
+            w = Window.partitionBy("_bucket").orderBy(*cluster_by, "url")
+            rows = (
+                fan.distribute(rows)
+                .withColumn("_ccls", F.ntile(int(k)).over(w))
+                .sortWithinPartitions("_bucket", "_ccls", *cluster_by, "url")
+            )
+            partition_by = ("_ccls", "_bucket")
+        else:
+            rows = fan.distribute(rows).sortWithinPartitions("url")
+        new_files = self._write_data_files(
+            rows, out_rel, fan, man.get("key_blooms", False),
+            partition_by=partition_by, stat_cols=tuple(cluster_by or ()),
+        )
+        bundle = _SideBundle(os.path.join("metadata", f"commit-{uid[:8]}-{commit_id}.json"))
+        file_groups = self._advance_file_groups(base, commit_id, out_buckets, new_files, bundle)
+        if bundle.members:
+            self._write_side_json(bundle.rel_path, bundle.members)
+        new_man = {
+            **man,
+            "version": version,
+            "n_buckets": n_buckets,
+            "file_groups": file_groups,
+            "parent": man["version"],
+            "summary": {
+                "commit_id": commit_id,
+                **summary,
+                "files_written": len(new_files),
+                **({"cluster_by": cluster_by} if cluster_by else {}),
+            },
+            "lineage": [],
+        }
+        try:
+            self._write_manifest(new_man)
+        except FileExistsError:
+            # same wedge merge recovers from: ahead-of-HEAD debris at our
+            # target version. Clear and retry once; if HEAD actually moved
+            # (live writer — out of the rewrite's single-writer contract),
+            # surface the collision.
+            if not self._clear_unpublished_manifest(version):
+                raise
+            self._write_manifest(new_man)
+        return new_man
 
     # --------------------------------------------------- partition evolution
     def rebucket(self, spark: SparkSession, new_n_buckets: int) -> dict[str, Any] | None:
@@ -1878,6 +1895,8 @@ class SnapLake:
         for merge's touched-bucket selection and lookup's pruning, so a
         lazy two-spec table would make every keyed read scan both specs;
         one rewrite commit keeps those paths single-spec and O(1/buckets)).
+        It is the compaction rewrite (``_rewrite``) of every bucket into
+        the new modulus.
 
         Logical state is UNTOUCHED: the rewrite is the MoR-collapsed
         relation (one LWW winner per url, tombstones and ``_cdc_seq``
@@ -1902,113 +1921,34 @@ class SnapLake:
             raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
         if new_n_buckets == man["n_buckets"]:
             return None
-        version = man["version"] + 1
-        commit_id = "b" + _stable_hash(
-            f"{man['table_uuid']}:rebucket:{version}:{new_n_buckets}"
-        )
-        out_rel = os.path.join("data", commit_id)
-        out_abs = os.path.join(self.path, out_rel)
-        if os.path.exists(out_abs):
-            shutil.rmtree(out_abs)
-        files_in = self._files(man)
-        est_rows = sum(int(f.get("rows") or 0) for f in files_in) or None
-        collapsed = self.scan_internal(spark).withColumn(
-            "_bucket", bucket_expr("url", new_n_buckets)
-        )
-        ft = self._write_modulus(new_n_buckets, est_rows)
-        if ft < new_n_buckets:
-            collapsed = collapsed.withColumn(
-                "_bucket", F.pmod(F.col("_bucket"), F.lit(ft))
-            )
-        nparts = max(
-            1,
-            min(ft if ft < new_n_buckets else new_n_buckets,
-                spark.sparkContext.defaultParallelism),
-        )
-        (
-            collapsed.repartition(nparts, F.col("_bucket"))
-            .sortWithinPartitions("url")
-            .write.mode("errorifexists")
-            .partitionBy("_bucket")
-            .parquet(out_abs)
-        )
-        new_files = _walk_bucket_files(self.path, out_rel, man.get("key_blooms", False))
-        if ft < new_n_buckets:
-            for f in new_files:
-                f["bmod"] = ft
-        # the bucket->group mapping changes with the modulus, so file_groups
-        # is REBUILT (not advanced): every non-empty group is a fresh member
-        # of this commit's side bundle
-        n_groups = min(FILE_GROUPS_MAX, new_n_buckets)
-        bundle = _SideBundle(
-            os.path.join("metadata", f"commit-{man['table_uuid'][:8]}-{commit_id}.json")
-        )
-        by_group: dict[int, list[dict]] = {}
-        for f in new_files:
-            by_group.setdefault(f["bucket"] % n_groups, []).append(f)
-        groups: dict[str, dict] = {}
-        for g, fs in sorted(by_group.items()):
-            fs = sorted(fs, key=lambda f: (f["bucket"], f["path"]))
-            groups[str(g)] = {
-                "ref": bundle.add(f"files-g{g}", fs),
-                "n_files": len(fs),
-                "bytes": sum(f["bytes"] for f in fs),
-            }
-        if bundle.members:
-            self._write_side_json(bundle.rel_path, bundle.members)
-        new_man = {
-            **man,
-            "version": version,
-            "n_buckets": new_n_buckets,
-            "file_groups": {"n_groups": n_groups, "groups": groups},
-            "parent": man["version"],
-            "summary": {
-                "commit_id": commit_id,
-                "kind": "rebucket",
-                "n_buckets_old": man["n_buckets"],
-                "n_buckets_new": new_n_buckets,
-                "files_written": len(new_files),
-            },
-            "lineage": [],
-        }
-        new_man.pop("files", None)  # legacy inline list superseded by groups
-        try:
-            self._write_manifest(new_man)
-        except FileExistsError:
-            if not self._clear_unpublished_manifest(version):
-                raise
-            self._write_manifest(new_man)
+        new_man = self._rewrite(spark, man, None, new_n_buckets)
+        s = new_man["summary"]
         return {
-            "version": version,
-            "commit_id": commit_id,
-            "n_buckets_old": man["n_buckets"],
-            "n_buckets_new": new_n_buckets,
-            "files_written": len(new_files),
+            "version": new_man["version"],
+            "commit_id": s["commit_id"],
+            "n_buckets_old": s["n_buckets_old"],
+            "n_buckets_new": s["n_buckets_new"],
+            "files_written": s["files_written"],
         }
 
     # ------------------------------------------------------------- expiry
     @staticmethod
-    def _ref_path(ref) -> str:
-        return ref if isinstance(ref, str) else ref["path"]
+    def _ref_path(ref: dict) -> str:
+        """The table-relative side file a ``{"path", "member"}`` ref lives in."""
+        return ref["path"]
 
     def referenced_paths(self, version: int) -> set[str]:
         """Every table-relative path manifest ``version`` depends on to stay
         readable: its data files, side bundles holding its file groups, and
         its ledger index+segment chain."""
         man = self.manifest(version)
-        refs: set[str] = set()
-        if "files" in man:  # legacy inline list
-            refs.update(f["path"] for f in man["files"])
-        else:
-            for g in man["file_groups"]["groups"].values():
-                refs.add(self._ref_path(g.get("ref") or g["path"]))
-            refs.update(f["path"] for f in self._files(man))
-        spill = man.get("ledger_spill") or {}
-        idx_ref = self._spill_index_ref(spill)
+        refs = {self._ref_path(g["ref"]) for g in man["file_groups"]["groups"].values()}
+        refs.update(f["path"] for f in self._files(man))
+        idx_ref = man["ledger_spill"]["index"]
         if idx_ref:
             refs.add(self._ref_path(idx_ref))
             index = self._resolve_ref(idx_ref)
-            refs.update(self._ref_path(s.get("ref") or s["path"]) for s in index["segments"])
+            refs.update(self._ref_path(s["ref"]) for s in index["segments"])
         return refs
 
     def expire_snapshots(self, keep_last: int = 10, vacuum: bool = True) -> dict[str, int]:

@@ -99,6 +99,9 @@ def test_pruning_disabled_while_mor_deltas_live(spark, clustered_lake, tmp_path)
     # resurrect the old version or lose the new one
     data = [(1000, "upsert", "u/0", TS + dt.timedelta(days=1), None, "moved", "fr", 200)]
     lake.merge(spark, spark.createDataFrame(data, WAL_SCHEMA_V1), epoch_id=2)
+    # the pruning hook reports what scan reads: every file, delta included
+    total = len(lake._files(lake.manifest()))
+    assert lake.prunable_files_for({"lang": ("fr", "fr")}) == (total, total)
     df = lake.scan(spark, col_bounds={"lang": ("fr", "fr")})
     rows = {r["url"]: r["text"] for r in df.collect()}
     assert rows["u/0"] == "moved"

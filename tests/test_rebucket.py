@@ -15,7 +15,7 @@ import os
 import pytest
 
 from cdc_engine import CdcConfig, SnapLake, replay
-from cdc_engine.lake import _entry_covers
+from cdc_engine.lake import FILE_GROUPS_MAX, _entry_covers
 from cdc_engine.schemas import PAGES_SCHEMA_V1, WAL_SCHEMA_V1
 
 TS = dt.datetime(2025, 1, 1)
@@ -38,7 +38,9 @@ def _epochs():
 
 
 @pytest.mark.parametrize("mode", ["cow", "mor"])
-@pytest.mark.parametrize("direction", [(4, 16), (16, 4)])
+# 16 <-> 512 crosses FILE_GROUPS_MAX: the small epochs write bucket-class
+# (bmod) files, so the rewrite reads and writes a class-file layout
+@pytest.mark.parametrize("direction", [(4, 16), (16, 4), (16, 512), (512, 128)])
 def test_rebucket_preserves_state_both_directions(spark, tmp_path, mode, direction):
     nb0, nb1 = direction
     lake = SnapLake.create(
@@ -63,6 +65,8 @@ def test_rebucket_preserves_state_both_directions(spark, tmp_path, mode, directi
     files = lake._files(man)
     assert files and all(f.get("kind", "base") == "base" for f in files)
     assert all(0 <= f["bucket"] < nb1 for f in files)
+    if nb1 > FILE_GROUPS_MAX:  # a small table on many buckets: class files
+        assert all(f.get("bmod") == FILE_GROUPS_MAX for f in files)
     # ledger carried: the applied epochs are still committed
     assert sorted(lake.committed_epochs()) == [0, 1]
     # re-delivering an applied epoch is still a no-op (exactly-once)

@@ -216,11 +216,14 @@ def test_vacuum_reclaims_crash_rollback_orphans_then_reapply(spark, tmp_path):
     assert r["ok"] and r["errors"] == [] and r["warnings"] == [], r
 
 
-def test_compact_recovers_from_manifest_debris(spark, tmp_path):
-    """Same crash window, but COMPACTION is the first writer to hit the
-    ahead-of-HEAD debris — it must clear it and commit (it used to raise
-    FileExistsError and wedge); the subsequent re-applied epochs then
-    climb over the remaining debris and reproduce the original state."""
+@pytest.mark.parametrize("rewrite", ["compact", "rebucket"])
+def test_compact_recovers_from_manifest_debris(spark, tmp_path, rewrite):
+    """Same crash window, but the compaction rewrite (compact, or rebucket,
+    which runs the same rewrite into a new bucket count) is the first
+    writer to hit the ahead-of-HEAD debris — it must clear it and commit
+    (it used to raise FileExistsError and wedge); the subsequent
+    re-applied epochs then climb over the remaining debris and reproduce
+    the original state."""
     lake = SnapLake.create(str(tmp_path / "cc"), PAGES_SCHEMA_V1, n_buckets=4, mode="mor")
     eps = _epochs()
     for e, rows in enumerate(eps):
@@ -230,7 +233,10 @@ def test_compact_recovers_from_manifest_debris(spark, tmp_path):
     with open(os.path.join(lake.meta_dir, "HEAD"), "w") as f:
         f.write("2")
 
-    r = lake.compact(spark, sorted(lake.bucket_file_counts()))  # hits v3 debris
+    if rewrite == "compact":
+        r = lake.compact(spark, sorted(lake.bucket_file_counts()))  # hits v3 debris
+    else:
+        r = lake.rebucket(spark, 8)  # hits v3 debris
     assert r is not None and r["version"] == 3
     assert {x["url"]: x["text"] for x in lake.scan(spark).collect()} == {
         x["url"]: x["text"] for x in lake.scan(spark, version=2).collect()
