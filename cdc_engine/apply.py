@@ -8,6 +8,12 @@ the commit reads or publishes table state. The streaming path
 (foreachBatch) calls apply_epoch; the deterministic replay path runs the
 two halves itself, prepares ahead and commits in epoch order.
 
+Input accounting (per-pid rows, quarantined rows, seq span, touched
+buckets — ``lake.EpochInputs``) has two routes, chosen by the pid bound
+alone: an Observation on the raw batch when WAL footers bound the pids,
+a one-collect stats job when they do not. Either feeds the same
+dedup-and-merge body in both table modes.
+
 Ledger identity: the ledger keys on epoch_id, but replay numbers epochs by
 seq range while streaming uses Spark batch ids — and both share one lake
 ledger. A bare epoch-id match could therefore silently skip a batch whose
@@ -28,14 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cdc_engine.config import CdcConfig
 from cdc_engine.dedup import lww_dedup
-from cdc_engine.lake import (
-    VALID_SQL,
-    SnapLake,
-    StagedMerge,
-    batch_input_stats,
-    input_stats_from,
-    observe_input,
-)
+from cdc_engine.lake import VALID_SQL, EpochInputs, SnapLake, StagedMerge, seq_span
 from cdc_engine.normalize import apply_mapping
 from cdc_engine.timing import phase
 
@@ -112,13 +111,13 @@ def apply_epoch(
     equality, preserving the slow path's contents-were-applied guarantee.
 
     ``pid_bounds``: optional (min, max) bound on source_partition values
-    (from WAL parquet footer stats — source.partition_pid_bounds). With it
-    AND an expected seq window, a MoR epoch takes the ZERO-EXTRA-JOB fast
-    path: input stats, quarantine counts, touched buckets, and lineage all
-    ride the write job's Observation, so the epoch is exactly ONE Spark
-    job (the delta write). With it, a COW epoch's prepare is ONE job: its
-    stats ride an Observation on the winners-cache materialization. Every
-    job barrier is pure serial time at any cluster size.
+    (from WAL parquet footer stats — source.partition_pid_bounds). With
+    it, the input stats, quarantine counts and touched buckets ride an
+    Observation on the raw batch instead of a stats job: a MoR epoch is
+    then exactly ONE Spark job (the delta write, which also fills the
+    lineage Observation), and a COW epoch's prepare is one job (the
+    winners-cache materialization). Every job barrier is pure serial time
+    at any cluster size.
     """
     prep = prepare_epoch(
         spark, lake, batch_df, epoch_id, cfg, quarantine_dir,
@@ -133,13 +132,12 @@ class PreparedEpoch:
     of table state. ``df`` is the persisted LWW winners; ``commit_epoch``
     merges and unpersists it, ``discard_epoch`` only unpersists it."""
 
-    __slots__ = ("epoch_id", "df", "input_stats", "touched")
+    __slots__ = ("epoch_id", "df", "inputs")
 
-    def __init__(self, epoch_id, df, input_stats, touched):
+    def __init__(self, epoch_id, df, inputs):
         self.epoch_id = epoch_id
         self.df = df
-        self.input_stats = input_stats
-        self.touched = touched
+        self.inputs = inputs
 
 
 def prepare_epoch(
@@ -154,18 +152,22 @@ def prepare_epoch(
     batch_seq_range: tuple[int, int] | None = None,
 ) -> PreparedEpoch | StagedMerge | None:
     """The state-INDEPENDENT half of ``apply_epoch`` (same arguments),
-    safe to run ahead of earlier epochs' commits. None for an empty or
-    already-committed epoch (a ledger hit is verified first).
+    safe to run ahead of earlier epochs' commits. None for an empty,
+    all-quarantined or already-committed epoch (a ledger hit is verified
+    first).
 
-    COW: normalize, quarantine, LWW dedup into a persisted winners cache
-    (a ``PreparedEpoch``); the merge reads the table the previous commit
-    leaves, so it belongs to the commit. MoR: everything a merge does
-    before publishing — plan, delta write, lineage resolve (a lake
-    ``StagedMerge``); a delta never reads table state.
-
-    Routes: the MoR fast path when ``expected_seq_range`` and
-    ``pid_bounds`` are known; the COW one-job prepare whenever
-    ``pid_bounds`` is known; the stats-job collect otherwise."""
+    The input accounting (``EpochInputs``: per-pid stats, quarantined
+    rows, touched buckets) takes one of two routes, chosen by the pid
+    bound alone: with ``pid_bounds`` and no ledger entry, an Observation
+    on the raw batch that the epoch's first job fills; otherwise the
+    stats job, one narrow collect before anything else. Both then share
+    the body: valid-row filter and LWW dedup. The table mode decides the
+    last step. MoR: everything a merge does before publishing — plan,
+    delta write, lineage resolve (a lake ``StagedMerge``); a delta never
+    reads table state. COW: the persisted winners cache, materialized by
+    one ``count()`` (a ``PreparedEpoch``); the merge reads the table the
+    previous commit leaves, so it belongs to the commit. Quarantined rows
+    are persisted here, before the commit."""
     cfg = cfg or CdcConfig()
     if quarantine_dir is None:
         quarantine_dir = cfg.quarantine_dir
@@ -178,24 +180,53 @@ def prepare_epoch(
         return None
 
     df = apply_mapping(batch_df, cfg.column_mapping)
-    mor = man.get("mode", "cow") == "mor"
-    if mor and expected_seq_range is not None and pid_bounds is not None:
-        return _stage_mor_fast(
-            spark, lake, df, epoch_id, quarantine_dir, expected_seq_range, pid_bounds
+    if entry is None and pid_bounds is not None:
+        observed, inputs = EpochInputs.observe(
+            df, f"inputs_e{epoch_id}", pid_bounds, man["n_buckets"]
         )
-    if not mor and entry is None and pid_bounds is not None:
-        return _prepare_cow_one_job(df, epoch_id, quarantine_dir, man, pid_bounds)
-    prep = _prepare_stats_job(df, epoch_id, quarantine_dir, man, entry)
-    if prep is None or not mor:
-        return prep
-    try:
+    else:
+        with phase("stats_agg"):
+            inputs = EpochInputs.collect(df, man["n_buckets"])
+        got = inputs.get()
+        if got is None:
+            return None
+        if entry is not None:
+            # streaming re-delivery: verify contents before honoring the skip
+            span = seq_span(got[0])
+            if span is not None:
+                _verify_ledger_hit(entry, epoch_id, span, None)
+            return None
+        observed = df
+
+    # W1: one row per url — MUST precede a COW merge (several source rows
+    # per url would make the LWW pick depend on more than the batch;
+    # SURVEY.md §4 inv. 1). A MoR delta would tolerate multiplicity, but
+    # deduping first collapses an update-heavy epoch ~100x BEFORE the wide
+    # parquet write (measured 14.0 s eager vs 66.2 s writing the raw batch,
+    # 12M events / 8 pinned cores). The dedup's window leaves the winners
+    # hash-partitioned on url (J6).
+    winners = lww_dedup(observed.where(F.expr(VALID_SQL)))
+    if man.get("mode", "cow") == "mor":
+        est_rows = None  # the window width sizes the fanout: exact for a dense WAL
+        if expected_seq_range is not None:
+            est_rows = expected_seq_range[1] - expected_seq_range[0]
         with phase("merge_total"):
-            return lake._merge_stage(
-                spark, prep.df, epoch_id, input_stats=prep.input_stats,
-                touched_buckets=prep.touched,
-            )
-    finally:
-        prep.df.unpersist()  # the delta write has consumed the winners
+            staged = lake._merge_stage(spark, winners, epoch_id, inputs, est_rows)
+        if staged is None:
+            return None  # committed meanwhile, before the write: ``inputs`` never filled
+        _write_quarantine(df, inputs, quarantine_dir, epoch_id)
+        return staged if staged.touched else None
+    # cache the winners: the merge's write job reads straight from the
+    # cache (otherwise the dedup shuffle re-runs per job). A cache scan
+    # materializes whole partitions regardless of column pruning.
+    winners = winners.persist()
+    with phase("prepare_one_job"):
+        winners.count()
+    _write_quarantine(df, inputs, quarantine_dir, epoch_id)
+    if not (inputs.get() or ([], []))[1]:
+        winners.unpersist()
+        return None  # empty, or every row was quarantined
+    return PreparedEpoch(epoch_id, winners, inputs)
 
 
 def commit_epoch(
@@ -210,10 +241,7 @@ def commit_epoch(
             return lake._merge_publish(prep)
     try:
         with phase("merge_total"):
-            return lake.merge(
-                spark, prep.df, prep.epoch_id, input_stats=prep.input_stats,
-                touched_buckets=prep.touched,
-            )
+            return lake.merge(spark, prep.df, prep.epoch_id, prep.inputs)
     finally:
         discard_epoch(prep)
 
@@ -226,132 +254,14 @@ def discard_epoch(prep: PreparedEpoch | StagedMerge) -> None:
         prep.df.unpersist()
 
 
-def _footer_pids(df: DataFrame, pid_bounds: tuple[int, int]) -> list[int | None]:
-    """The pid list an input Observation unrolls: every source_partition
-    inside the WAL-footer bound (a conservative superset — absent pids
-    yield all-zero structs that are dropped)."""
-    if "source_partition" not in df.columns:
-        return [None]
-    return list(range(pid_bounds[0], pid_bounds[1] + 1))
-
-
-def _write_quarantine(df: DataFrame, quarantine_dir: str | None, epoch_id: int) -> None:
-    """Persist the batch's invalid rows (rare path; always before the
-    commit). Without a quarantine dir they are only counted in lineage."""
-    if quarantine_dir is not None:
+def _write_quarantine(
+    df: DataFrame, inputs: EpochInputs, quarantine_dir: str | None, epoch_id: int
+) -> None:
+    """Persist the batch's invalid rows when ``inputs`` counted any (rare
+    path; always before the commit). Without a quarantine dir they are
+    only counted in lineage."""
+    got = inputs.get()
+    if quarantine_dir is not None and got and any(s["rows_quarantined"] for s in got[0]):
         df.where(~F.expr(VALID_SQL)).write.mode("append").parquet(
             os.path.join(quarantine_dir, f"epoch={epoch_id}")
-        )
-
-
-def _prepare_stats_job(
-    df: DataFrame,
-    epoch_id: int,
-    quarantine_dir: str | None,
-    man: dict,
-    entry: dict | None,
-) -> PreparedEpoch | None:
-    """The stats-job prepare: ONE narrow pre-dedup aggregate
-    (``batch_input_stats``) gives the per-source-partition input stats
-    (ledger/lineage record the FULL consumed offset range — including
-    quarantined rows — S6/S7), emptiness, quarantine counts and the
-    touched buckets; then the quarantine write and the persisted LWW
-    winners. A ledger hit is verified against the batch's seq span."""
-    with phase("stats_agg"):
-        input_stats, touched = batch_input_stats(df, man["n_buckets"])
-    if not input_stats:
-        return None
-    if entry is not None:
-        # streaming re-delivery: verify contents before honoring the skip
-        los = [s["first_seq"] for s in input_stats if s["first_seq"] is not None]
-        his = [s["last_seq"] for s in input_stats if s["last_seq"] is not None]
-        if los and his:
-            _verify_ledger_hit(entry, epoch_id, (min(los), max(his)), None)
-        return None
-    if any(s["rows_quarantined"] for s in input_stats):
-        _write_quarantine(df, quarantine_dir, epoch_id)
-    if not touched:
-        return None  # every row was quarantined; nothing to commit
-
-    # W1: one row per url — MUST precede a COW merge (several source rows
-    # per url would make the LWW pick depend on more than the batch;
-    # SURVEY.md §4 inv. 1). A MoR delta would tolerate multiplicity, but
-    # deduping first collapses an update-heavy epoch ~100x BEFORE the wide
-    # parquet write (measured 14.0 s eager vs 66.2 s writing the raw batch,
-    # 12M events / 8 pinned cores). The dedup's window leaves the winners
-    # hash-partitioned on url (J6).
-    # cache the winners: the merge's write job consumes them (otherwise the
-    # dedup shuffle re-runs per job)
-    winners = lww_dedup(df.where(F.expr(VALID_SQL))).persist()
-    return PreparedEpoch(epoch_id, winners, input_stats, touched)
-
-
-def _prepare_cow_one_job(
-    df: DataFrame,
-    epoch_id: int,
-    quarantine_dir: str | None,
-    man: dict,
-    pid_bounds: tuple[int, int],
-) -> PreparedEpoch | None:
-    """ONE-JOB COW prepare (round 7, the lever ``_stage_mor_fast`` gave
-    MoR a round earlier): the per-pid input stats, quarantine counts and
-    touched-bucket set ride an Observation on the raw batch BELOW the
-    valid-filter + LWW dedup, and the winners-cache materializing count is
-    the only action — no separate pre-dedup stats job (a full job barrier
-    AND a second WAL scan per epoch). Quarantined rows are persisted in
-    one extra job on that rare path only, still before the commit."""
-    pids = _footer_pids(df, pid_bounds)
-    observed, obs = observe_input(
-        df, f"prep_e{epoch_id}", pids, n_buckets=man["n_buckets"]
-    )
-    winners = lww_dedup(observed.where(F.expr(VALID_SQL))).persist()
-    with phase("prepare_one_job"):
-        # a cache scan materializes whole partitions regardless of column
-        # pruning; the merge's write job then reads straight from the cache
-        winners.count()
-    vals = obs.get
-    input_stats = input_stats_from(vals, pids, epoch_id)
-    if input_stats is None:
-        winners.unpersist()
-        return None
-    touched = sorted(int(b) for b in (vals["_buckets"] or []))
-    if any(s["rows_quarantined"] for s in input_stats):
-        _write_quarantine(df, quarantine_dir, epoch_id)
-    if not touched:
-        winners.unpersist()
-        return None  # every row was quarantined; nothing to commit
-    return PreparedEpoch(epoch_id, winners, input_stats, touched)
-
-
-def _stage_mor_fast(
-    spark: SparkSession,
-    lake: SnapLake,
-    df: DataFrame,
-    epoch_id: int,
-    quarantine_dir: str | None,
-    expected_seq_range: tuple[int, int],
-    pid_bounds: tuple[int, int],
-) -> StagedMerge | None:
-    """MoR epoch as exactly ONE Spark job: an input Observation on the raw
-    batch computes — per source partition, map-side — the input stats
-    (rows/quarantined/seq range), and the merge's own lineage Observation
-    on the written winners adds the lineage split and the touched-bucket
-    set, so the pre-commit stats job (one full job barrier + one extra
-    WAL scan per epoch) disappears.
-
-    Quarantined rows are filtered before the write; if the Observation
-    reports any, they are persisted in one extra job on that rare path
-    only, still BEFORE the commit."""
-    pids = _footer_pids(df, pid_bounds)
-    observed, obs_in = observe_input(df, f"fast_in_e{epoch_id}", pids)
-    winners = lww_dedup(observed.where(F.expr(VALID_SQL)))
-    with phase("merge_total"):
-        return lake._merge_stage(
-            spark,
-            winners,
-            epoch_id,
-            fast_obs=obs_in,
-            fast_pids=pids,
-            est_rows=expected_seq_range[1] - expected_seq_range[0],
-            quarantine_writer=lambda: _write_quarantine(df, quarantine_dir, epoch_id),
         )

@@ -231,8 +231,7 @@ class _MergePlan:
     incoming: T.StructType
     out: DataFrame  # bucket-partitioned, url-sorted rows to write
     obs: Any  # lineage Observation the write job fills
-    pids: list
-    touched: list[int] | None  # None: resolved from obs (MoR fast path)
+    inputs: "EpochInputs"
     fan: _Fanout
     commit_id: str
     out_rel: str
@@ -259,116 +258,141 @@ class StagedMerge:
 VALID_SQL = "url is not null and warc_ts is not null and seq is not null"
 
 
-def observe_input(df: DataFrame, name: str, pids: list, n_buckets: int | None = None):
-    """Observation on the RAW batch (below the valid-row filter and the
-    LWW dedup): per source partition the rows seen, quarantined, and the
-    seq span, plus the total row count; with ``n_buckets`` also the set of
-    buckets the valid rows touch. ``pids`` may be a superset (footer-stat
-    bounds); ``input_stats_from`` drops the absent ones. One F.expr per
-    pid: a named_struct SQL string is one py4j round trip, where the same
-    aggregate as a column-object tree cost ~30 per pid of driver time.
-    Returns (observed df, Observation)."""
-    from pyspark.sql import Observation
+class EpochInputs:
+    """One epoch's input accounting: per source partition the rows seen,
+    quarantined (``VALID_SQL`` fails) and the seq span, plus the buckets
+    the valid rows hash to. ``get()`` returns ``(input_stats, touched)``
+    — ``input_stats`` one ``{partition_id, rows_in, rows_quarantined,
+    first_seq, last_seq}`` per present partition, the seq span NULL when
+    the partition held only NULL seqs — or None for an empty batch.
 
-    sp = (
-        "cast(source_partition as int)"
-        if "source_partition" in df.columns
-        else "cast(null as int)"
-    )
-    exprs = []
-    for p in pids:
-        m = f"({sp}) is null" if p is None else f"({sp}) = {int(p)}"
-        exprs.append(
-            F.expr(
-                "named_struct("
-                f"'seen', sum(case when ({m}) then 1 else 0 end), "
-                f"'q', sum(case when ({m}) and not ({VALID_SQL}) then 1 else 0 end), "
-                f"'lo', min(case when ({m}) then seq end), "
-                f"'hi', max(case when ({m}) then seq end)"
-                f") as pid_{'null' if p is None else p}"
+    Two constructors: ``observe`` (an Observation on the raw batch, filled
+    by the first job that consumes it) when the WAL footers bound the pids,
+    ``collect`` (one narrow per-pid aggregate, run at once) when they do
+    not. ``pids`` is the partition list lineage unrolls. An observed
+    value's ``get()`` blocks until its job has run: never read it on a
+    path that returns before that job."""
+
+    def __init__(self, pids: list, obs=None, vals=None):
+        self.pids = pids
+        self._obs = obs
+        self._vals = vals
+
+    @property
+    def ready(self) -> bool:
+        """Whether ``get()`` is known not to wait on a job: a collected
+        value, or an observed one already read."""
+        return self._obs is None
+
+    @classmethod
+    def observe(
+        cls, df: DataFrame, name: str, pid_bounds: tuple[int, int], n_buckets: int
+    ) -> tuple[DataFrame, "EpochInputs"]:
+        """``df`` with the Observation attached, and its value. The pid list
+        is every source_partition inside the footer bound (a superset:
+        absent pids are dropped). One F.expr per pid: a named_struct SQL
+        string is one py4j round trip, where the same aggregate as a
+        column-object tree cost ~30 per pid of driver time."""
+        from pyspark.sql import Observation
+
+        if "source_partition" in df.columns:
+            pids = list(range(pid_bounds[0], pid_bounds[1] + 1))
+        else:
+            pids = [None]
+        sp = _pid_sql(df)
+        exprs = []
+        for p in pids:
+            m = f"({sp}) is null" if p is None else f"({sp}) = {int(p)}"
+            exprs.append(
+                F.expr(
+                    "named_struct("
+                    f"'n', sum(case when ({m}) then 1 else 0 end), "
+                    f"'q', sum(case when ({m}) and not ({VALID_SQL}) then 1 else 0 end), "
+                    f"'lo', min(case when ({m}) then seq end), "
+                    f"'hi', max(case when ({m}) then seq end)"
+                    f") as pid_{'null' if p is None else p}"
+                )
             )
-        )
-    exprs.append(F.expr("count(*) as _total"))
-    if n_buckets is not None:
-        # bucket only for valid rows: xxhash64(NULL) is the seed (42), so
-        # a null url would otherwise smuggle in a phantom bucket
-        exprs.append(
-            F.expr(
-                f"collect_set(case when ({VALID_SQL}) "
-                f"then pmod(xxhash64(url), {n_buckets}) end) as _buckets"
+        exprs.append(F.expr("count(*) as _total"))
+        exprs.append(F.expr(f"collect_set({_valid_bucket_sql(n_buckets)}) as _buckets"))
+        obs = Observation(name)
+        return df.observe(obs, *exprs), cls(pids, obs=obs)
+
+    @classmethod
+    def collect(cls, df: DataFrame, n_buckets: int) -> "EpochInputs":
+        """The stats job: ONE narrow per-pid aggregate and collect (Catalyst
+        prunes the payload out of the scan)."""
+        rows = (
+            df.groupBy(F.expr(_pid_sql(df)).alias("pid"))
+            .agg(
+                F.count("*").alias("n"),
+                F.expr(f"sum(case when {VALID_SQL} then 0 else 1 end)").alias("q"),
+                F.min("seq").alias("lo"),
+                F.max("seq").alias("hi"),
+                F.expr(f"collect_set({_valid_bucket_sql(n_buckets)})").alias("buckets"),
             )
+            .collect()
         )
-    obs = Observation(name)
-    return df.observe(obs, *exprs), obs
+        vals = None
+        if rows:
+            vals = (
+                _input_stats([(r["pid"], r) for r in rows]),
+                sorted({int(b) for r in rows for b in r["buckets"]}),
+            )
+        return cls([r["pid"] for r in rows], vals=vals)
+
+    def get(self) -> tuple[list[dict], list[int]] | None:
+        """Raises when an observed batch holds rows outside the footer pid
+        bound: the WAL statistics are untrustworthy."""
+        if self._obs is not None:
+            v = self._obs.get
+            self._obs = None
+            if int(v["_total"]):
+                seen = [(p, v["pid_null" if p is None else f"pid_{p}"]) for p in self.pids]
+                # footer-bound superset: an absent pid observes n = 0
+                seen = [(p, st) for p, st in seen if int(st["n"])]
+                if sum(int(st["n"]) for _p, st in seen) != int(v["_total"]):
+                    raise RuntimeError(
+                        f"source_partition values outside the footer-stat bound "
+                        f"{self.pids[:1]}..{self.pids[-1:]} — WAL statistics are "
+                        f"untrustworthy; rerun without the pid bound"
+                    )
+                self._vals = (_input_stats(seen), sorted(int(b) for b in v["_buckets"]))
+        return self._vals
 
 
-def input_stats_from(vals, pids: list, epoch_id: int) -> list[dict] | None:
-    """``observe_input``'s values as per-partition input stats, or None
-    for an empty batch. Raises when the rows seen under ``pids`` do not
-    add up to the total: the footer-stat pid bound missed a partition."""
-    if int(vals["_total"]) == 0:
-        return None
-    per_pid = []
-    for p in pids:
-        st = vals["pid_null" if p is None else f"pid_{p}"]
-        if int(st["seen"]) == 0:
-            continue  # footer-bound superset: pid absent this epoch
-        per_pid.append((p, st))
-    if sum(int(st["seen"]) for _p, st in per_pid) != int(vals["_total"]):
-        raise RuntimeError(
-            f"epoch {epoch_id}: source_partition values outside the "
-            f"footer-stat bound {pids[:1]}..{pids[-1:]} — WAL statistics "
-            f"are untrustworthy; rerun without the fast path"
-        )
+def seq_span(input_stats: list[dict]) -> tuple[int, int] | None:
+    """The consumed offset range [lo, hi] of input stats, over the
+    non-NULL seqs; None when every seq is NULL."""
+    los = [s["first_seq"] for s in input_stats if s["first_seq"] is not None]
+    his = [s["last_seq"] for s in input_stats if s["last_seq"] is not None]
+    return (min(los), max(his)) if los else None
+
+
+def _pid_sql(df: DataFrame) -> str:
+    if "source_partition" in df.columns:
+        return "cast(source_partition as int)"
+    return "cast(null as int)"
+
+
+def _valid_bucket_sql(n_buckets: int) -> str:
+    # bucket only for valid rows: xxhash64(NULL) is the seed (42), so a
+    # null url would otherwise smuggle in a phantom bucket
+    return f"case when ({VALID_SQL}) then pmod(xxhash64(url), {n_buckets}) end"
+
+
+def _input_stats(per_pid) -> list[dict]:
+    """``(pid, {n, q, lo, hi})`` pairs as input-stats rows."""
     return [
         {
             "partition_id": None if p is None else int(p),
-            "rows_in": int(st["seen"]) - int(st["q"]),
+            "rows_in": int(st["n"]) - int(st["q"]),
             "rows_quarantined": int(st["q"]),
             "first_seq": None if st["lo"] is None else int(st["lo"]),
             "last_seq": None if st["hi"] is None else int(st["hi"]),
         }
         for p, st in per_pid
     ]
-
-
-def batch_input_stats(df: DataFrame, n_buckets: int) -> tuple[list[dict], list[int]]:
-    """Per-source-partition input stats and the touched buckets of a
-    batch, from ONE narrow per-pid aggregate and collect (Catalyst prunes
-    the payload out of the scan): rows seen and quarantined (``VALID_SQL``
-    fails), the seq span, and the buckets the valid rows hash to. The
-    Observation counterpart is ``observe_input``/``input_stats_from``.
-    Returns ([], []) for an empty batch."""
-    valid = F.expr(VALID_SQL)
-    sp = (
-        F.col("source_partition").cast("int")
-        if "source_partition" in df.columns
-        else F.lit(None).cast("int")
-    )
-    rows = (
-        df.groupBy(sp.alias("pid"))
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(valid, 0).otherwise(1)).alias("q"),
-            F.min("seq").alias("lo"),
-            F.max("seq").alias("hi"),
-            # bucket only for valid rows: xxhash64(NULL) is the seed (42),
-            # so a null url would otherwise smuggle in a phantom bucket
-            F.collect_set(F.when(valid, bucket_expr("url", n_buckets))).alias("buckets"),
-        )
-        .collect()
-    )
-    input_stats = [
-        {
-            "partition_id": None if r["pid"] is None else int(r["pid"]),
-            "rows_in": int(r["n"]) - int(r["q"]),
-            "rows_quarantined": int(r["q"]),
-            "first_seq": None if r["lo"] is None else int(r["lo"]),
-            "last_seq": None if r["hi"] is None else int(r["hi"]),
-        }
-        for r in rows
-    ]
-    return input_stats, sorted({int(b) for r in rows for b in r["buckets"]})
 
 
 def _lineage_exprs(pids, src_sql, pid_sql, op_sql, won_sql, late_sql, blen_sql) -> list:
@@ -558,15 +582,10 @@ class SnapLake:
         for v in range(tv + 1, head + 1):
             if os.path.isfile(self._manifest_path(v)):
                 drop |= self.referenced_paths(v)
-        # atomic HEAD swap FIRST: a crash mid-cleanup leaves only orphans
+        # durable HEAD swap FIRST: a crash mid-cleanup leaves only orphans
         # (re-removed by the next rollback/expire vacuum), never a HEAD
         # pointing at deleted metadata
-        tmp = os.path.join(self.meta_dir, f".HEAD.tmp.{os.getpid()}")
-        with open(tmp, "w") as f:
-            f.write(str(tv))
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, os.path.join(self.meta_dir, "HEAD"))
+        self._swap_head(tv)
         removed_files = 0
         for rel in sorted(drop - keep):
             ap = os.path.join(self.path, rel)
@@ -741,24 +760,28 @@ class SnapLake:
         content-fsynced at write, dir entry pending) is durable before
         anything can reference it; (2) the manifest JSON is fsynced BEFORE
         the HEAD swap (otherwise a renamed HEAD could point at a truncated
-        manifest after power loss); (3) the dir fd is fsynced AFTER the
-        rename so the HEAD entry itself is durable."""
-        dfd = os.open(self.meta_dir, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
+        manifest after power loss); (3) ``_swap_head``."""
+        self._fsync_meta_dir()
         mp = self._manifest_path(manifest["version"])
         with open(mp, "x") as f:  # 'x': a version collision is a writer race
             json.dump(manifest, f)
             f.flush()
             os.fsync(f.fileno())
+        self._swap_head(manifest["version"])
+
+    def _swap_head(self, version: int) -> None:
+        """Atomic, durable HEAD swap (commit and rollback): the new pointer
+        is fsynced before the rename, and the metadata dir after it so the
+        HEAD entry itself survives a power loss."""
         tmp = os.path.join(self.meta_dir, f".HEAD.tmp.{os.getpid()}")
         with open(tmp, "w") as f:
-            f.write(str(manifest["version"]))
+            f.write(str(version))
             f.flush()
             os.fsync(f.fileno())
         os.rename(tmp, os.path.join(self.meta_dir, "HEAD"))
+        self._fsync_meta_dir()
+
+    def _fsync_meta_dir(self) -> None:
         dfd = os.open(self.meta_dir, os.O_RDONLY)
         try:
             os.fsync(dfd)
@@ -1247,27 +1270,29 @@ class SnapLake:
         spark: SparkSession,
         batch_df: DataFrame,
         epoch_id: int,
-        input_stats: list[dict] | None = None,
-        touched_buckets: list[int] | None = None,
+        inputs: EpochInputs | None = None,
+        est_rows: int | None = None,
     ) -> dict[str, Any] | None:
         """CDC-apply one deduped micro-batch (S4/J1). Returns commit stats,
-        or None when ``epoch_id`` is already in the ledger (idempotence, J4).
+        or None when ``epoch_id`` is already in the ledger (idempotence, J4)
+        or the batch has no valid row.
 
         ``batch_df`` must be one-row-per-url (run dedup.lww_dedup first —
-        invariant 1 of SURVEY.md §4) with WAL columns (seq, op, payload...).
+        invariant 1 of SURVEY.md §4) with WAL columns (seq, op, payload...);
+        rows failing ``VALID_SQL`` are not applied.
 
-        ``input_stats`` / ``touched_buckets``: pre-dedup per-source-
-        partition rows ``{partition_id, rows_in, rows_quarantined,
-        first_seq, last_seq}`` and the touched-bucket set, from
+        ``inputs``: the PRE-dedup input accounting (``EpochInputs``) from
         apply_epoch's prepare, so ledger/lineage record the FULL consumed
-        offset range, not just LWW winners. Direct callers omit both;
-        ``batch_input_stats`` then supplies them.
+        offset range, not just LWW winners. Direct callers omit it;
+        ``EpochInputs.collect`` then supplies it. ``est_rows`` sizes the
+        adaptive fanout (None: the valid input rows when ``inputs`` holds
+        them without a job, else unknown).
 
         A merge is ``_merge_publish(_merge_stage(...))``. A MoR stage never
         reads table state, so replay stages MoR epochs ahead and publishes
         them in epoch order.
         """
-        staged = self._merge_stage(spark, batch_df, epoch_id, input_stats, touched_buckets)
+        staged = self._merge_stage(spark, batch_df, epoch_id, inputs, est_rows)
         return None if staged is None else self._merge_publish(staged)
 
     def _merge_stage(
@@ -1275,41 +1300,31 @@ class SnapLake:
         spark: SparkSession,
         batch_df: DataFrame,
         epoch_id: int,
-        input_stats: list[dict] | None = None,
-        touched_buckets: list[int] | None = None,
-        fast_obs=None,
-        fast_pids: list | None = None,
+        inputs: EpochInputs | None = None,
         est_rows: int | None = None,
-        quarantine_writer=None,
     ) -> StagedMerge | None:
         """Everything a merge does before publishing: ``_merge_plan``
         (schema evolution, conform, the per-mode result relation carrying
         the lineage Observation), ``_merge_write`` (debris check, parquet
         write, footer stats) and ``_merge_resolve`` (the write job's
-        Observations become input stats, touched buckets and lineage
-        rows). None when the epoch is already committed or has nothing to
-        commit. ``batch_df``, ``input_stats`` and ``touched_buckets`` as
-        in ``merge``.
+        Observations become touched buckets and lineage rows). Arguments
+        as in ``merge``; an observed ``inputs`` may ride ``batch_df``, its
+        Observation then filled by the write — the epoch's only job on MoR.
 
-        ``fast_obs``/``fast_pids``: the MoR replay fast path — an input
-        Observation (``observe_input``) already attached below
-        ``batch_df``, and the footer-bound pid list. The write is then the
-        epoch's ONLY job; input stats and the touched-bucket set are
-        resolved from the Observations afterwards. ``est_rows`` sizes the
-        adaptive fanout (the expected seq-window width — exact for a dense
-        WAL); ``quarantine_writer`` is invoked (still before the commit)
-        only if the observation reports quarantined rows."""
+        None ONLY when the epoch is already committed, before any job ran.
+        A batch with no valid row stages with no touched bucket, which
+        ``_merge_publish`` skips."""
         t0 = plan_t0 = time.monotonic()
         man = self.manifest()
         if self.ledger_entry(epoch_id, man) is not None:
             return None
-        if fast_obs is None and input_stats is None:
-            input_stats, touched_buckets = batch_input_stats(batch_df, man["n_buckets"])
+        if inputs is None:
+            # a direct merge: account for the batch, then apply its valid
+            # rows (apply_epoch's prepare hands over valid winners only)
+            inputs = EpochInputs.collect(batch_df, man["n_buckets"])
+            batch_df = batch_df.where(VALID_SQL)
             plan_t0 = time.monotonic()
-        plan = self._merge_plan(
-            spark, man, batch_df, epoch_id, input_stats, touched_buckets,
-            fast_pids, est_rows,
-        )
+        plan = self._merge_plan(spark, man, batch_df, epoch_id, inputs, est_rows)
         if _timing.enabled():
             # plan-construction span: per-epoch DRIVER time (serial at any
             # cluster size), the term the F.expr conversions shrink
@@ -1317,14 +1332,12 @@ class SnapLake:
         new_files = self._merge_write(plan, epoch_id)
         if new_files is None:
             return None
-        resolved = self._merge_resolve(
-            plan, epoch_id, input_stats, fast_obs, quarantine_writer, t0
-        )
-        if resolved is None:
-            # empty window, or every row quarantined: nothing to commit
+        resolved = self._merge_resolve(plan, epoch_id, t0)
+        staged = StagedMerge(plan, int(epoch_id), new_files, *resolved, t0)
+        if not staged.touched:
+            # empty batch, or every row quarantined: nothing to publish
             shutil.rmtree(plan.out_abs, ignore_errors=True)
-            return None
-        return StagedMerge(plan, int(epoch_id), new_files, *resolved, t0)
+        return staged
 
     def _merge_plan(
         self,
@@ -1332,9 +1345,7 @@ class SnapLake:
         man: dict,
         batch_df: DataFrame,
         epoch_id: int,
-        input_stats: list[dict] | None,
-        touched: list[int] | None,
-        pids: list | None,
+        inputs: EpochInputs,
         est_rows: int | None,
     ) -> _MergePlan:
         """PLAN step: widen the table schema by the batch's payload columns,
@@ -1356,8 +1367,10 @@ class SnapLake:
         ledger makes impossible) break to the TARGET row.
 
         Fanout modulus and partition width are fixed here, from metadata
-        only (input_stats rows + manifest carried rows), so the single
-        repartition IS the write layout."""
+        only (``est_rows`` or the input stats, + manifest carried rows), so
+        the single repartition IS the write layout. A COW plan reads the
+        touched buckets from ``inputs``, so they must be filled before
+        it; a MoR plan reads them only when ``inputs.ready``."""
         from pyspark.sql import Observation, Window
 
         n_buckets = man["n_buckets"]
@@ -1369,15 +1382,11 @@ class SnapLake:
         new_schema = evolve_schema(T.StructType.fromJson(man["schema"]), incoming)
         user_cols = [F.col(f"`{f.name}`") for f in new_schema.fields]
         src = conform(batch_df, new_schema, passthrough=WAL_META_COLS)
-        if touched is not None:
-            touched = sorted(touched)
-        if pids is None:
-            pids = [s["partition_id"] for s in input_stats]
-        sp_sql = (
-            "cast(source_partition as int)"
-            if "source_partition" in batch_df.columns
-            else "cast(null as int)"
-        )
+        touched = None
+        if mode == "cow" or inputs.ready:
+            input_stats, touched = inputs.get() or ([], [])
+        pids = inputs.pids
+        sp_sql = _pid_sql(batch_df)
         blen_sql = (
             "octet_length(html)" if "html" in batch_df.columns else "cast(null as int)"
         )
@@ -1392,8 +1401,8 @@ class SnapLake:
             tgt_files = self._files(man, set(touched))
             carried_rows = sum(int(f.get("rows") or 0) for f in tgt_files)
         est = est_rows
-        if est is None and input_stats is not None:
-            est = sum(int(st["rows_in"]) for st in input_stats)
+        if est is None and touched is not None:
+            est = sum(st["rows_in"] for st in input_stats)
         if est is not None:
             est += carried_rows
         fan = _Fanout.plan(
@@ -1403,8 +1412,6 @@ class SnapLake:
 
         if mode == "mor":
             exprs = _lineage_exprs(pids, "true", sp_sql, "op", "true", None, blen_sql)
-            if touched is None:
-                exprs.append(F.expr(f"collect_set({fan.bucket_sql}) as _touched"))
             out = fan.distribute(
                 src.observe(obs, *exprs).select(
                     *user_cols,
@@ -1459,7 +1466,7 @@ class SnapLake:
         commit_id = "c" + _stable_hash(f"{man['table_uuid']}:{epoch_id}")
         out_rel = os.path.join("data", commit_id)
         return _MergePlan(
-            man=man, mode=mode, incoming=incoming, out=out, obs=obs, pids=pids, touched=touched,
+            man=man, mode=mode, incoming=incoming, out=out, obs=obs, inputs=inputs,
             fan=fan, commit_id=commit_id, out_rel=out_rel,
             out_abs=os.path.join(self.path, out_rel),
         )
@@ -1537,39 +1544,21 @@ class SnapLake:
                 f["kind"] = kind
         return new_files
 
-    def _merge_resolve(
-        self,
-        plan: _MergePlan,
-        epoch_id: int,
-        input_stats: list[dict] | None,
-        fast_obs,
-        quarantine_writer,
-        t0: float,
-    ) -> tuple | None:
-        """RESOLVE step: the single lineage route. The write job's
-        Observations (complete: the write action has finished, so reading
-        them costs no job) become the input stats and touched buckets (MoR
-        fast path) and the per-partition lineage rows. Returns (touched,
-        lineage_rows, first_seq, last_seq), or None when there is nothing
-        to commit."""
-        if fast_obs is not None:
-            input_stats = input_stats_from(fast_obs.get, plan.pids, epoch_id)
-            if input_stats is None:
-                return None  # empty window
-            if quarantine_writer is not None and any(
-                s["rows_quarantined"] for s in input_stats
-            ):
-                quarantine_writer()  # rare path; still before the commit
+    def _merge_resolve(self, plan: _MergePlan, epoch_id: int, t0: float) -> tuple:
+        """RESOLVE step: the single lineage route. The write job has run,
+        so the input accounting and the lineage Observation are complete
+        (reading them costs no job); they become the touched buckets and
+        the per-partition lineage rows. Returns (touched, lineage_rows,
+        first_seq, last_seq); no touched bucket when there is nothing to
+        commit."""
+        input_stats, touched = plan.inputs.get() or ([], [])
+        if not touched:
+            return [], [], None, None
         vals = plan.obs.get
-        touched = plan.touched
-        if touched is None:
-            touched = sorted(int(b) for b in (vals["_touched"] or []))
-            if not touched:
-                return None  # every row was quarantined
         # a pid with no source row is omitted (the footer-bound pid list is
         # a superset), not kept as an all-zero observation row
         by_pid = {}
-        for p in plan.pids:
+        for p in plan.inputs.pids:
             st = vals["pid_null" if p is None else f"pid_{p}"]
             if st["up"] or st["del"] or st["late"] or st["b"]:
                 by_pid[p] = st
@@ -1583,24 +1572,24 @@ class SnapLake:
                 {
                     "epoch_id": int(epoch_id),
                     "partition_id": ins["partition_id"],
-                    "first_seq": int(ins["first_seq"]),
-                    "last_seq": int(ins["last_seq"]),
+                    # NULL when the partition held only NULL seqs
+                    "first_seq": ins["first_seq"],
+                    "last_seq": ins["last_seq"],
                     "snapshot_id": None,  # set by the publish step
-                    "rows_in": int(ins["rows_in"]),
+                    "rows_in": ins["rows_in"],
                     "rows_upserted": 0 if r is None else int(r["up"]),
                     "rows_deleted": 0 if r is None else int(r["del"]),
                     "rows_late_ignored": (
                         0 if r is None else None if r["late"] is None else int(r["late"])
                     ),
-                    "rows_quarantined": int(ins.get("rows_quarantined", 0)),
+                    "rows_quarantined": ins["rows_quarantined"],
                     # bytes applied: the source rows' html payload
                     "bytes": None if r is None else int(r["b"]),
                     "apply_latency_ms": latency_ms,
                 }
             )
-        lo = min(s["first_seq"] for s in input_stats) if input_stats else None
-        hi = max(s["last_seq"] for s in input_stats) if input_stats else None
-        return touched, lineage_rows, lo, hi
+        # a touched bucket means a valid row, so the span is not None
+        return (touched, lineage_rows, *seq_span(input_stats))
 
     def _merge_publish(self, staged: StagedMerge) -> dict[str, Any] | None:
         """PUBLISH step: metadata commit with optimistic-concurrency retry
@@ -1615,6 +1604,8 @@ class SnapLake:
         target version. Data files never move — they are keyed by
         commit_id, and only a published manifest references them."""
         plan, epoch_id, touched = staged.plan, staged.epoch_id, staged.touched
+        if not touched:
+            return None  # no valid row: nothing to commit
         commit_id = plan.commit_id
         lo, hi = staged.first_seq, staged.last_seq
         max_races = 5

@@ -259,11 +259,6 @@ def sample_frames(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(fn, FRAME_SCHEMA)
 
 
-def featurize_documents(docs: DataFrame) -> DataFrame:
-    """documents -> REAL media blobs (BMP/WAV) -> REAL-decode features."""
-    return media_features(synth_media_blobs(docs))
-
-
 # ---------------------------------------------------------------------------
 # Video: REAL RIFF/AVI container demux (closes the round-4 verdict's last
 # declared stub — "no demuxer exists in this container"). AVI is the same

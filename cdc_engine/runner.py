@@ -27,7 +27,13 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from cdc_engine.apply import apply_epoch, commit_epoch, discard_epoch, prepare_epoch
+from cdc_engine.apply import (
+    _verify_ledger_hit,
+    apply_epoch,
+    commit_epoch,
+    discard_epoch,
+    prepare_epoch,
+)
 from cdc_engine.config import CdcConfig
 from cdc_engine.timing import phase
 from cdc_engine.lake import SnapLake
@@ -73,25 +79,14 @@ def replay(
 
     committed = lake.committed_epochs()
     # footer-stat pid bound for the whole WAL (superset of any epoch's):
-    # enables prepare_epoch's one-job routes; None disables them
+    # selects prepare_epoch's Observation route; None, the stats job
     pid_bounds = partition_pid_bounds(wal_dir, 0, max_seq)
     todo: list[int] = []
     for k in range(n_epochs):
         if k in committed:
-            # same guard as apply_epoch's, applied to the pre-scan skip:
-            # a committed epoch id must hold exactly this replay's window
-            ent = committed[k]
-            e_lo, e_hi = ent.get("first_seq"), ent.get("last_seq")
-            if e_lo is not None and (e_lo < k * e or e_hi >= (k + 1) * e):
-                from cdc_engine.apply import LedgerSeqMismatch
-
-                raise LedgerSeqMismatch(
-                    f"epoch {k} is committed with seq range [{e_lo}, {e_hi}] "
-                    f"but this replay cuts epochs every {e} events (window "
-                    f"[{k * e}, {(k + 1) * e})) — refusing to skip; replay "
-                    f"into a fresh lake or restore the original "
-                    f"events_per_epoch."
-                )
+            # apply_epoch's guard, applied to the pre-scan skip: a committed
+            # epoch id must hold exactly this replay's window
+            _verify_ledger_hit(committed[k], k, None, (k * e, (k + 1) * e))
             continue
         todo.append(k)
         if max_epochs is not None and len(todo) >= max_epochs:
@@ -166,10 +161,10 @@ def ingest_stream(
         # micro-batch is an explicit file list (recorded in the streaming
         # checkpoint's source log during planning), so its seq window and
         # pid universe come from parquet footers with NO Spark job — the
-        # same inputs the replay path computes a priori. A MoR epoch then
-        # takes the one-job fast path (stats/lineage/touched buckets ride
-        # the write job's Observations) instead of paying the pre-commit
-        # stats barrier per trigger; ledger hits are verified by range
+        # same inputs the replay path computes a priori. The epoch then
+        # takes the Observation route for its input accounting (a MoR
+        # epoch is one job) instead of paying the pre-commit stats
+        # barrier per trigger; ledger hits are verified by range
         # EQUALITY (window + exact batch range), preserving the slow
         # path's contents-were-applied guarantee. A missing log or
         # unreadable footers degrade to the stats-job path, never error.

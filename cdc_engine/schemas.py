@@ -64,8 +64,3 @@ WAL_SCHEMA_LATEST = WAL_SCHEMA_V2
 # internal columns SnapLake stores alongside user columns
 INTERNAL_SEQ = "_seq"
 INTERNAL_DELETED = "_deleted"
-
-
-def pages_schema_from_wal(wal_schema: T.StructType) -> T.StructType:
-    """Project a WAL schema down to the pages-table schema (drop metadata)."""
-    return T.StructType([f for f in wal_schema.fields if f.name not in WAL_META_COLS])

@@ -213,13 +213,13 @@ def _footer_minmax(md, col_name: str) -> tuple[int, int] | None:
 def partition_pid_bounds(wal_dir: str, lo: int, hi: int) -> tuple[int, int] | None:
     """Driver-side (min, max) bound on ``source_partition`` values inside
     the seq window [lo, hi), read from parquet FOOTER statistics only — no
-    Spark job. Used by the MoR replay fast path to unroll per-partition
-    lineage aggregates into the write job's Observation without a
-    pids-discovery job; the bound is a conservative SUPERSET (absent pids
-    produce all-zero rows the lineage builder drops). Returns None when
-    stats are missing, any overlapping row group holds (or cannot rule
-    out) NULL pids, or the bound is too wide to unroll — callers then fall
-    back to the stats-job path."""
+    Spark job. It selects apply's Observation route for the input
+    accounting (``lake.EpochInputs.observe``), which unrolls per-partition
+    aggregates without a pids-discovery job; the bound is a conservative
+    SUPERSET (absent pids produce all-zero rows that are dropped). Returns
+    None when stats are missing, any overlapping row group holds (or
+    cannot rule out) NULL pids, or the bound is too wide to unroll —
+    callers then fall back to the stats-job route."""
     import pyarrow.parquet as pq
 
     mn = mx = None
@@ -280,13 +280,13 @@ def footer_epoch_bounds(
     ``partition_pid_bounds``: a file-source micro-batch IS a file list
     (``batch_df.inputFiles()``), so its seq window and pid universe come
     straight from parquet footers with no Spark job, which is what lets a
-    *streaming* MoR epoch take the same one-job fast path as replay
+    *streaming* epoch take the same Observation route as replay
     (round-4 verdict task 2 — the pre-commit stats barrier was the largest
     remaining serial term on the tail-mode path).
 
     Returns (None, None) when any file's seq stats are unusable (the
     caller then runs the stats-job path); pid bounds independently degrade
-    to None (fast path off, exact-window ledger check still available)."""
+    to None (stats-job route, exact-window ledger check still available)."""
     import pyarrow.parquet as pq
     from urllib.parse import urlparse
 

@@ -49,10 +49,8 @@ def clustered_lake(spark, tmp_path_factory):
     )
     lake.merge(spark, _batch(spark, 64, epoch=0), epoch_id=0)
     lake.merge(spark, _batch(spark, 64, epoch=1), epoch_id=1)
-    r = lake.compact(
-        spark, list(range(4)), cluster_by=["lang"], cluster_files_per_bucket=4
-    )
-    assert r["summary"]["cluster_by"] == ["lang"] if "summary" in r else True
+    lake.compact(spark, list(range(4)), cluster_by=["lang"], cluster_files_per_bucket=4)
+    assert lake.manifest()["summary"]["cluster_by"] == ["lang"]
     return lake
 
 

@@ -246,3 +246,33 @@ def test_compact_recovers_from_manifest_debris(spark, tmp_path, rewrite):
     assert lake.state_hash(spark) == (n0, h0)
     r = lake.fsck(deep=True)
     assert r["ok"] and r["errors"] == [], r
+
+
+def test_rollback_head_swap_is_durable(spark, tmp_path, monkeypatch):
+    """Rollback deletes the abandoned manifests after its HEAD swap, so the
+    swap must be durable first: the metadata dir is fsynced after the
+    HEAD rename, as a commit's swap does — otherwise a power loss could
+    leave HEAD naming a deleted manifest."""
+    import stat
+
+    lake = SnapLake.create(str(tmp_path / "l"), PAGES_SCHEMA_V1, n_buckets=4, mode="mor")
+    for e, rows in enumerate(_epochs()[:3]):
+        lake.merge(spark, _batch(spark, rows), epoch_id=e)
+    events = []
+    real_rename, real_fsync = os.rename, os.fsync
+
+    def rename(src, dst):
+        events.append(("rename", os.path.basename(dst)))
+        return real_rename(src, dst)
+
+    def fsync(fd):
+        events.append(("fsync_dir" if stat.S_ISDIR(os.fstat(fd).st_mode) else "fsync", None))
+        return real_fsync(fd)
+
+    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(os, "fsync", fsync)
+    lake.rollback(1)
+    monkeypatch.undo()
+    swap = events.index(("rename", "HEAD"))
+    assert ("fsync_dir", None) in events[swap + 1:], events
+    assert lake.head_version() == 1

@@ -1,8 +1,6 @@
-"""End-to-end forms of the ledger-identity advisory: restarting ingest
+"""End-to-end form of the ledger-identity advisory: restarting ingest
 over an already-ingested WAL with a FRESH checkpoint (epoch ids renumber)
-must fail loudly instead of silently skipping batches, and the
-applyInPandasWithState gate's keyed state must survive a query RESTART
-from its checkpoint (not just across micro-batches)."""
+must fail loudly instead of silently skipping batches."""
 
 from __future__ import annotations
 
@@ -16,9 +14,7 @@ import pytest
 
 from cdc_engine import CdcConfig, SnapLake, ingest_stream
 from cdc_engine.apply import LedgerSeqMismatch
-from cdc_engine.schemas import PAGES_SCHEMA_V1, WAL_SCHEMA_V1
-from cdc_engine.source import open_stream
-from cdc_engine.streaming_state import lww_gate
+from cdc_engine.schemas import PAGES_SCHEMA_V1
 
 
 def _write_segment(d: str, first_seq: int, rows: list[dict]) -> None:
@@ -82,38 +78,3 @@ def test_fresh_checkpoint_over_ingested_lake_fails_loudly(spark, tmp_path):
     ingest_stream(spark, lake, wal, str(tmp_path / "ckpt1"), cfg=cfg,
                   max_files_per_trigger=1)
     assert sorted(lake.committed_epochs()) == [0, 1]
-
-
-def test_lww_gate_state_survives_query_restart(spark, tmp_path):
-    wal = str(tmp_path / "wal")
-    ckpt = str(tmp_path / "ckpt")
-    _write_segment(wal, 0, [_row(0, "https://a", 10, "a0")])
-
-    collected: list[tuple] = []
-
-    def run_once():
-        stream = open_stream(spark, wal, schema=WAL_SCHEMA_V1, max_files_per_trigger=1)
-        q = (
-            lww_gate(stream)
-            .writeStream.foreachBatch(
-                lambda df, eid: collected.extend(
-                    (r["url"], r["text"]) for r in df.collect()
-                )
-            )
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once()
-    assert collected == [("https://a", "a0")]
-
-    # STOP the query; append a STALE re-delivery for a (ts=3 < 10) plus a
-    # fresh url; restart from the same checkpoint — the gate's state must
-    # come back from the state store and still suppress the stale row
-    _write_segment(wal, 1, [_row(1, "https://a", 3, "a-stale"), _row(2, "https://e", 4, "e0")])
-    run_once()
-    assert ("https://a", "a-stale") not in collected
-    assert ("https://e", "e0") in collected
