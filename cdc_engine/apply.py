@@ -160,14 +160,16 @@ def prepare_epoch(
     rows, touched buckets) takes one of two routes, chosen by the pid
     bound alone: with ``pid_bounds`` and no ledger entry, an Observation
     on the raw batch that the epoch's first job fills; otherwise the
-    stats job, one narrow collect before anything else. Both then share
-    the body: valid-row filter and LWW dedup. The table mode decides the
-    last step. MoR: everything a merge does before publishing — plan,
-    delta write, lineage resolve (a lake ``StagedMerge``); a delta never
-    reads table state. COW: the persisted winners cache, materialized by
-    one ``count()`` (a ``PreparedEpoch``); the merge reads the table the
-    previous commit leaves, so it belongs to the commit. Quarantined rows
-    are persisted here, before the commit."""
+    stats job, one narrow collect before anything else, which also ends
+    an empty or all-quarantined epoch early. Both then share the body:
+    valid-row filter and LWW dedup. The table mode decides the last step.
+    MoR: everything a merge does before publishing — plan, delta write,
+    lineage resolve (a lake ``StagedMerge``); a delta never reads table
+    state. COW: the persisted winners cache (a ``PreparedEpoch``), on the
+    Observation route materialized by one ``count()`` that fills the
+    Observation; the merge reads the table the previous commit leaves, so
+    it belongs to the commit. Quarantined rows are persisted here, before
+    the commit."""
     cfg = cfg or CdcConfig()
     if quarantine_dir is None:
         quarantine_dir = cfg.quarantine_dir
@@ -180,7 +182,8 @@ def prepare_epoch(
         return None
 
     df = apply_mapping(batch_df, cfg.column_mapping)
-    if entry is None and pid_bounds is not None:
+    observing = entry is None and pid_bounds is not None
+    if observing:
         observed, inputs = EpochInputs.observe(
             df, f"inputs_e{epoch_id}", pid_bounds, man["n_buckets"]
         )
@@ -196,6 +199,9 @@ def prepare_epoch(
             if span is not None:
                 _verify_ledger_hit(entry, epoch_id, span, None)
             return None
+        _write_quarantine(df, inputs, quarantine_dir, epoch_id)
+        if not got[1]:
+            return None  # every row was quarantined; nothing to commit
         observed = df
 
     # W1: one row per url — MUST precede a COW merge (several source rows
@@ -214,18 +220,22 @@ def prepare_epoch(
             staged = lake._merge_stage(spark, winners, epoch_id, inputs, est_rows)
         if staged is None:
             return None  # committed meanwhile, before the write: ``inputs`` never filled
-        _write_quarantine(df, inputs, quarantine_dir, epoch_id)
+        if observing:
+            _write_quarantine(df, inputs, quarantine_dir, epoch_id)
         return staged if staged.touched else None
     # cache the winners: the merge's write job reads straight from the
     # cache (otherwise the dedup shuffle re-runs per job). A cache scan
     # materializes whole partitions regardless of column pruning.
     winners = winners.persist()
-    with phase("prepare_one_job"):
-        winners.count()
-    _write_quarantine(df, inputs, quarantine_dir, epoch_id)
-    if not (inputs.get() or ([], []))[1]:
-        winners.unpersist()
-        return None  # empty, or every row was quarantined
+    if observing:
+        # the one job fills the input Observation the merge plan reads; a
+        # collected route leaves the cache to the merge's write
+        with phase("prepare_one_job"):
+            winners.count()
+        _write_quarantine(df, inputs, quarantine_dir, epoch_id)
+        if not (inputs.get() or ([], []))[1]:
+            winners.unpersist()
+            return None  # empty, or every row was quarantined
     return PreparedEpoch(epoch_id, winners, inputs)
 
 

@@ -1271,7 +1271,6 @@ class SnapLake:
         batch_df: DataFrame,
         epoch_id: int,
         inputs: EpochInputs | None = None,
-        est_rows: int | None = None,
     ) -> dict[str, Any] | None:
         """CDC-apply one deduped micro-batch (S4/J1). Returns commit stats,
         or None when ``epoch_id`` is already in the ledger (idempotence, J4)
@@ -1284,15 +1283,13 @@ class SnapLake:
         ``inputs``: the PRE-dedup input accounting (``EpochInputs``) from
         apply_epoch's prepare, so ledger/lineage record the FULL consumed
         offset range, not just LWW winners. Direct callers omit it;
-        ``EpochInputs.collect`` then supplies it. ``est_rows`` sizes the
-        adaptive fanout (None: the valid input rows when ``inputs`` holds
-        them without a job, else unknown).
+        ``EpochInputs.collect`` then supplies it.
 
         A merge is ``_merge_publish(_merge_stage(...))``. A MoR stage never
         reads table state, so replay stages MoR epochs ahead and publishes
         them in epoch order.
         """
-        staged = self._merge_stage(spark, batch_df, epoch_id, inputs, est_rows)
+        staged = self._merge_stage(spark, batch_df, epoch_id, inputs)
         return None if staged is None else self._merge_publish(staged)
 
     def _merge_stage(
@@ -1310,6 +1307,8 @@ class SnapLake:
         Observations become touched buckets and lineage rows). Arguments
         as in ``merge``; an observed ``inputs`` may ride ``batch_df``, its
         Observation then filled by the write — the epoch's only job on MoR.
+        ``est_rows`` sizes the adaptive fanout (None: the valid input rows
+        when ``inputs`` holds them without a job, else unknown).
 
         None ONLY when the epoch is already committed, before any job ran.
         A batch with no valid row stages with no touched bucket, which

@@ -7,9 +7,11 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_engine import CdcConfig, SnapLake, apply_epoch, replay
+from cdc_engine.apply import commit_epoch, prepare_epoch
 from cdc_engine.salt import hot_domains
 from cdc_engine.schemas import PAGES_SCHEMA_V1
 from cdc_engine.source import read_seq_range
@@ -42,6 +44,35 @@ def test_quarantine_null_keys(spark, tmp_path):
     assert lake.scan(spark).count() == 1  # only the valid row landed
     quarantined = spark.read.parquet(os.path.join(qdir, "epoch=0"))
     assert quarantined.count() == 2
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_stats_route_prepare_runs_only_the_stats_job(spark, tmp_path, monkeypatch, mode):
+    """Without a pid bound the prepare counts its input with the stats job
+    alone: an all-quarantined epoch stops there, after persisting its
+    rows, and a COW epoch leaves its winners cache to the merge's write."""
+    ts = dt.datetime(2024, 1, 1)
+    lake = _mk_lake(tmp_path, mode=mode)
+    qdir = str(tmp_path / "quarantine")
+    bad = _batch(spark, [
+        (0, "insert", None, ts, wrap_html("a"), "a", "en", 0),
+        (1, "insert", None, ts, wrap_html("b"), "b", "en", 1),
+    ])
+    good = _batch(spark, [(2, "insert", "https://a/x", ts, wrap_html("c"), "c", "en", 0)])
+
+    def no_job(*_a, **_k):
+        pytest.fail("the stats-job prepare ran more than its stats job")
+
+    monkeypatch.setattr(type(bad), "count", no_job)
+    monkeypatch.setattr(SnapLake, "_merge_stage", no_job)
+    assert prepare_epoch(spark, lake, bad, 0, quarantine_dir=qdir) is None
+    if mode == "cow":
+        prep = prepare_epoch(spark, lake, good, 1)
+    monkeypatch.undo()
+    assert spark.read.parquet(os.path.join(qdir, "epoch=0")).count() == 2
+    if mode == "cow":
+        assert commit_epoch(spark, lake, prep) is not None
+        assert [r["url"] for r in lake.scan(spark).collect()] == ["https://a/x"]
 
 
 def test_column_mapping_normalizer(spark, tmp_path):
