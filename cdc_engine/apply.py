@@ -269,9 +269,11 @@ def _write_quarantine(
 ) -> None:
     """Persist the batch's invalid rows when ``inputs`` counted any (rare
     path; always before the commit). Without a quarantine dir they are
-    only counted in lineage."""
+    only counted in lineage. The epoch's dir is overwritten: an epoch
+    that never commits (every row quarantined, or a crash before its
+    commit) writes it again on every re-apply."""
     got = inputs.get()
     if quarantine_dir is not None and got and any(s["rows_quarantined"] for s in got[0]):
-        df.where(~F.expr(VALID_SQL)).write.mode("append").parquet(
+        df.where(~F.expr(VALID_SQL)).write.mode("overwrite").parquet(
             os.path.join(quarantine_dir, f"epoch={epoch_id}")
         )

@@ -15,11 +15,11 @@ class CdcConfig:
     with a row_number window over (warc_ts, seq); a MoR epoch then appends
     the winners as a delta, and a COW epoch rewrites its touched buckets
     with a one-exchange union+window merge. Replay has one loop: it
-    stages epochs ahead on a small pool (two for MoR, one for COW —
-    ``runner.STAGE_WIDTH``) and commits them in epoch order, running
-    ``maybe_compact`` after every commit. All defaults are sized for the sandbox (local[32],
-    sf<=0.1 fixtures); on a real cluster scale ``n_buckets`` with executor
-    count (see BENCH/BASELINE.md).
+    stages epochs ahead on a pool (one MoR epoch per core, one COW
+    epoch — ``runner.replay``) and commits them in epoch order, running
+    ``maybe_compact`` after every commit. The defaults are sized for a
+    single host (4 to 32 cores, sf<=0.1 fixtures); on a real cluster
+    scale ``n_buckets`` with executor count (see BENCH/BASELINE.md).
     """
 
     # the only LWW dedup strategy (dedup.lww_dedup); a constant, not a field

@@ -13,9 +13,10 @@ Two drivers around the SAME prepare/commit split of apply_epoch:
   ranges (epoch k = seqs [k*E, (k+1)*E)), NOT on wall time or file
   arrival, and committed in epoch order, so the ledger/lineage content is
   byte-reproducible too (SURVEY.md §3.2). Resumes from whatever the
-  ledger already holds. A small pool runs each epoch's state-independent
-  stage (``prepare_epoch``) ahead; the calling thread commits the staged
-  epochs in order (``commit_epoch``), each followed by ``maybe_compact``.
+  ledger already holds. A pool runs each epoch's state-independent stage
+  (``prepare_epoch``) ahead — one MoR epoch per core, one COW epoch — and
+  the calling thread commits the staged epochs in order
+  (``commit_epoch``), each followed by ``maybe_compact``.
 """
 
 from __future__ import annotations
@@ -46,12 +47,6 @@ from cdc_engine.source import (
     trigger_files,
 )
 
-# replay's stage pool width per table mode: a MoR stage (plan, delta
-# write, resolve) never reads table state, so two run ahead of the
-# commits; a COW stage (WAL scan, LWW dedup, winners cache) runs one
-# epoch ahead of the merge that reads the previous commit's state
-STAGE_WIDTH = {"mor": 2, "cow": 1}
-
 
 def replay(
     spark: SparkSession,
@@ -62,7 +57,11 @@ def replay(
 ) -> list[dict[str, Any]]:
     """Apply all (or the next ``max_epochs``) uncommitted epochs in seq
     order. Safe to call repeatedly / after a crash: committed epochs are
-    skipped via the ledger (S2 + J4)."""
+    skipped via the ledger (S2 + J4). Epochs are staged ahead (a MoR
+    lake: one per core, ``defaultParallelism``; COW: one), each on its own
+    worker thread whose Spark jobs carry the description
+    ``cdc epoch=<k> stage``; commits run on the calling thread, in epoch
+    order."""
     cfg = cfg or CdcConfig()
     segs = list_segments(wal_dir)
     if not segs:
@@ -92,7 +91,12 @@ def replay(
         if max_epochs is not None and len(todo) >= max_epochs:
             break
 
+    sc = spark.sparkContext
+
     def _stage(k: int):
+        # a local property of this worker thread only: the calling
+        # thread's job group and description are left to the caller
+        sc.setJobDescription(f"cdc epoch={k} stage")
         batch = read_seq_range(spark, wal_dir, k * e, (k + 1) * e)
         # expected_seq_range: epoch k OWNS this window by definition, so a
         # ledger hit under a different batching is detected without Spark work
@@ -103,11 +107,18 @@ def replay(
                 pid_bounds=pid_bounds,
             )
 
+    # The pool width W: a MoR stage (plan, delta write, resolve) never
+    # reads table state, so one epoch per core runs ahead of the commits —
+    # an epoch whose WAL range is one parquet row group starts as a single
+    # task, and a narrower pool leaves cores idle while later epochs wait
+    # for a worker. A COW stage (WAL scan, LWW dedup, winners cache) runs
+    # one epoch ahead of the merge that reads the previous commit's
+    # state, and each staged COW epoch holds a cache.
     # Epoch k+W is submitted before epoch k commits, so no worker idles
     # during a publish. Commits and compaction share the calling thread,
     # so compaction never races a publication; an in-flight MoR stage
     # writes only its own commit dir.
-    width = STAGE_WIDTH[lake.manifest().get("mode", "cow")]
+    width = sc.defaultParallelism if lake.manifest().get("mode", "cow") == "mor" else 1
     pending = iter(todo)
     results = []
     with ThreadPoolExecutor(max_workers=width) as pool:

@@ -17,6 +17,8 @@ DOCS_SF0001 = os.path.join(TESTDATA, "sf0.001", "documents.parquet")
 def spark():
     from pyspark.sql import SparkSession
 
+    from cdc_engine.session import LISTING_THRESHOLD
+
     s = (
         SparkSession.builder.master("local[8]")
         .appName("cdc_engine-tests")
@@ -27,6 +29,7 @@ def spark():
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "8g")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(LISTING_THRESHOLD))
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

@@ -75,6 +75,25 @@ def test_stats_route_prepare_runs_only_the_stats_job(spark, tmp_path, monkeypatc
         assert [r["url"] for r in lake.scan(spark).collect()] == ["https://a/x"]
 
 
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("pid_bounds", [None, (0, 2)], ids=["stats_job", "observe"])
+def test_quarantine_reapply_keeps_one_copy(spark, tmp_path, mode, pid_bounds):
+    """An all-quarantined epoch never commits, so a re-apply writes its
+    quarantine again: the epoch's quarantine holds one copy of its rows
+    however often it is applied, on either input-accounting route."""
+    ts = dt.datetime(2024, 1, 1)
+    lake = _mk_lake(tmp_path, mode=mode)
+    qdir = str(tmp_path / "quarantine")
+    rows = [(i, "insert", None, ts, wrap_html(f"b{i}"), f"b{i}", "en", i) for i in range(3)]
+    for _ in range(2):
+        assert apply_epoch(
+            spark, lake, _batch(spark, rows), epoch_id=0,
+            quarantine_dir=qdir, pid_bounds=pid_bounds,
+        ) is None
+    assert spark.read.parquet(os.path.join(qdir, "epoch=0")).count() == 3
+    assert lake.committed_epochs() == {}
+
+
 def test_column_mapping_normalizer(spark, tmp_path):
     """A WAL with legacy column names flows through cfg.column_mapping."""
     ts = dt.datetime(2024, 1, 1)

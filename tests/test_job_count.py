@@ -94,3 +94,29 @@ def test_direct_merge_is_one_collect(spark, tmp_path, monkeypatch, mode):
         for r in lake.manifest()["lineage"]
     ]
     assert got == [(0, 1, 1, 0, late, 3, 3), (1, 2, 1, 1, late, 4, 5)]
+
+
+def test_scan_of_many_files_lists_them_without_a_job(spark, tmp_path):
+    """A scan reads the explicit file list its manifest names. Past
+    Spark's default parallel-listing threshold (32 paths) that list would
+    be stat-ed by a Spark job before any data is read; the session's
+    ``LISTING_THRESHOLD`` keeps it on the driver, so building the scan
+    submits no job."""
+    lake = SnapLake.create(str(tmp_path / "lake"), PAGES_SCHEMA_V1, n_buckets=16, mode="mor")
+    for epoch in range(3):
+        op = "insert" if epoch == 0 else "update"
+        rows = [(epoch * 64 + i, op, f"u/{i}", i % 4) for i in range(64)]
+        assert lake.merge(spark, _wal_batch(spark, rows), epoch_id=epoch) is not None
+    assert len(lake._files(lake.manifest())) >= 33
+
+    sc = spark.sparkContext
+    group = "scan-builds-no-job"
+    sc.setJobGroup(group, "build lake.scan")
+    try:
+        df = lake.scan(spark)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
+    assert df.count() == 64

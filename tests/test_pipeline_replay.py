@@ -1,17 +1,22 @@
 """Staged replay is result-identical to sequential apply.
 
-`runner.replay` stages epochs ahead on a small pool (a MoR stage writes
-the delta, a COW stage prefetches the LWW winners) and commits them in
-epoch order on the calling thread. These tests pin it against a
-test-local width-1 reference — ``apply_epoch`` per epoch with replay's
-``expected_seq_range``/``pid_bounds``, then ``maybe_compact`` — in both
-table modes: state hash, ledger seq ranges, lineage multiset and the
-walgen oracle, plus the commit order itself.
+`runner.replay` stages epochs ahead on a pool (a MoR stage writes the
+delta, one epoch per core; a COW stage prefetches the LWW winners, one
+epoch ahead) and commits them in epoch order on the calling thread.
+These tests pin it against a test-local width-1 reference —
+``apply_epoch`` per epoch with replay's ``expected_seq_range``/
+``pid_bounds``, then ``maybe_compact`` — in both table modes: state
+hash, ledger seq ranges, lineage multiset and the walgen oracle, plus
+the commit order itself and the stage pool's width.
 """
 
 from __future__ import annotations
 
-from cdc_engine import CdcConfig, SnapLake, apply_epoch, replay
+import threading
+
+import pytest
+
+from cdc_engine import CdcConfig, SnapLake, apply_epoch, replay, runner
 from cdc_engine.schemas import PAGES_SCHEMA_V1
 from cdc_engine.source import partition_pid_bounds, read_seq_range
 from cdc_engine.verify import assert_matches_oracle
@@ -98,4 +103,47 @@ def test_pipelined_resume_after_partial(spark, wal_basic, tmp_path):
     assert sorted(lake.committed_epochs()) == [0, 1]
     replay(spark, lake, wal_dir, _cfg(wcfg))
     ref = _sequential(spark, tmp_path, wal_dir, wcfg, "mor")
+    _assert_same_as_sequential(spark, lake, ref, oracle)
+
+
+@pytest.mark.parametrize("mode,width", [("mor", 4), ("cow", 1)])
+def test_stage_width(spark, wal_basic, tmp_path, monkeypatch, mode, width):
+    """A MoR replay stages one epoch per core (all 4 of wal_basic's epochs
+    under local[8]), a COW replay one at a time; each stage's jobs carry
+    its epoch's description on the worker thread alone. Every stage is
+    held until 4 are in flight (or a deadline passes), so the peak shows
+    the pool width rather than how the stages happened to overlap."""
+    wal_dir, wcfg, oracle = wal_basic
+    sc = spark.sparkContext
+    real = runner.prepare_epoch
+    cv = threading.Condition()
+    seen = {"now": 0, "peak": 0, "desc": {}}
+
+    def counting(spark_, lake_, batch, k, *a, **kw):
+        with cv:
+            seen["now"] += 1
+            seen["peak"] = max(seen["peak"], seen["now"])
+            seen["desc"][k] = sc.getLocalProperty("spark.job.description")
+            cv.notify_all()
+            cv.wait_for(lambda: seen["now"] >= 4, timeout=30 if mode == "mor" else 0.5)
+        try:
+            return real(spark_, lake_, batch, k, *a, **kw)
+        finally:
+            with cv:
+                seen["now"] -= 1
+
+    monkeypatch.setattr(runner, "prepare_epoch", counting)
+    lake = _lake(tmp_path, f"lake_width_{mode}", mode)
+    sc.setJobDescription("caller")
+    try:
+        replay(spark, lake, wal_dir, _cfg(wcfg))
+        caller = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+        monkeypatch.undo()
+
+    assert seen["peak"] == width
+    assert seen["desc"] == {k: f"cdc epoch={k} stage" for k in range(4)}
+    assert caller == "caller"
+    ref = _sequential(spark, tmp_path, wal_dir, wcfg, mode)
     _assert_same_as_sequential(spark, lake, ref, oracle)
